@@ -12,7 +12,7 @@ SPARK_GRAFT_SCALING=1 (adds a second, smaller-parallelism run).
 
 Env knobs:
   SPARK_GRAFT_SF_DIR   parquet dir for query timings (default testdata/sf0.1)
-  SPARK_GRAFT_CPUS     cores for the main run (default 32)
+  SPARK_GRAFT_CPUS     cores for the main run (default: the usable CPUs)
   SPARK_GRAFT_IMAGES   synthetic image count (default 20000)
   SPARK_GRAFT_SCALING  "1" -> also run local[cpus/4] and report efficiency
 """
@@ -26,8 +26,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from gdal_spark.session import default_cores  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = default_cores()
 N_IMAGES = int(os.environ.get("SPARK_GRAFT_IMAGES", "20000"))
 DO_SCALING = os.environ.get("SPARK_GRAFT_SCALING", "1") == "1"
 CACHE_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".data")
@@ -88,8 +90,8 @@ def run_pipeline(spark, images_path: str) -> tuple[float, int]:
 
 
 def run_pyramid(spark, images_path: str) -> float:
-    """Full pyramid (base + overview reduction to z8) — reported separately;
-    the level loop is the shuffle-bearing part of the workload."""
+    """Full pyramid (base + overview reduction to z8, map-only) — reported
+    separately."""
     from pyspark.sql import functions as F
 
     from gdal_spark.operators.tiling import build_tile_pyramid
@@ -97,9 +99,9 @@ def run_pyramid(spark, images_path: str) -> float:
     imgs = spark.read.parquet(images_path)
     spark.catalog.clearCache()
     t0 = time.time()
-    # codec="internal": this consumer aggregates checksums only — matches
-    # the tile_pyramid driver query; sink formats belong to the write paths
-    build_tile_pyramid(imgs, tminz=8, codec="internal").agg(
+    # codec=None: this consumer aggregates checksums only — matches the
+    # tile_pyramid driver query; sink formats belong to the write paths
+    build_tile_pyramid(imgs, tminz=8, codec=None).agg(
         F.count("*"), F.sum("cs1")
     ).collect()
     return time.time() - t0

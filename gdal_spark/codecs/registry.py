@@ -90,10 +90,6 @@ def identify(data: bytes) -> str:
     return "UNKNOWN"
 
 
-def is_lossless(fmt: str) -> bool:
-    return fmt == "png"
-
-
 def palette(data: bytes) -> np.ndarray | None:
     """Color table of a paletted payload ((n, 3) uint8) or None — the
     GetColorTable step of the identify/open probe."""

@@ -37,7 +37,3 @@ def caption_points_pdf(n: int, start: int = 0, cell_res: int = 7) -> pd.DataFram
             "cell_r7": cell.astype(np.int64),
         }
     )
-
-
-def caption_points_df(spark, n: int, cell_res: int = 7):
-    return spark.createDataFrame(caption_points_pdf(n, cell_res=cell_res))

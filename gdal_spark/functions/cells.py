@@ -58,21 +58,3 @@ def cell_parent(cell_col, steps: int) -> Column:
 
 def zoom_for_pixel_size(ps) -> Column:
     return F.expr(T.sql_zoom_for_pixel_size(_col_name(ps)))
-
-
-def tile_bounds_cols(x, y_tms, z) -> dict:
-    exprs = T.sql_tile_bounds(_col_name(x), _col_name(y_tms), _col_name(z))
-    return {k: F.expr(v) for k, v in exprs.items()}
-
-
-def with_cell_columns(df, lon="lon", lat="lat", zoom: int = 7, prefix=""):
-    """Append tile_x/tile_y/cell columns at a fixed zoom — the standard
-    pre-join projection. Column-pruning friendly: plain withColumns."""
-    z = str(zoom)
-    return df.withColumns(
-        {
-            f"{prefix}tile_x": tile_x(lon, z),
-            f"{prefix}tile_y": tile_y_tms(lat, z),
-            f"{prefix}cell": cell(lon, lat, z),
-        }
-    )

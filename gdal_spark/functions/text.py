@@ -36,19 +36,6 @@ def token_count(col) -> Column:
     return F.size(tokens(col))
 
 
-def bpe_ish_token_count(col) -> Column:
-    """Sub-word-ish token estimate: count word pieces + digits + punctuation
-    runs (a BPE-flavored regex split), the cheap proxy used for budget
-    accounting in data pipelines."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.size(
-        F.filter(
-            F.split(c, r"(?=[A-Z])|[\s]+|(?<=[a-z])(?=[0-9])|(?=[^\w\s])"),
-            lambda x: x != "",
-        )
-    )
-
-
 def stopword_hits(col, lang: str) -> Column:
     toks = F.transform(tokens(col), lambda t: F.lower(t))
     return F.size(
@@ -86,12 +73,6 @@ def punct_ratio(col) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     punct = F.length(c) - F.length(F.regexp_replace(c, r"[^\w\s]", ""))
     return punct / F.greatest(F.length(c), F.lit(1))
-
-
-def upper_ratio(col) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    upper = F.length(c) - F.length(F.regexp_replace(c, r"[A-Z]", ""))
-    return upper / F.greatest(F.length(c), F.lit(1))
 
 
 def mean_token_len(col) -> Column:

@@ -4,7 +4,7 @@ SQLite-backed containers (MBTiles, GeoPackage raster tiles, GeoPackage
 features) are single-writer files: rows stream to the driver via
 ``toLocalIterator`` with bounded memory (one partition in flight), never
 a full collect.  The horizontally-parallel sinks (z/x/y directories,
-partitioned parquet) remain in operators/tiling.py — these are the
+per-image COGs) remain in operators/tiling.py — these are the
 interchange formats a reference user hands to other tools.
 """
 

@@ -292,15 +292,6 @@ def _poly_pair_candidates(a: DataFrame, b: DataFrame, a_id: str, b_id: str,
     )
 
 
-def _parse_outer(blob: bytes):
-    kind, d = _G.parse_wkb(bytes(blob))
-    if kind == "polygon":
-        return d[0]
-    if kind == "multipolygon":
-        return d[0][0]
-    raise ValueError(f"layer algebra needs polygons, got {kind}")
-
-
 def _parse_pieces(blob: bytes) -> list:
     """Blob -> list of disjoint CONVEX rings covering the geometry: a
     single convex outer ring passes through unchanged; concave rings,
@@ -465,14 +456,6 @@ def _wkb_area_col(col):
     return _area(F.col(col) if isinstance(col, str) else col)
 
 
-def poly_clip(a: DataFrame, b: DataFrame, a_id: str = "aid", zoom: int = 5,
-              broadcast_b: bool = True) -> DataFrame:
-    """OGRLayer::Clip: input cut to method coverage; input schema only
-    (one row per overlapping piece, like the rectangle path)."""
-    bb = b.select("wkb").withColumn("_cid", F.monotonically_increasing_id())
-    return poly_intersection(a, bb, a_id, "_cid", zoom, broadcast_b).drop("_cid")
-
-
 def poly_union(a: DataFrame, b: DataFrame, a_id: str = "aid",
                b_id: str = "bid", zoom: int = 5,
                broadcast_b: bool = True) -> DataFrame:
@@ -545,23 +528,6 @@ def dissolve(df: DataFrame, key: str, wkb_col: str = "wkb",
             yield _pd.DataFrame(rows, columns=[key, "wkb", "area", "n_pieces"])
 
     return gathered.mapInPandas(kernel, schema=schema)
-
-
-def poly_sym_difference(a: DataFrame, b: DataFrame, a_id: str = "aid",
-                        b_id: str = "bid", zoom: int = 5,
-                        broadcast_b: bool = True) -> DataFrame:
-    """OGRLayer::SymDifference: A-not-B plus B-not-A remainders."""
-    a_only = poly_erase(a, b, a_id, zoom, broadcast_b).withColumn(
-        b_id, F.lit(None).cast("long")
-    ).where(F.col("n_pieces") > 0).drop("n_pieces")
-    b_only = poly_erase(
-        b.withColumnRenamed(b_id, a_id), a.withColumnRenamed(a_id, b_id),
-        a_id, zoom, broadcast_b,
-    ).withColumnRenamed(a_id, b_id).withColumn(
-        a_id, F.lit(None).cast("long")
-    ).where(F.col("n_pieces") > 0).drop("n_pieces")
-    cols = [a_id, b_id, "wkb", "area"]
-    return a_only.select(cols).unionByName(b_only.select(cols))
 
 
 def vector_info(features: DataFrame, wkb_col: str = "wkb",

@@ -1179,7 +1179,7 @@ def mosaic_merge(tile_rows: DataFrame, reducer: str = "last",
     collect_list structs) and merged in whole Arrow batches — one shuffle
     keyed by tile, the map-side-combine shape.
     """
-    from .tiling import TILE_SCHEMA, _decode_tile, _tile_row
+    from .tiling import TILE_COLUMNS, TILE_SCHEMA, _decode_raw_tile, _tile_row
 
     gathered = tile_rows.groupBy("z", "x", "y").agg(
         F.sort_array(
@@ -1192,7 +1192,7 @@ def mosaic_merge(tile_rows: DataFrame, reducer: str = "last",
             rows = []
             for r in pdf.itertuples(index=False):
                 arrs = [
-                    _decode_tile(bytes(c["tile"]), "raw").astype(np.float64)
+                    _decode_raw_tile(bytes(c["tile"])).astype(np.float64)
                     for c in r.children  # sort_array ordered by image_id
                 ]
                 if reducer == "mean":
@@ -1219,10 +1219,7 @@ def mosaic_merge(tile_rows: DataFrame, reducer: str = "last",
                         out = np.where(a != src_nodata, a, out)
                     out = out.astype(np.uint8)
                 rows.append(_tile_row("__mosaic__", r.z, r.x, r.y, out))
-            yield pd.DataFrame(
-                rows,
-                columns=["image_id", "z", "x", "y", "tile", "cs1", "cs2", "cs3"],
-            )
+            yield pd.DataFrame(rows, columns=TILE_COLUMNS)
 
     return gathered.mapInPandas(merge, schema=TILE_SCHEMA)
 

@@ -2,28 +2,26 @@
 
 Execution shape (chosen for 10^12-image scale):
 
-* **Base tiles = map-only.** Each image's tiles depend only on that image's
-  row, so rendering is ``mapInPandas`` over the image table: zero shuffle,
-  bytes deserialized once per row, Arrow-batched. The reference reaches the
-  same shape with a process pool over tile jobs
+* **Map-only, one task per image row.** Each image's tiles depend only on
+  that image's row, so rendering is ``mapInPandas`` over the image table:
+  zero shuffle, bytes deserialized once per row, Arrow-batched. The
+  reference reaches the same shape with a process pool over tile jobs
   (gdal2tiles multi_threaded_tiling :4512, apps/gdalalg_raster_tile.cpp
   worker processes :3628-3810); Spark gives it cluster-wide.
-* **Overview levels = K small shuffles.** Level z-1 groups level-z tiles by
-  ``(image_id, x>>1, y>>1)`` — a level-synchronous reduction exactly like
-  create_overview_tile/group_overview_base_tiles (gdal2tiles.py:1466-1530,
-  :1661-1689). Each level is ~4x smaller than the last, so the total shuffle
-  volume is bounded by 4/3 of the base-tile volume.
-* **Skew**: base rendering has none (per-image work is bounded by the tile
-  range of one image). Overview grouping keys include image_id, so dense
-  geographic cells do not concentrate — the key space follows images, not
-  locations.
-* **Resume** (--resume semantics, gdal2tiles.py:1492-1495): anti-join the
-  job list against already-written tile keys before rendering.
+* **Overview levels inside the same task.** Level z-1 is the 2x2
+  reduction of level z, exactly like create_overview_tile /
+  group_overview_base_tiles (gdal2tiles.py:1466-1530, :1661-1689). Overview
+  keys include image_id, so no level ever combines tiles of different
+  images: the whole pyramid of an image is reduced where its base tiles
+  were rendered (oracle/tiling.build_pyramid), with no shuffle barrier.
+* **Skew**: none beyond one image's own tile range — the work follows
+  images, not locations.
+* **Resume** (--resume semantics, gdal2tiles.py:1492-1495) lives in
+  streaming.incremental.resume_tiles: it anti-joins the planned keys
+  against the already-written sink before any decode work.
 """
 
 from __future__ import annotations
-
-import zlib as _zlib
 
 import numpy as np
 import pandas as pd
@@ -31,53 +29,29 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..codecs.registry import decode, encode
 from ..oracle.checksum import checksum_image
-from ..oracle.tiling import (
-    TILE,
-    build_pyramid,  # noqa: F401  (oracle twin, re-exported for tests)
-    native_zoom,
-    overview_tile_from_children,
-    render_image_tiles,
-)
-
-# Inter-level transport codec for the DISTRIBUTED (level-loop) pyramid.
-# A/B-measured on the 20k-image bench (best-of-2 seconds for the full
-# pyramid): png 32.1, raw 78.7, zlib1 91.2 — PNG's filtering compresses the
-# cached/shuffled levels ~100x, keeping every persisted level in heap;
-# raw/zlib1 blow the storage budget and spill. Counter-intuitive but
-# measured; revisit for high-entropy imagery where PNG CPU dominates.
-_INTER_CODEC = "png"
+from ..oracle.tiling import TILE, build_pyramid, render_image_tiles
 
 TILE_SCHEMA = (
     "image_id string, z int, x int, y int, tile binary, "
     "cs1 long, cs2 long, cs3 long"
 )
+TILE_COLUMNS = ["image_id", "z", "x", "y", "tile", "cs1", "cs2", "cs3"]
 
 
 def _tile_row(image_id, z, tx, ty, arr, codec: str | None = "png") -> dict:
-    """``codec=None``: no tile bytes at all (checksum-only consumers —
+    """One TILE_SCHEMA row with the tile's GDAL checksums.
+
+    ``codec=None``: no tile bytes at all (checksum-only consumers —
     nothing is encoded or shipped through Arrow).
-    ``codec='png'``: full container bytes (the sink format).
-    ``codec='raw'``: C-order uint8 bytes (tiles are always 256^2, band count
-    reconstructs as len//65536). ``codec='zlib1'``: raw bytes through
-    zlib level 1 — the INTER-LEVEL default: measured on the 20k-image
-    bench, carrying raw uint8 between pyramid levels tripled persist +
-    shuffle volume and cost more than it saved, while PNG pays filtering +
-    level-6 deflate per level; level-1 deflate keeps ~the PNG ratio at a
-    fraction of the CPU."""
+    ``codec='raw'``: C-order uint8 bytes (tiles are always 256^2, band
+    count reconstructs as len//65536).
+    Any other codec: that codec's container bytes (``'png'`` is the sink
+    format)."""
     cs = checksum_image(arr)
-    if codec is None:
-        return dict(
-            image_id=image_id, z=int(z), x=int(tx), y=int(ty), tile=None,
-            cs1=cs[0], cs2=cs[1] if len(cs) > 1 else None,
-            cs3=cs[2] if len(cs) > 2 else None,
-        )
-    a8 = np.ascontiguousarray(arr, dtype=np.uint8)
-    if codec == "raw":
-        tile = a8.tobytes()
-    elif codec == "zlib1":
-        tile = _zlib.compress(a8.tobytes(), 1)
-    else:
-        tile = encode(a8, codec)
+    tile = None
+    if codec is not None:
+        a8 = np.ascontiguousarray(arr, dtype=np.uint8)
+        tile = a8.tobytes() if codec == "raw" else encode(a8, codec)
     return dict(
         image_id=image_id, z=int(z), x=int(tx), y=int(ty), tile=tile,
         cs1=cs[0], cs2=cs[1] if len(cs) > 1 else None,
@@ -85,201 +59,63 @@ def _tile_row(image_id, z, tx, ty, arr, codec: str | None = "png") -> dict:
     )
 
 
-def _decode_tile(b: bytes, codec: str) -> np.ndarray:
-    if codec == "zlib1":
-        b = _zlib.decompress(b)
-    elif codec != "raw":
-        return decode(b)
+def _decode_raw_tile(b: bytes) -> np.ndarray:
+    """Inverse of ``_tile_row(..., codec='raw')``."""
     bands = len(b) // (TILE * TILE)
     a = np.frombuffer(b, dtype=np.uint8)
     return a.reshape(TILE, TILE) if bands == 1 else a.reshape(TILE, TILE, bands)
 
 
+def _render_images(images: DataFrame, tiles_of, codec: str | None
+                   ) -> DataFrame:
+    """The one render loop: decode each image row once and emit one tile
+    row per ``(z, x, y, array)`` that ``tiles_of(arr, row)`` yields."""
+
+    def gen(batches):
+        for pdf in batches:
+            rows = [
+                _tile_row(r.image_id, z, tx, ty, tile, codec)
+                for r in pdf.itertuples(index=False)
+                for z, tx, ty, tile in tiles_of(decode(r.bytes), r)
+            ]
+            yield pd.DataFrame(rows, columns=TILE_COLUMNS)
+
+    return images.select(
+        "image_id", "bytes", "lon", "lat", "gsd_m"
+    ).mapInPandas(gen, schema=TILE_SCHEMA)
+
+
 def render_base_tiles(images: DataFrame, method: str = "nearest",
-                      zoom: int | None = None, codec: str = "png"
+                      zoom: int | None = None, codec: str | None = "png"
                       ) -> DataFrame:
     """images (input_hint schema) -> base tile rows at native (or fixed) zoom."""
-
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                arr = decode(r.bytes)
-                for z, tx, ty, tile in render_image_tiles(
-                    arr, r.lon, r.lat, r.gsd_m, method, zoom=zoom
-                ):
-                    out.append(_tile_row(r.image_id, z, tx, ty, tile, codec))
-            yield pd.DataFrame(
-                out,
-                columns=["image_id", "z", "x", "y", "tile", "cs1", "cs2", "cs3"],
-            )
-
-    return images.select(
-        "image_id", "bytes", "lon", "lat", "gsd_m"
-    ).mapInPandas(gen, schema=TILE_SCHEMA)
-
-
-def _reduce_level(tiles_z: DataFrame, codec: str = "raw") -> DataFrame:
-    """One overview step: level z tiles -> level z-1 tiles.
-
-    Children are gathered JVM-side (groupBy + collect_list of <=4 structs)
-    so Python sees whole Arrow batches of parent rows — applyInPandas with
-    per-<=4-row groups costs a pandas DataFrame + UDF call per parent
-    (~1 ms x 20k parents/level measured), an order of magnitude slower."""
-
-    def assemble(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                children = {
-                    (int(c["dx"]), int(c["dy"])): _decode_tile(bytes(c["tile"]), codec)
-                    for c in r.children
-                }
-                first = next(iter(children.values()))
-                bands = first.shape[2] if first.ndim == 3 else 1
-                tile = overview_tile_from_children(
-                    children, dtype=first.dtype, bands=bands
-                )
-                out.append(_tile_row(r.image_id, r.z - 1, r.px, r.py, tile, codec))
-            yield pd.DataFrame(
-                out,
-                columns=["image_id", "z", "x", "y", "tile", "cs1", "cs2", "cs3"],
-            )
-
-    gathered = (
-        tiles_z.groupBy(
-            "image_id",
-            (F.col("x") / 2).cast("int").alias("px"),
-            (F.col("y") / 2).cast("int").alias("py"),
-        )
-        .agg(
-            F.first("z").alias("z"),
-            F.collect_list(
-                F.struct(
-                    (F.col("x") % 2).alias("dx"),
-                    (F.col("y") % 2).alias("dy"),
-                    F.col("tile").alias("tile"),
-                )
-            ).alias("children"),
-        )
+    return _render_images(
+        images,
+        lambda arr, r: render_image_tiles(
+            arr, r.lon, r.lat, r.gsd_m, method, zoom=zoom),
+        codec,
     )
-    return gathered.mapInPandas(assemble, schema=TILE_SCHEMA)
-
-
-def _transcode_tiles(tiles: DataFrame, in_codec: str, out_codec: str
-                     ) -> DataFrame:
-    """Re-encode the tile column (checksums/keys unchanged).
-    ``out_codec='internal'`` keeps the transport codec as-is — for
-    consumers that never touch tile bytes (checksum aggregations)."""
-    if in_codec == out_codec or out_codec == "internal":
-        return tiles
-
-    def _enc(arr):
-        a8 = np.ascontiguousarray(arr, dtype=np.uint8)
-        if out_codec == "raw":
-            return a8.tobytes()
-        if out_codec == "zlib1":
-            return _zlib.compress(a8.tobytes(), 1)
-        return encode(a8, out_codec)
-
-    def conv(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["tile"] = [
-                _enc(_decode_tile(bytes(b), in_codec)) for b in pdf["tile"]
-            ]
-            yield pdf
-
-    return tiles.mapInPandas(conv, schema=TILE_SCHEMA)
-
-
-def _per_image_pyramid(images: DataFrame, tminz: int, method: str,
-                       codec: str) -> DataFrame:
-    """Map-only pyramid: one task renders an image's base tiles AND reduces
-    all its overview levels locally (single-image oracle kernel).
-
-    ``codec='internal'`` emits NULL tile bytes: the documented contract is
-    that such consumers aggregate keys/checksums only, and in the map-only
-    path the tiles never cross a stage boundary — encoding them (PNG
-    filtering + deflate was ~60% of this operator's CPU) bought nothing.
-    The distributed level-loop keeps its measured inter-level transport
-    codec; a checksum-only consumer that does touch ``tile`` now fails
-    loudly instead of silently paying for bytes nobody reads."""
-    out_codec = None if codec == "internal" else codec
-
-    def gen(batches):
-        from ..oracle.tiling import build_pyramid as _bp
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                arr = decode(r.bytes)
-                tiles = _bp(arr, r.lon, r.lat, r.gsd_m, tminz, method)
-                for (z, tx, ty), t in tiles.items():
-                    rows.append(_tile_row(r.image_id, z, tx, ty, t, out_codec))
-            yield pd.DataFrame(
-                rows,
-                columns=["image_id", "z", "x", "y", "tile", "cs1", "cs2", "cs3"],
-            )
-
-    return images.select(
-        "image_id", "bytes", "lon", "lat", "gsd_m"
-    ).mapInPandas(gen, schema=TILE_SCHEMA)
 
 
 def build_tile_pyramid(images: DataFrame, tminz: int = 0,
                        method: str = "nearest",
-                       existing_tiles: DataFrame | None = None,
-                       codec: str = "png",
-                       per_image: bool = True) -> DataFrame:
+                       codec: str | None = "png") -> DataFrame:
     """Full pyramid: base tiles at each image's native zoom plus overview
-    levels down to ``tminz``. Images with different native zooms reduce
-    independently (per-image pyramids, like running gdal2tiles per input).
+    levels down to ``tminz``, all computed inside the image's own map task
+    (per-image pyramids, like running gdal2tiles per input). Zero shuffles
+    at any scale.
 
-    ``per_image=True`` (default): the ENTIRE pyramid of an image — base
-    render plus every overview level — is computed inside one map task with
-    the single-image kernel (oracle/tiling.build_pyramid): since overview
-    keys include image_id, no level ever combines tiles of different
-    images, so the level-by-level shuffle reduction adds nothing but K
-    shuffle barriers. Map-only = ZERO shuffles at any scale — the right
-    plan for 10^12 small images.
-
-    ``per_image=False``: the distributed level-loop (groupBy (image, x>>1,
-    y>>1) + 2x2 reduce per level) — the shape needed when one raster's
-    tiles are split across many rows (block-partitioned giant images) and
-    for resume mode, which anti-joins already-written tile keys before any
-    render. Inter-level transport uses _INTER_CODEC (PNG; A/B-measured).
-
-    ``existing_tiles`` (columns image_id, z, x, y): resume mode — rendered
-    keys already present are skipped via anti-join before any decode work
-    (forces the distributed path).
-    """
-    if per_image and existing_tiles is None:
-        return _per_image_pyramid(images, tminz, method, codec)
-    base = render_base_tiles(images, method, codec=_INTER_CODEC)
-    if existing_tiles is not None:
-        base = base.join(
-            existing_tiles.select("image_id", "z", "x", "y"),
-            ["image_id", "z", "x", "y"],
-            "left_anti",
-        )
-    base = base.persist()
-    levels = [base]
-    zmax = base.agg(F.max("z")).collect()[0][0]
-    if zmax is None:
-        return _transcode_tiles(base, _INTER_CODEC, codec)
-    current_by_z = base
-    for z in range(int(zmax), tminz, -1):
-        tiles_z = current_by_z.where(F.col("z") == z)
-        reduced = _reduce_level(tiles_z, codec=_INTER_CODEC).persist()
-        levels.append(reduced)
-        # next iteration reduces what we just built plus any base tiles that
-        # natively live at z-1 (images with coarser gsd)
-        current_by_z = reduced.unionByName(base.where(F.col("z") == z - 1))
-    out = levels[0]
-    for lv in levels[1:]:
-        out = out.unionByName(lv)
-    return _transcode_tiles(out, _INTER_CODEC, codec)
+    ``codec=None`` emits NULL tile bytes for consumers that aggregate
+    keys/checksums only: encoding (PNG filtering + deflate was ~60% of this
+    operator's CPU) would buy nothing, and a consumer that does touch
+    ``tile`` fails loudly instead of silently paying for unread bytes."""
+    return _render_images(
+        images,
+        lambda arr, r: (
+            (z, tx, ty, t) for (z, tx, ty), t in build_pyramid(
+                arr, r.lon, r.lat, r.gsd_m, tminz, method).items()),
+        codec,
+    )
 
 
 def write_cog_directory(images: DataFrame, root: str,
@@ -312,13 +148,6 @@ def write_cog_directory(images: DataFrame, root: str,
         write_part
     )
     return acc.value
-
-
-def write_tiles(tiles: DataFrame, path: str, mode: str = "append") -> None:
-    """Tile sink: parquet partitioned by zoom (the z/x/y directory layout of
-    the tile-directory sink, gdal2tiles.py:1278-1434, adapted to a columnar
-    table partitioned for partition-pruned reads by zoom)."""
-    tiles.write.partitionBy("z").mode(mode).parquet(path)
 
 
 def write_tile_directory(tiles: DataFrame, root: str, scheme: str = "xyz",

@@ -18,11 +18,6 @@ from __future__ import annotations
 import numpy as np
 
 
-def _interp(p1, p2, v1, v2, level):
-    t = (level - v1) / (v2 - v1)
-    return (p1[0] + t * (p2[0] - p1[0]), p1[1] + t * (p2[1] - p1[1]))
-
-
 # 16-case edge table (alg/marching_squares/segment_merger.h case layout);
 # cases 5 and 10 are the two-segment saddles
 _CASE_EDGES = {

@@ -1405,11 +1405,6 @@ def touches(a, b) -> bool:
     return not boundaries_intersect(a, b, proper_only=True)
 
 
-def _first_rings(g):
-    kind, d = g
-    return d if kind == "polygon" else d[0]
-
-
 def is_convex_ring(ring: np.ndarray) -> bool:
     """All turns the same direction (collinear runs allowed)."""
     r = _close_ring(np.asarray(ring, dtype=np.float64))

@@ -59,19 +59,6 @@ def point_in_ring(xs, ys, ring_xy, test_envelope=True):
     return alive & ((crossings % 2) != 0)
 
 
-def points_in_boxes(xs, ys, minx, miny, maxx, maxy):
-    """Inclusive bbox containment for many points vs aligned boxes
-    (broadcasting shapes must align). This is the reference's envelope
-    fast path (ogrlinearring.cpp:478-489) and, for axis-aligned tile
-    polygons, is exactly equivalent to the full ray cast on interior
-    points (boundary points differ per the strict ``>0`` crossing rule —
-    use :func:`point_in_ring` when boundary semantics matter)."""
-    return (
-        (np.asarray(xs) >= minx) & (np.asarray(xs) <= maxx)
-        & (np.asarray(ys) >= miny) & (np.asarray(ys) <= maxy)
-    )
-
-
 def box_ring(minx, miny, maxx, maxy):
     """Closed 5-point CCW ring for an axis-aligned box (the tile polygons the
     spatial join refines against)."""

@@ -1400,9 +1400,8 @@ def tile_pyramid_q(spark, sf_dir):
 
     imgs = images_df(spark, _images_n(sf_dir))
     zmin = 8  # gsd cycle -> native zooms 8..13; reduce coarsest level to z8
-    # codec="internal": only checksum columns are consumed — the tile
-    # bytes stay in the transport codec, no transcode pass at all
-    return build_tile_pyramid(imgs, tminz=zmin, codec="internal").select(
+    # codec=None: only checksum columns are consumed — no tile bytes
+    return build_tile_pyramid(imgs, tminz=zmin, codec=None).select(
         "image_id", "z", "x", "y", "cs1", "cs2", "cs3"
     )
 
@@ -1751,7 +1750,7 @@ def mosaic_placement_q(spark, sf_dir):
     the mean-blend extension, and -separate band stacking, each checksum
     replayed from the closed-form source pixels."""
     from .operators.rasterops import mosaic_merge, mosaic_separate
-    from .operators.tiling import TILE_SCHEMA, _tile_row
+    from .operators.tiling import TILE_COLUMNS, TILE_SCHEMA, _tile_row
 
     def gen(batches):
         for pdf in batches:
@@ -1764,10 +1763,7 @@ def mosaic_placement_q(spark, sf_dir):
                 rows.append(_tile_row(
                     f"src{k}", 5, t % 2, t // 2,
                     v.astype(np.uint8).reshape(256, 256), codec="raw"))
-            yield pd.DataFrame(
-                rows,
-                columns=["image_id", "z", "x", "y", "tile",
-                         "cs1", "cs2", "cs3"])
+            yield pd.DataFrame(rows, columns=TILE_COLUMNS)
 
     src = spark.range(0, 12, 1, 8).mapInPandas(gen, schema=TILE_SCHEMA)
     out_cols = ["mode", "x", "y", "band", "cs"]
@@ -1922,7 +1918,7 @@ def pyramid_keys_q(spark, sf_dir):
     from .operators.tiling import build_tile_pyramid
 
     imgs = images_df(spark, min(_images_n(sf_dir), 60))
-    return build_tile_pyramid(imgs, tminz=8, codec="internal").select(
+    return build_tile_pyramid(imgs, tminz=8, codec=None).select(
         "image_id", F.col("z").cast("long").alias("z"),
         F.col("x").cast("long").alias("x"), F.col("y").cast("long").alias("y"),
     )
@@ -2189,7 +2185,7 @@ def caption_passthrough(spark, sf_dir):
     from .operators.tiling import render_base_tiles
 
     imgs = images_df(spark, _images_n(sf_dir)).persist()
-    tiles = render_base_tiles(imgs, codec="raw")  # tile bytes never consumed
+    tiles = render_base_tiles(imgs, codec=None)  # tile bytes never consumed
     return (
         tiles.join(imgs.select("image_id", "caption", "phash"), "image_id")
         .select("image_id", "z", "x", "y", "caption", "phash")
@@ -3065,64 +3061,6 @@ def point_sample_q(spark, sf_dir):
         ]
     )
     return sample_at_points(imgs, pts, "bilinear")
-
-
-# GDALChecksumImage value oracle folded into decode_stats_png (one gate
-# covers codec + stats + checksum, freeing a driver grading slot); the
-# standalone query function stays callable for tests/benchmarks.
-_CHECKSUM_SQL = f"""
-WITH idx AS (
-  SELECT CAST(a AS BIGINT) AS i
-  FROM (SELECT unnest(generate_series(0, 59)) AS a)
-  WHERE a % 3 = 0
-),
-meta AS (
-  SELECT i,
-    CASE i % 5 WHEN 0 THEN 20 WHEN 1 THEN 64 WHEN 2 THEN 256
-               WHEN 3 THEN 257 ELSE 512 END AS w,
-    CASE i % 5 WHEN 0 THEN 20 WHEN 1 THEN 64 WHEN 2 THEN 256
-               WHEN 3 THEN 300 ELSE 512 END AS h
-  FROM idx
-),
-px AS (
-  SELECT m.i, m.w, CAST(k.a AS BIGINT) AS flat,
-         CAST(k.a AS BIGINT) % 256 AS b1,
-         (3 * (CAST(k.a AS BIGINT) % m.w)) % 256 AS b2,
-         (7 * (CAST(k.a AS BIGINT) // m.w)) % 256 AS b3
-  FROM meta m, LATERAL (
-    SELECT unnest(generate_series(0, m.w * m.h - 1)) AS a) k
-)
-SELECT printf('img%08d', i) AS image_id,
-       CAST(SUM(b1 % ({_CS_PRIME.format(i='flat')})) % 65536 AS BIGINT) AS cs1,
-       CAST(SUM(b2 % ({_CS_PRIME.format(i='flat')})) % 65536 AS BIGINT) AS cs2,
-       CAST(SUM(b3 % ({_CS_PRIME.format(i='flat')})) % 65536 AS BIGINT) AS cs3
-FROM px
-GROUP BY i
-"""
-
-
-def checksum_png_q(spark, sf_dir):
-    """GDALChecksumImage (alg/gdalchecksum.cpp:48-260) VALUE-gated: decode
-    each PNG and checksum all three bands; DuckDB replays the position-
-    weighted modular sum over the closed-form pixel lattice."""
-    from .codecs.registry import decode as _dec
-    from .fixtures.images import images_df
-    from .oracle.checksum import checksum_image
-
-    def cs(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                if r.fmt != "png":
-                    continue
-                c = checksum_image(_dec(r.bytes))
-                out.append(dict(image_id=r.image_id, cs1=c[0], cs2=c[1],
-                                cs3=c[2]))
-            yield pd.DataFrame(out, columns=["image_id", "cs1", "cs2", "cs3"])
-
-    imgs = images_df(spark, min(_images_n(sf_dir), 60))
-    return imgs.select("image_id", "fmt", "bytes").mapInPandas(
-        cs, schema="image_id string, cs1 long, cs2 long, cs3 long")
 
 
 # translate -outsize + -projwin value oracle (merged per round-3 VERDICT

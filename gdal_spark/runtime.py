@@ -4,10 +4,11 @@ The external driver calls ``queries()[name](spark, sf_dir)`` with a session
 it created itself — no PYTHONPATH for executor Python workers, default
 Arrow/AQE settings. ``ensure_runtime(spark)`` makes any session usable:
 
-* ships this package to executors via ``sc.addPyFile`` (a zip built on
-  first use) — the runtime equivalent of ``spark-submit --py-files``;
-* applies the engine's session-settable tuning (Arrow batch size, AQE
-  advisory sizes, file split size) without touching static confs.
+* ships this package to executors via ``sc.addPyFile`` (the packaging zip,
+  rebuilt only when a source is newer) — the runtime equivalent of
+  ``spark-submit --py-files``;
+* applies the engine's session-settable tuning (session.SESSION_CONFS)
+  without touching static confs.
 
 Idempotent and cheap after the first call.
 """
@@ -15,59 +16,26 @@ Idempotent and cheap after the first call.
 from __future__ import annotations
 
 import os
-import zipfile
+import tempfile
+
+from .packaging import build_zip
+from .session import SESSION_CONFS, add_package_to_pythonpath
 
 _DONE = set()
-
-_RUNTIME_CONFS = {
-    "spark.sql.execution.arrow.pyspark.enabled": "true",
-    "spark.sql.execution.arrow.maxRecordsPerBatch": "256",
-    "spark.sql.adaptive.advisoryPartitionSizeInBytes": "4m",
-    "spark.sql.adaptive.coalescePartitions.minPartitionSize": "256k",
-    "spark.sql.files.maxPartitionBytes": str(8 * 1024 * 1024),
-    "spark.sql.session.timeZone": "UTC",
-}
-
-
-def _package_zip() -> str:
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    out = os.path.join("/tmp", "gdal_spark_pkg.zip")
-    src_mtime = max(
-        os.path.getmtime(os.path.join(root, f))
-        for root, _, files in os.walk(pkg_dir)
-        for f in files
-        if f.endswith(".py")
-    )
-    if not os.path.exists(out) or os.path.getmtime(out) < src_mtime:
-        tmp = out + ".tmp"
-        with zipfile.ZipFile(tmp, "w") as z:
-            for root, _, files in os.walk(pkg_dir):
-                for f in files:
-                    if f.endswith(".py"):
-                        full = os.path.join(root, f)
-                        rel = os.path.join(
-                            "gdal_spark", os.path.relpath(full, pkg_dir)
-                        )
-                        z.write(full, rel)
-        os.replace(tmp, out)
-    return out
 
 
 def ensure_runtime(spark) -> None:
     key = id(spark.sparkContext)
     if key in _DONE:
         return
-    # make the package importable in executor Python workers no matter how
-    # this session was built
-    pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    pypath = os.environ.get("PYTHONPATH", "")
-    if pkg_root not in pypath.split(os.pathsep):
-        os.environ["PYTHONPATH"] = pkg_root + (os.pathsep + pypath if pypath else "")
+    add_package_to_pythonpath()
     try:
-        spark.sparkContext.addPyFile(_package_zip())
+        spark.sparkContext.addPyFile(build_zip(
+            os.path.join(tempfile.gettempdir(), "gdal_spark_pkg.zip"),
+            reuse=True))
     except Exception:
-        pass  # already added or unsupported — PYTHONPATH covers local mode
-    for k, v in _RUNTIME_CONFS.items():
+        pass  # already added, unsupported, or the package runs from a zip
+    for k, v in SESSION_CONFS.items():
         try:
             spark.conf.set(k, v)
         except Exception:

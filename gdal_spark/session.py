@@ -3,6 +3,9 @@
 Single place for the scale-oriented defaults: AQE (runtime re-plan + skew-join
 splitting), Arrow-batched pandas UDF transfer, and a shuffle-partition count
 sized to the local core count (on a real cluster this is set per job size).
+``SESSION_CONFS`` holds the confs a running session accepts: ``get_spark``
+builds with them and ``runtime.ensure_runtime`` sets them on a session
+built elsewhere.
 """
 
 from __future__ import annotations
@@ -10,6 +13,47 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+PKG_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+SESSION_CONFS = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    # UDF stages cost ~per ROW, not per byte: AQE's 64 MB advisory size
+    # coalesces a 60 MB tile-shuffle into 1-2 partitions and strands the
+    # cluster on pandas work. 4 MB keeps post-shuffle stages wide enough.
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes": "4m",
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize": "256k",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # Small Arrow batches + a large worker pipe buffer (spark.buffer.size in
+    # get_spark) pipeline the JVM<->Python transfer of fat binary rows
+    # (~3.5x on the 2.5 GB image column: 10.2s -> 2.9s measured) — big
+    # batches serialize whole-batch-at-a-time and stall both sides on the
+    # default 64k pipe.
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "256",
+    # Decode/render UDFs are CPU-heavy per byte: the 128 MB default packs
+    # a whole image table into a handful of scan tasks and strands the
+    # other cores (observed 8/32 busy). 8 MB splits ~= seconds-long
+    # tasks — the Spark analogue of the warp chunk memory budget
+    # (alg/gdalwarpoperation.cpp:611 dfWarpMemoryLimit).
+    "spark.sql.files.maxPartitionBytes": str(8 * 1024 * 1024),
+    "spark.sql.session.timeZone": "UTC",
+}
+
+
+def add_package_to_pythonpath() -> None:
+    """Make this package importable in executor Python workers regardless
+    of the driver's cwd — the local-mode analogue of ``--py-files``."""
+    pypath = os.environ.get("PYTHONPATH", "")
+    if PKG_ROOT not in pypath.split(os.pathsep):
+        os.environ["PYTHONPATH"] = PKG_ROOT + (os.pathsep + pypath if pypath else "")
+
+
+def default_cores() -> int:
+    """``$SPARK_GRAFT_CPUS`` if set, else the CPUs this process may use."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
 
 
 def get_spark(
@@ -19,50 +63,23 @@ def get_spark(
     extra_conf: dict | None = None,
 ) -> SparkSession:
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    # Make this package importable in executor Python workers regardless of
-    # the driver's cwd — the local-mode analogue of `spark-submit --py-files`.
-    pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    pypath = os.environ.get("PYTHONPATH", "")
-    if pkg_root not in pypath.split(os.pathsep):
-        os.environ["PYTHONPATH"] = (
-            pkg_root + (os.pathsep + pypath if pypath else "")
-        )
+        cores = default_cores()
+    add_package_to_pythonpath()
     if shuffle_partitions is None:
         shuffle_partitions = max(2 * cores, 32)
-    b = (
-        SparkSession.builder.master(f"local[{cores}]")
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.default.parallelism", str(cores))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # UDF stages cost ~per ROW, not per byte: AQE's 64 MB advisory size
-        # coalesces a 60 MB tile-shuffle into 1-2 partitions and strands the
-        # cluster on pandas work. 4 MB keeps post-shuffle stages wide enough.
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "256k")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Small Arrow batches + a large worker pipe buffer pipeline the
-        # JVM<->Python transfer of fat binary rows (~3.5x on the 2.5 GB
-        # image column: 10.2s -> 2.9s measured) — big batches serialize
-        # whole-batch-at-a-time and stall both sides on the default 64k pipe.
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
-        .config("spark.buffer.size", str(1024 * 1024))
-        # Decode/render UDFs are CPU-heavy per byte: the 128 MB default packs
-        # a whole image table into a handful of scan tasks and strands the
-        # other cores (observed 8/32 busy). 32 MB splits ~= seconds-long
-        # tasks — the Spark analogue of the warp chunk memory budget
-        # (alg/gdalwarpoperation.cpp:611 dfWarpMemoryLimit).
-        .config("spark.sql.files.maxPartitionBytes", str(8 * 1024 * 1024))
-        .config("spark.sql.files.openCostInBytes", str(1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.parquet.compression.codec", "zstd")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-    )
-    for k, v in (extra_conf or {}).items():
+    conf = {
+        **SESSION_CONFS,
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.default.parallelism": str(cores),
+        "spark.buffer.size": str(1024 * 1024),
+        "spark.sql.files.openCostInBytes": str(1024 * 1024),
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+        "spark.sql.parquet.compression.codec": "zstd",
+        "spark.ui.enabled": "false",
+        **(extra_conf or {}),
+    }
+    b = SparkSession.builder.master(f"local[{cores}]").appName(app_name)
+    for k, v in conf.items():
         b = b.config(k, v)
     return b.getOrCreate()

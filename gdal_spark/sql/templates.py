@@ -134,14 +134,3 @@ def sql_zoom_for_pixel_size(ps: str) -> str:
         f"least(CAST(31 AS BIGINT), greatest(CAST(0 AS BIGINT), "
         f"CAST(floor(log2({INITIAL_RESOLUTION} / ({ps}))) AS BIGINT)))"
     )
-
-
-def sql_tile_bounds(x: str, y_tms: str, z: str) -> dict:
-    """TMS tile -> EPSG:3857 bounds exprs (gdal2tiles.py:480-487)."""
-    res = sql_resolution(z)
-    return {
-        "minx": f"((({x}) * {TILE_SIZE}.0) * {res} - {ORIGIN_SHIFT})",
-        "miny": f"((({y_tms}) * {TILE_SIZE}.0) * {res} - {ORIGIN_SHIFT})",
-        "maxx": f"(((({x}) + 1) * {TILE_SIZE}.0) * {res} - {ORIGIN_SHIFT})",
-        "maxy": f"(((({y_tms}) + 1) * {TILE_SIZE}.0) * {res} - {ORIGIN_SHIFT})",
-    }

@@ -55,15 +55,17 @@ def main(argv=None):
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    builder = (
-        SparkSession.builder.appName("gdal-spark-corpus-clean")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-    )
+    builder = SparkSession.builder.appName("gdal-spark-corpus-clean")
     if args.shuffle_partitions:
         builder = builder.config(
             "spark.sql.shuffle.partitions", str(args.shuffle_partitions))
+    # master/deploy come from spark-submit; AQE/Arrow tuning from
+    # ensure_runtime
     spark = builder.getOrCreate()
+
+    from gdal_spark.runtime import ensure_runtime
+
+    ensure_runtime(spark)
     spark.sparkContext.setLogLevel("WARN")
 
     from gdal_spark.functions.text import (

@@ -84,17 +84,17 @@ def main(argv=None):
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    builder = (
-        SparkSession.builder.appName("gdal-spark-tile-pipeline")
-        # AQE re-plans shuffles at runtime (skew-join splitting included);
-        # master/deploy come from spark-submit, never hardcoded here
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-    )
+    builder = SparkSession.builder.appName("gdal-spark-tile-pipeline")
     if args.shuffle_partitions:
         builder = builder.config(
             "spark.sql.shuffle.partitions", str(args.shuffle_partitions))
+    # master/deploy come from spark-submit; AQE/Arrow tuning from
+    # ensure_runtime
     spark = builder.getOrCreate()
+
+    from gdal_spark.runtime import ensure_runtime
+
+    ensure_runtime(spark)
     spark.sparkContext.setLogLevel("WARN")
 
     from gdal_spark.fixtures.images import images_df

@@ -90,7 +90,7 @@ def main():
     from gdal_spark.operators.tiling import build_tile_pyramid
 
     imgs = images_df(spark, 60)
-    df = build_tile_pyramid(imgs, tminz=8, codec="internal")
+    df = build_tile_pyramid(imgs, tminz=8, codec=None)
     p = plan_of(df)
     check("per-image pyramid has zero shuffles", "Exchange" not in p,
           "no Exchange node in the plan")

@@ -2,10 +2,9 @@
 
 The north-rule contract is that the job ships as ``spark-submit
 --py-files`` modules only — no cluster-side installs, no per-row Python
-beyond the package's own Arrow UDFs.  This packager produces that artifact
-deterministically: entries are sorted, timestamps pinned, .pyc/caches
-excluded, so the zip bytes (and hence cluster deploys) are reproducible
-for identical source trees.
+beyond the package's own Arrow UDFs.  The zip is built deterministically
+by ``gdal_spark.packaging.build_zip``, so identical source trees give
+identical bytes.
 
 Usage: python scripts/package_pyfiles.py [out_zip]
 """
@@ -14,37 +13,16 @@ from __future__ import annotations
 
 import os
 import sys
-import zipfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from gdal_spark.packaging import build_zip  # noqa: E402
 
 
 def build(out_zip: str | None = None) -> str:
-    out_zip = out_zip or os.path.join(REPO, "dist", "gdal_spark.zip")
-    os.makedirs(os.path.dirname(out_zip), exist_ok=True)
-    entries = []
-    pkg_root = os.path.join(REPO, "gdal_spark")
-    for dirpath, dirnames, filenames in os.walk(pkg_root):
-        dirnames[:] = sorted(d for d in dirnames if d != "__pycache__")
-        for fn in sorted(filenames):
-            if not fn.endswith(".py"):
-                continue
-            full = os.path.join(dirpath, fn)
-            entries.append((os.path.relpath(full, REPO), full))
-    tmp = out_zip + ".tmp"
-    with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as zf:
-        for arcname, full in entries:
-            with open(full, "rb") as f:
-                data = f.read()
-            # pinned date -> byte-identical zip for identical sources
-            info = zipfile.ZipInfo(arcname, date_time=(1980, 1, 1, 0, 0, 0))
-            info.compress_type = zipfile.ZIP_DEFLATED
-            info.external_attr = 0o644 << 16
-            zf.writestr(info, data)
-    os.replace(tmp, out_zip)
-    return out_zip
+    return build_zip(out_zip or os.path.join(REPO, "dist", "gdal_spark.zip"))
 
 
 if __name__ == "__main__":
-    path = build(sys.argv[1] if len(sys.argv) > 1 else None)
-    print(path)
+    print(build(sys.argv[1] if len(sys.argv) > 1 else None))

@@ -37,8 +37,7 @@ def value_hash(pdf: pd.DataFrame) -> str:
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    spark = get_spark(cores=int(os.environ.get("SPARK_GRAFT_CPUS", "16")),
-                      app_name="selfcheck")
+    spark = get_spark(app_name="selfcheck")
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()

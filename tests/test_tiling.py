@@ -74,22 +74,21 @@ def test_pyramid_matches_oracle(spark, images_pdf, images_sdf):
     assert (per_img == tminz).all()
 
 
-def test_distributed_pyramid_equals_per_image(spark, images_sdf):
-    """The level-loop (distributed, for block-split giant rasters / resume)
-    and the map-only per-image path must produce identical tile sets and
-    checksums."""
+def test_checksum_only_pyramid(spark, images_sdf):
+    """codec=None ships no tile bytes, and its keys and checksums are those
+    of the PNG pyramid."""
     from gdal_spark.operators.tiling import build_tile_pyramid
 
     cols = ["image_id", "z", "x", "y", "cs1", "cs2", "cs3"]
-    a = build_tile_pyramid(
-        images_sdf, tminz=7, per_image=True
-    ).toPandas()[cols].sort_values(cols[:4], ignore_index=True)
-    b = build_tile_pyramid(
-        images_sdf, tminz=7, per_image=False
-    ).toPandas()[cols].sort_values(cols[:4], ignore_index=True)
-    import pandas as pd
-
-    pd.testing.assert_frame_equal(a, b)
+    none = build_tile_pyramid(images_sdf, tminz=7, codec=None).toPandas()
+    png = build_tile_pyramid(images_sdf, tminz=7, codec="png").toPandas()
+    assert len(none) > 0
+    assert none["tile"].isna().all()
+    assert png["tile"].notna().all()
+    pd.testing.assert_frame_equal(
+        none[cols].sort_values(cols[:4], ignore_index=True),
+        png[cols].sort_values(cols[:4], ignore_index=True),
+    )
 
 
 def test_resume_anti_join_skips_existing(spark, images_sdf):
@@ -97,8 +96,6 @@ def test_resume_anti_join_skips_existing(spark, images_sdf):
 
     first = render_base_tiles(images_sdf).select("image_id", "z", "x", "y")
     first_pdf = first.toPandas()
-    from gdal_spark.operators.tiling import build_tile_pyramid
-
     base_again = render_base_tiles(images_sdf).join(
         spark.createDataFrame(first_pdf), ["image_id", "z", "x", "y"], "left_anti"
     )
