@@ -50,8 +50,8 @@ def encode_png(arr: np.ndarray) -> bytes:
     raw = np.empty((h, w * channels + 1), dtype=np.uint8)
     raw[:, 0] = 1
     raw[:, 1 : 1 + channels] = flat[:, :channels]
-    raw[:, 1 + channels :] = flat[:, channels:] - flat[:, :-channels]
-    idat = zlib.compress(raw.tobytes(), 6)
+    np.subtract(flat[:, channels:], flat[:, :-channels], out=raw[:, 1 + channels :])
+    idat = zlib.compress(raw, 6)
     return _SIGNATURE + _chunk(b"IHDR", ihdr) + _chunk(b"IDAT", idat) + _chunk(b"IEND", b"")
 
 
@@ -74,7 +74,7 @@ def encode_png_paletted(indices: np.ndarray, palette: np.ndarray) -> bytes:
     raw = np.empty((h, w + 1), dtype=np.uint8)
     raw[:, 0] = 0  # filter None: index values are categorical, Sub gains nothing
     raw[:, 1:] = a
-    idat = zlib.compress(raw.tobytes(), 6)
+    idat = zlib.compress(raw, 6)
     return (_SIGNATURE + _chunk(b"IHDR", ihdr) + _chunk(b"PLTE", pal.tobytes())
             + _chunk(b"IDAT", idat) + _chunk(b"IEND", b""))
 

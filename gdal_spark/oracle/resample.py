@@ -80,7 +80,7 @@ def resample_nearest(src, out_h, out_w):
     h, w = src.shape[0], src.shape[1]
     sy = np.clip(np.floor(_center_coords(out_h, h)).astype(np.int64), 0, h - 1)
     sx = np.clip(np.floor(_center_coords(out_w, w)).astype(np.int64), 0, w - 1)
-    return src[np.ix_(sy, sx)]
+    return src.take(sy, axis=0).take(sx, axis=1)
 
 
 def resample_bilinear(src, out_h, out_w):
@@ -125,21 +125,23 @@ def average_2x2(src):
     """2x2 block-average downsample (H, W[, C]) -> (H//2, W//2[, C]).
     Requires even H and W. Integer inputs round half-up like the reference's
     integer average overview (gcore/overview.cpp:1980 region); uint8 takes
-    an exact integer fast path (floor(s/4 + 0.5) == (s + 2) >> 2)."""
+    an exact integer fast path (floor(s/4 + 0.5) == (s + 2) >> 2) that sums
+    the row pairs, then the column pairs of those sums."""
     src = np.asarray(src)
     h, w = src.shape[0] & ~1, src.shape[1] & ~1
     s = src[:h, :w]
+    if src.dtype == np.uint8:
+        rows = s[0::2].astype(np.uint16)
+        rows += s[1::2]
+        acc = rows[:, 0::2] + rows[:, 1::2]
+        acc += 2
+        acc >>= 2
+        return acc.astype(np.uint8)
     blocks = (
         s.reshape(h // 2, 2, w // 2, 2, s.shape[2])
         if s.ndim == 3
         else s.reshape(h // 2, 2, w // 2, 2)
     )
-    if src.dtype == np.uint8:
-        acc = (
-            s[0::2, 0::2].astype(np.uint16) + s[0::2, 1::2]
-            + s[1::2, 0::2] + s[1::2, 1::2]
-        )
-        return ((acc + 2) >> 2).astype(np.uint8)
     acc = blocks.astype(np.float64).mean(axis=(1, 3))
     if np.issubdtype(src.dtype, np.integer):
         info = np.iinfo(src.dtype)

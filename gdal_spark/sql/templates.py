@@ -94,23 +94,31 @@ def sql_tile_y_xyz(lat: str, z: str) -> str:
     return f"({n_minus_1} - {sql_tile_y_tms(lat, z)})"
 
 
-def sql_spread_bits(v: str) -> str:
-    """Interleave-spread a <=26-bit int into even bit positions."""
+def sql_spread_bits(v: str, bits: int | None = None) -> str:
+    """Interleave-spread a <=26-bit int into even bit positions.
+
+    Each mask step doubles the expression. A step whose multiplier is at
+    least ``2**bits`` returns ``v`` unchanged, so with ``bits`` known (a
+    literal zoom) those steps are left out: at z7, three steps repeat
+    ``v`` 8 times instead of 32."""
     e = f"CAST(({v}) AS BIGINT)"
     for mul, mask in _MASKS:
-        e = f"(({e} | ({e} * {mul})) & {mask})"
+        if bits is None or mul < 2 ** bits:
+            e = f"(({e} | ({e} * {mul})) & {mask})"
     return e
 
 
-def sql_morton(x: str, y: str) -> str:
-    return f"({sql_spread_bits(x)} | ({sql_spread_bits(y)} * 2))"
+def sql_morton(x: str, y: str, bits: int | None = None) -> str:
+    return f"({sql_spread_bits(x, bits)} | ({sql_spread_bits(y, bits)} * 2))"
 
 
 def sql_cell(lon: str, lat: str, z: str) -> str:
-    """Hierarchical int64 cell id: (z << 58) | morton(tile_x, tile_y_xyz)."""
+    """Hierarchical int64 cell id: (z << 58) | morton(tile_x, tile_y_xyz).
+    Tile indices at zoom z have z bits, so a literal z sizes the spread."""
+    bits = int(z) if z.strip().isdigit() else None
     return (
         f"((CAST(({z}) AS BIGINT) * {CELL_Z_SHIFT})"
-        f" + {sql_morton(sql_tile_x(lon, z), sql_tile_y_xyz(lat, z))})"
+        f" + {sql_morton(sql_tile_x(lon, z), sql_tile_y_xyz(lat, z), bits)})"
     )
 
 

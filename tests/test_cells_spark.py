@@ -52,6 +52,27 @@ def test_spark_matches_numpy_oracle(spark, points_pdf):
         np.testing.assert_array_equal(got["cell"].to_numpy(), cell)
 
 
+def test_cell_zoom_column_matches_numpy_oracle(spark, points_pdf):
+    """A zoom column takes all five mask steps (a literal zoom leaves out
+    the steps it does not need, tested above); both give the oracle's cell."""
+    from pyspark.sql import functions as F
+
+    from gdal_spark.functions import cells as C
+
+    got = (
+        spark.createDataFrame(points_pdf)
+        .withColumn("z", (F.col("pid") % 21).cast("int"))
+        .select("pid", "z", C.cell("lon", "lat", "z").alias("cell"))
+        .orderBy("pid")
+        .toPandas()
+    )
+    lon, lat = points_pdf["lon"].to_numpy(), points_pdf["lat"].to_numpy()
+    for z in range(21):
+        m = got["z"].to_numpy() == z
+        np.testing.assert_array_equal(
+            got["cell"].to_numpy()[m], M.cell_encode(lon[m], lat[m], z))
+
+
 def test_cell_parent_column(spark, points_pdf):
     from gdal_spark.functions import cells as C
 

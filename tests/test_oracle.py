@@ -226,6 +226,117 @@ class TestChecksum:
         )
 
 
+# Literal copies of the straightforward kernels, kept as the references the
+# fast kernels in oracle.checksum / oracle.resample must reproduce exactly.
+def _ref_checksum(band):
+    a = np.asarray(band)
+    if np.issubdtype(a.dtype, np.floating):
+        a = np.clip(np.floor(a.astype(np.float64) + 0.5), -2147483647, 2147483647)
+    flat = a.astype(np.int64).ravel()
+    primes = np.resize(np.array([7, 11, 13, 17, 19, 23, 29, 31, 37, 41, 43]), flat.size)
+    return int(int(np.fmod(flat, primes).sum(dtype=np.int64)) & 0xFFFF)
+
+
+def _ref_checksum_image(arr):
+    a = np.asarray(arr)
+    if a.ndim == 2:
+        return [_ref_checksum(a)]
+    return [_ref_checksum(a[:, :, c]) for c in range(a.shape[2])]
+
+
+def _ref_nearest(src, out_h, out_w):
+    h, w = src.shape[0], src.shape[1]
+    sy = np.floor((np.arange(out_h) + 0.5) * (h / out_h)).astype(np.int64)
+    sx = np.floor((np.arange(out_w) + 0.5) * (w / out_w)).astype(np.int64)
+    return src[np.ix_(np.clip(sy, 0, h - 1), np.clip(sx, 0, w - 1))]
+
+
+def _ref_average_2x2(src):
+    h, w = src.shape[0] & ~1, src.shape[1] & ~1
+    s = src[:h, :w].astype(np.float64)
+    blocks = (s.reshape(h // 2, 2, w // 2, 2, s.shape[2]) if s.ndim == 3
+              else s.reshape(h // 2, 2, w // 2, 2))
+    return np.floor(blocks.mean(axis=(1, 3)) + 0.5).astype(np.uint8)
+
+
+def _covered_window(rng, h, w, bands):
+    """A zero canvas with one random window of random pixels pasted in,
+    like a base tile whose source only partly covers it."""
+    shape = (h, w) if bands == 1 else (h, w, bands)
+    canvas = np.zeros(shape, dtype=np.uint8)
+    y0, x0 = rng.integers(0, h), rng.integers(0, w)
+    y1, x1 = rng.integers(y0 + 1, h + 1), rng.integers(x0 + 1, w + 1)
+    canvas[y0:y1, x0:x1] = rng.integers(0, 256, canvas[y0:y1, x0:x1].shape)
+    return canvas
+
+
+class TestFastKernelsMatchReference:
+    @pytest.mark.parametrize("bands", [1, 3, 4])
+    def test_checksum_covered_windows(self, bands):
+        rng = np.random.default_rng(bands)
+        for _ in range(60):
+            t = _covered_window(rng, 256, 256, bands)
+            assert CS.checksum_image(t) == _ref_checksum_image(t)
+            if bands == 1:
+                assert CS.checksum(t) == _ref_checksum(t)
+
+    @pytest.mark.parametrize("bands", [1, 3, 4])
+    def test_checksum_empty_and_full(self, bands):
+        shape = (256, 256) if bands == 1 else (256, 256, bands)
+        zero = np.zeros(shape, dtype=np.uint8)
+        assert CS.checksum_image(zero) == [0] * bands
+        full = np.full(shape, 255, dtype=np.uint8)
+        assert CS.checksum_image(full) == _ref_checksum_image(full)
+        noise = np.random.default_rng(9).integers(1, 256, shape, dtype=np.uint8)
+        assert CS.checksum_image(noise) == _ref_checksum_image(noise)
+
+    @pytest.mark.parametrize("h,w", [(1, 1), (3, 13), (37, 22), (250, 131),
+                                     (600, 517), (11, 11), (0, 5)])
+    def test_checksum_odd_shapes(self, h, w):
+        rng = np.random.default_rng(h * 1000 + w)
+        for bands in (1, 2, 3):
+            t = (_covered_window(rng, h, w, bands) if h else
+                 np.zeros((h, w, bands), dtype=np.uint8))
+            assert CS.checksum_image(t) == _ref_checksum_image(t)
+            if t.ndim == 3:  # strided single-band views
+                assert CS.checksum(t[:, :, -1]) == _ref_checksum(t[:, :, -1])
+            assert CS.checksum_image(t[::-1]) == _ref_checksum_image(t[::-1])
+
+    def test_checksum_other_dtypes(self):
+        rng = np.random.default_rng(5)
+        i16 = rng.integers(-3000, 3000, (40, 29, 3)).astype(np.int16)
+        f32 = rng.normal(0.0, 500.0, (33, 47)).astype(np.float32)
+        u16 = rng.integers(0, 65535, (19, 23)).astype(np.uint16)
+        for a in (i16, f32, u16, f32.astype(np.float64)):
+            assert CS.checksum_image(a) == _ref_checksum_image(a)
+
+    @pytest.mark.parametrize("bands", [1, 3, 4])
+    def test_nearest(self, bands):
+        rng = np.random.default_rng(bands)
+        for _ in range(40):
+            h, w = rng.integers(1, 300, 2)
+            oh, ow = rng.integers(1, 300, 2)
+            shape = (h, w) if bands == 1 else (h, w, bands)
+            src = rng.integers(0, 256, shape, dtype=np.uint8)
+            np.testing.assert_array_equal(
+                RS.resample_nearest(src, oh, ow), _ref_nearest(src, oh, ow))
+        f = rng.normal(size=(17, 9))
+        np.testing.assert_array_equal(RS.resample_nearest(f, 40, 3),
+                                      _ref_nearest(f, 40, 3))
+
+    @pytest.mark.parametrize("bands", [1, 3, 4])
+    def test_average_2x2_uint8(self, bands):
+        rng = np.random.default_rng(bands)
+        for h, w in ((256, 256), (2, 2), (7, 13), (130, 63)):
+            shape = (h, w) if bands == 1 else (h, w, bands)
+            for t in (rng.integers(0, 256, shape, dtype=np.uint8),
+                      np.full(shape, 255, dtype=np.uint8),
+                      _covered_window(rng, h, w, bands)):
+                got = RS.average_2x2(t)
+                assert got.dtype == np.uint8
+                np.testing.assert_array_equal(got, _ref_average_2x2(t))
+
+
 class TestKNN:
     def test_brute_force(self):
         qx, qy = np.array([0.0, 10.0]), np.array([0.0, 10.0])
