@@ -1,10 +1,15 @@
 """Raster operators over the image table — gdal_translate / gdalwarp /
 gdaldem / gdal_footprint / zonal-stats / InterpolateAtPoint analogues.
 
-Every operator is ``mapInPandas`` over image rows (map-only, Arrow batches,
-numpy kernels): at 10^12 images the work is embarrassingly parallel with
-zero shuffle; aggregation-style ops (zonal stats, mosaic) emit per-image
-PARTIALS and merge with one groupBy — the map-side-combine shape.
+Every operator that reads pixels runs through the one per-image loop,
+``imagemap.map_images`` (map-only, Arrow batches, numpy kernels): at 10^12
+images the work is embarrassingly parallel with zero shuffle;
+aggregation-style ops (zonal stats, mosaic) emit per-image PARTIALS and
+merge with one groupBy — the map-side-combine shape. Four keep their own
+loop: ``sample_at_points`` (groups joined points per image),
+``raster_compare`` (two blobs, no decode when the bytes are equal),
+``raster_to_xyz`` (one per-pixel frame per image) and ``dataset_check``
+(the decode error is its output).
 """
 
 from __future__ import annotations
@@ -21,6 +26,7 @@ from ..oracle.checksum import checksum_image
 from ..oracle.resample import resample_nearest
 from ..oracle.tiling import geotransform_3857
 from ..oracle.warp import warp_3857_to_4326
+from .imagemap import map_images
 
 
 def _resample_any(a, out_h, out_w, method: str):
@@ -66,88 +72,80 @@ def translate(images: DataFrame, srcwin=None, outsize=None, scale=None,
     rescale, -b band selection (1-based list), -expand rgb|gray (single-band
     replication, the palette-expansion analogue), -ot type cast.
     Emits re-encoded PNG rows + band-1 checksum."""
-    r_method = r  # the row loop below rebinds ``r`` inside the closure
 
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                a = decode(r.bytes)
-                if projwin is not None:
-                    ulx, uly, lrx, lry = projwin
-                    gt = geotransform_3857(
-                        r.lon, r.lat, a.shape[1], a.shape[0], r.gsd_m
-                    )
-                    xo = int(np.floor((ulx - gt[0]) / gt[1] + 0.001))
-                    yo = int(np.floor((uly - gt[3]) / gt[5] + 0.001))
-                    # Size from the SNAPPED ULX/ULY, not the requested one
-                    # (gdal_translate_lib.cpp:981-1000: ceil((lrx - adfGeoTransform
-                    # [0] - xo*xres)/xres - 0.001)); keeping the raw ulx here
-                    # gave a possible off-by-one.
-                    xs = int(np.ceil((lrx - (gt[0] + xo * gt[1])) / gt[1] - 0.001))
-                    ys = int(np.ceil((lry - (gt[3] + yo * gt[5])) / gt[5] - 0.001))
-                    # Out-of-bounds: intersect the computed window with the
-                    # raster extent explicitly (w2/h2 reflect the clipped
-                    # window) instead of silently shifting the origin; skip
-                    # rows whose window falls completely outside
-                    # (gdal_translate_lib.cpp "falls completely outside").
-                    x0, y0 = max(0, xo), max(0, yo)
-                    x1 = min(xo + max(xs, 0), a.shape[1])
-                    y1 = min(yo + max(ys, 0), a.shape[0])
-                    if x1 <= x0 or y1 <= y0:
-                        continue
-                    a = a[y0:y1, x0:x1]
-                if srcwin is not None:
-                    x, y, ww, hh = srcwin
-                    a = a[y : y + hh, x : x + ww]
-                if bands is not None:
-                    a = a[:, :, [b - 1 for b in bands]]
-                    if a.shape[2] == 1:
-                        a = a[:, :, 0]
-                if expand in ("rgb", "rgba") and a.ndim == 2:
-                    # -expand rgb|rgba (gdal_translate_lib.cpp): a 1-band
-                    # paletted raster expands through its color table; a
-                    # plain gray band replicates (grayscale identity PCT)
-                    pal = palette(bytes(r.bytes))
-                    if pal is not None:
-                        a = pal[a]
-                    else:
-                        a = np.stack([a, a, a], axis=2)
-                    if expand == "rgba":
-                        alpha = np.full(a.shape[:2] + (1,), 255, np.uint8)
-                        a = np.concatenate([a, alpha], axis=2)
-                elif expand == "gray" and a.ndim == 2:
-                    # gray expansion of a paletted band takes the table's
-                    # c1 component (reference requires a gray table)
-                    pal = palette(bytes(r.bytes))
-                    if pal is not None:
-                        a = pal[a][:, :, 0]
-                elif expand == "gray" and a.ndim == 3:
-                    a = a.mean(axis=2)
-                    a = np.clip(np.floor(a + 0.5), 0, 255).astype(np.uint8)
-                if outsize is not None:
-                    a = _resample_any(a, outsize[1], outsize[0], r_method)
-                if scale is not None:
-                    s0, s1, d0, d1 = scale
-                    af = a.astype(np.float64)
-                    af = (af - s0) / (s1 - s0) * (d1 - d0) + d0
-                    a = np.clip(np.floor(af + 0.5), 0, 255).astype(np.uint8)
-                if ot is not None:
-                    a = a.astype(ot)
-                h2, w2 = a.shape[0], a.shape[1]
-                cs = checksum_image(a)
-                enc = encode(a.astype(np.uint8) if a.dtype != np.uint8 else a, "png")
-                out.append(
-                    dict(image_id=r.image_id, w2=int(w2), h2=int(h2),
-                         bytes=enc, cs1=cs[0])
-                )
-            yield pd.DataFrame(out, columns=["image_id", "w2", "h2", "bytes", "cs1"])
+    def per_image(a, row):
+        if projwin is not None:
+            ulx, uly, lrx, lry = projwin
+            gt = geotransform_3857(
+                row.lon, row.lat, a.shape[1], a.shape[0], row.gsd_m
+            )
+            xo = int(np.floor((ulx - gt[0]) / gt[1] + 0.001))
+            yo = int(np.floor((uly - gt[3]) / gt[5] + 0.001))
+            # Size from the SNAPPED ULX/ULY, not the requested one
+            # (gdal_translate_lib.cpp:981-1000: ceil((lrx - adfGeoTransform
+            # [0] - xo*xres)/xres - 0.001)); keeping the raw ulx here
+            # gave a possible off-by-one.
+            xs = int(np.ceil((lrx - (gt[0] + xo * gt[1])) / gt[1] - 0.001))
+            ys = int(np.ceil((lry - (gt[3] + yo * gt[5])) / gt[5] - 0.001))
+            # Out-of-bounds: intersect the computed window with the
+            # raster extent explicitly (w2/h2 reflect the clipped
+            # window) instead of silently shifting the origin; skip
+            # rows whose window falls completely outside
+            # (gdal_translate_lib.cpp "falls completely outside").
+            x0, y0 = max(0, xo), max(0, yo)
+            x1 = min(xo + max(xs, 0), a.shape[1])
+            y1 = min(yo + max(ys, 0), a.shape[0])
+            if x1 <= x0 or y1 <= y0:
+                return
+            a = a[y0:y1, x0:x1]
+        if srcwin is not None:
+            x, y, ww, hh = srcwin
+            a = a[y : y + hh, x : x + ww]
+        if bands is not None:
+            a = a[:, :, [b - 1 for b in bands]]
+            if a.shape[2] == 1:
+                a = a[:, :, 0]
+        if expand in ("rgb", "rgba") and a.ndim == 2:
+            # -expand rgb|rgba (gdal_translate_lib.cpp): a 1-band
+            # paletted raster expands through its color table; a
+            # plain gray band replicates (grayscale identity PCT)
+            pal = palette(row.bytes)
+            if pal is not None:
+                a = pal[a]
+            else:
+                a = np.stack([a, a, a], axis=2)
+            if expand == "rgba":
+                alpha = np.full(a.shape[:2] + (1,), 255, np.uint8)
+                a = np.concatenate([a, alpha], axis=2)
+        elif expand == "gray" and a.ndim == 2:
+            # gray expansion of a paletted band takes the table's
+            # c1 component (reference requires a gray table)
+            pal = palette(row.bytes)
+            if pal is not None:
+                a = pal[a][:, :, 0]
+        elif expand == "gray" and a.ndim == 3:
+            a = a.mean(axis=2)
+            a = np.clip(np.floor(a + 0.5), 0, 255).astype(np.uint8)
+        if outsize is not None:
+            a = _resample_any(a, outsize[1], outsize[0], r)
+        if scale is not None:
+            s0, s1, d0, d1 = scale
+            af = a.astype(np.float64)
+            af = (af - s0) / (s1 - s0) * (d1 - d0) + d0
+            a = np.clip(np.floor(af + 0.5), 0, 255).astype(np.uint8)
+        if ot is not None:
+            a = a.astype(ot)
+        h2, w2 = a.shape[0], a.shape[1]
+        cs = checksum_image(a)
+        enc = encode(a.astype(np.uint8) if a.dtype != np.uint8 else a, "png")
+        yield dict(image_id=row.image_id, w2=int(w2), h2=int(h2),
+                   bytes=enc, cs1=cs[0])
 
     cols = (["image_id", "bytes", "lon", "lat", "gsd_m"]
             if projwin is not None else ["image_id", "bytes"])
-    return images.select(*cols).mapInPandas(
-        gen, schema="image_id string, w2 int, h2 int, bytes binary, cs1 long"
-    )
+    return map_images(
+        images, cols,
+        "image_id string, w2 int, h2 int, bytes binary, cs1 long", per_image)
 
 
 def warp_to_wgs84(images: DataFrame, method: str = "nearest",
@@ -179,51 +177,41 @@ def warp_to_wgs84(images: DataFrame, method: str = "nearest",
     SuggestedWarpOutput grid (the -te/-tr/-ts options)."""
     from ..oracle import geom as G
 
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                a = decode(r.bytes)
-                if collar_px and src_nodata is not None:
-                    c = int(collar_px)
-                    a = a.copy()
-                    a[:c, :] = src_nodata
-                    a[-c:, :] = src_nodata
-                    a[:, :c] = src_nodata
-                    a[:, -c:] = src_nodata
-                cut = None
-                if cutline_col is not None:
-                    kind, data = G.parse_wkb(bytes(getattr(r, cutline_col)))
-                    cut = (data if kind == "polygon"
-                           else [ring for part in data for ring in part])
-                gt = geotransform_3857(r.lon, r.lat, a.shape[1], a.shape[0], r.gsd_m)
-                warped, dst_gt = warp_3857_to_4326(
-                    a, gt, method=method, approx_every=approx_every,
-                    src_nodata=src_nodata, dst_nodata=dst_nodata,
-                    cutline=cut, te=te, tr=tr, ts=ts,
-                    blend_dist=blend_dist,
-                )
-                cs = checksum_image(warped)
-                out.append(
-                    dict(
-                        image_id=r.image_id,
-                        bytes=encode(warped, "png"),
-                        dst_gt=[float(v) for v in dst_gt],
-                        cs1=cs[0], cs2=cs[1], cs3=cs[2],
-                    )
-                )
-            yield pd.DataFrame(
-                out, columns=["image_id", "bytes", "dst_gt", "cs1", "cs2", "cs3"]
-            )
+    def per_image(a, r):
+        if collar_px and src_nodata is not None:
+            c = int(collar_px)
+            a = a.copy()
+            a[:c, :] = src_nodata
+            a[-c:, :] = src_nodata
+            a[:, :c] = src_nodata
+            a[:, -c:] = src_nodata
+        cut = None
+        if cutline_col is not None:
+            kind, data = G.parse_wkb(bytes(getattr(r, cutline_col)))
+            cut = (data if kind == "polygon"
+                   else [ring for part in data for ring in part])
+        gt = geotransform_3857(r.lon, r.lat, a.shape[1], a.shape[0], r.gsd_m)
+        warped, dst_gt = warp_3857_to_4326(
+            a, gt, method=method, approx_every=approx_every,
+            src_nodata=src_nodata, dst_nodata=dst_nodata,
+            cutline=cut, te=te, tr=tr, ts=ts,
+            blend_dist=blend_dist,
+        )
+        cs = checksum_image(warped)
+        yield dict(
+            image_id=r.image_id,
+            bytes=encode(warped, "png"),
+            dst_gt=[float(v) for v in dst_gt],
+            cs1=cs[0], cs2=cs[1], cs3=cs[2],
+        )
 
     cols = ["image_id", "bytes", "lon", "lat", "gsd_m"]
     if cutline_col is not None:
         cols.append(cutline_col)
-    return images.select(*cols).mapInPandas(
-        gen,
-        schema="image_id string, bytes binary, dst_gt array<double>, "
-               "cs1 long, cs2 long, cs3 long",
-    )
+    return map_images(
+        images, cols,
+        "image_id string, bytes binary, dst_gt array<double>, cs1 long, "
+        "cs2 long, cs3 long", per_image)
 
 
 def warp_utm(images: DataFrame, method: str = "nearest") -> DataFrame:
@@ -237,28 +225,23 @@ def warp_utm(images: DataFrame, method: str = "nearest") -> DataFrame:
     from ..oracle import utm as U
     from ..oracle.warp import warp_utm_to_4326
 
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                a = decode(r.bytes)
-                h, w = a.shape[0], a.shape[1]
-                zone = U.utm_zone_for_lon(float(r.lon))
-                south = float(r.lat) < 0
-                e0, n0 = U.lonlat_to_utm(float(r.lon), float(r.lat), zone, south)
-                gt = [float(e0) - w / 2.0 * r.gsd_m, float(r.gsd_m), 0.0,
-                      float(n0) + h / 2.0 * r.gsd_m, 0.0, -float(r.gsd_m)]
-                warped, dst_gt = warp_utm_to_4326(a, gt, zone, method, south)
-                cs = checksum_image(warped)
-                out.append(dict(
-                    image_id=r.image_id, zone=int(zone),
-                    cs1=cs[0], cs2=cs[1], cs3=cs[2],
-                ))
-            yield pd.DataFrame(out, columns=["image_id", "zone", "cs1", "cs2", "cs3"])
+    def per_image(a, r):
+        h, w = a.shape[0], a.shape[1]
+        zone = U.utm_zone_for_lon(float(r.lon))
+        south = float(r.lat) < 0
+        e0, n0 = U.lonlat_to_utm(float(r.lon), float(r.lat), zone, south)
+        gt = [float(e0) - w / 2.0 * r.gsd_m, float(r.gsd_m), 0.0,
+              float(n0) + h / 2.0 * r.gsd_m, 0.0, -float(r.gsd_m)]
+        warped, dst_gt = warp_utm_to_4326(a, gt, zone, method, south)
+        cs = checksum_image(warped)
+        yield dict(
+            image_id=r.image_id, zone=int(zone),
+            cs1=cs[0], cs2=cs[1], cs3=cs[2],
+        )
 
-    return images.select("image_id", "bytes", "lon", "lat", "gsd_m").mapInPandas(
-        gen, schema="image_id string, zone int, cs1 long, cs2 long, cs3 long"
-    )
+    return map_images(
+        images, ["image_id", "bytes", "lon", "lat", "gsd_m"],
+        "image_id string, zone int, cs1 long, cs2 long, cs3 long", per_image)
 
 
 def pansharpen(images: DataFrame, weights=None, ratio: int = 4) -> DataFrame:
@@ -274,36 +257,29 @@ def pansharpen(images: DataFrame, weights=None, ratio: int = 4) -> DataFrame:
     emitted PSNR quantifies how much pan detail the fusion recovers."""
     from ..oracle.resample import psnr, resample_average, resample_bilinear
 
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                a = decode(r.bytes)
-                h, w, nb = a.shape[0], a.shape[1], a.shape[2]
-                wts = np.asarray(
-                    weights if weights is not None else [1.0 / nb] * nb
-                )
-                pan = a.astype(np.float64).mean(axis=2)
-                spec_lo = resample_average(a, max(1, h // ratio), max(1, w // ratio))
-                spec_up = resample_bilinear(spec_lo, h, w).astype(np.float64)
-                pseudo = (spec_up * wts[None, None, :]).sum(axis=2)
-                factor = np.where(pseudo != 0.0, pan / np.where(pseudo == 0, 1, pseudo), 0.0)
-                fused = np.clip(
-                    np.floor(spec_up * factor[:, :, None] + 0.5), 0, 255
-                ).astype(np.uint8)
-                cs = checksum_image(fused)
-                out.append(dict(
-                    image_id=r.image_id, cs1=cs[0], cs2=cs[1], cs3=cs[2],
-                    psnr_vs_src=float(np.round(min(psnr(fused, a), 999.0), 2)),
-                ))
-            yield pd.DataFrame(
-                out, columns=["image_id", "cs1", "cs2", "cs3", "psnr_vs_src"]
-            )
+    def per_image(a, r):
+        h, w, nb = a.shape[0], a.shape[1], a.shape[2]
+        wts = np.asarray(
+            weights if weights is not None else [1.0 / nb] * nb
+        )
+        pan = a.astype(np.float64).mean(axis=2)
+        spec_lo = resample_average(a, max(1, h // ratio), max(1, w // ratio))
+        spec_up = resample_bilinear(spec_lo, h, w).astype(np.float64)
+        pseudo = (spec_up * wts[None, None, :]).sum(axis=2)
+        factor = np.where(pseudo != 0.0, pan / np.where(pseudo == 0, 1, pseudo), 0.0)
+        fused = np.clip(
+            np.floor(spec_up * factor[:, :, None] + 0.5), 0, 255
+        ).astype(np.uint8)
+        cs = checksum_image(fused)
+        yield dict(
+            image_id=r.image_id, cs1=cs[0], cs2=cs[1], cs3=cs[2],
+            psnr_vs_src=float(np.round(min(psnr(fused, a), 999.0), 2)),
+        )
 
-    return images.select("image_id", "bytes").mapInPandas(
-        gen,
-        schema="image_id string, cs1 long, cs2 long, cs3 long, psnr_vs_src double",
-    )
+    return map_images(
+        images, ["image_id", "bytes"],
+        "image_id string, cs1 long, cs2 long, cs3 long, psnr_vs_src double",
+        per_image)
 
 
 def dem_metrics(images: DataFrame, operation: str = "hillshade",
@@ -317,54 +293,49 @@ def dem_metrics(images: DataFrame, operation: str = "hillshade",
     multidirectional (:1255 USGS weights), igor (:947).
     Emits per-image result checksum + summary stats."""
 
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                a = decode(r.bytes)[:, :, 0].astype(np.float64)
-                res = float(r.gsd_m)
-                if operation == "hillshade":
-                    if variant == "regular" and alg == "horn":
-                        v = DEM.hillshade(a, res, res, z_factor, azimuth,
-                                          altitude)
-                    else:
-                        v = DEM.hillshade_variant(a, res, res, z_factor,
-                                                  azimuth, altitude,
-                                                  variant, alg)
-                elif operation == "slope":
-                    v = (DEM.slope_degrees_zt(a, res, res, z_factor)
-                         if alg == "zt"
-                         else DEM.slope_degrees(a, res, res, z_factor))
-                elif operation == "aspect":
-                    v = (DEM.aspect_degrees_zt(a, res, res) if alg == "zt"
-                         else DEM.aspect_degrees(a, res, res))
-                elif operation == "tri":
-                    v = DEM.tri(a)
-                elif operation == "tpi":
-                    v = DEM.tpi(a)
-                elif operation == "roughness":
-                    v = DEM.roughness(a)
-                elif operation == "color-relief":
-                    # gdaldem color-relief (apps/gdaldem_lib.cpp
-                    # GDALColorReliefProcess), shared with the pipeline
-                    # color-map step
-                    v = DEM.color_relief_rgb(a, color_mode)
-                else:
-                    raise ValueError(operation)
-                out.append(
-                    dict(
-                        image_id=r.image_id,
-                        cs=checksum_image(np.asarray(v))[0],
-                        vmin=float(np.round(np.min(v), 4)),
-                        vmax=float(np.round(np.max(v), 4)),
-                        vmean=float(np.round(np.mean(v), 4)),
-                    )
-                )
-            yield pd.DataFrame(out, columns=["image_id", "cs", "vmin", "vmax", "vmean"])
+    def per_image(a, r):
+        a = a[:, :, 0].astype(np.float64)
+        res = float(r.gsd_m)
+        if operation == "hillshade":
+            if variant == "regular" and alg == "horn":
+                v = DEM.hillshade(a, res, res, z_factor, azimuth,
+                                  altitude)
+            else:
+                v = DEM.hillshade_variant(a, res, res, z_factor,
+                                          azimuth, altitude,
+                                          variant, alg)
+        elif operation == "slope":
+            v = (DEM.slope_degrees_zt(a, res, res, z_factor)
+                 if alg == "zt"
+                 else DEM.slope_degrees(a, res, res, z_factor))
+        elif operation == "aspect":
+            v = (DEM.aspect_degrees_zt(a, res, res) if alg == "zt"
+                 else DEM.aspect_degrees(a, res, res))
+        elif operation == "tri":
+            v = DEM.tri(a)
+        elif operation == "tpi":
+            v = DEM.tpi(a)
+        elif operation == "roughness":
+            v = DEM.roughness(a)
+        elif operation == "color-relief":
+            # gdaldem color-relief (apps/gdaldem_lib.cpp
+            # GDALColorReliefProcess), shared with the pipeline
+            # color-map step
+            v = DEM.color_relief_rgb(a, color_mode)
+        else:
+            raise ValueError(operation)
+        yield dict(
+            image_id=r.image_id,
+            cs=checksum_image(np.asarray(v))[0],
+            vmin=float(np.round(np.min(v), 4)),
+            vmax=float(np.round(np.max(v), 4)),
+            vmean=float(np.round(np.mean(v), 4)),
+        )
 
-    return images.select("image_id", "bytes", "gsd_m").mapInPandas(
-        gen, schema="image_id string, cs long, vmin double, vmax double, vmean double"
-    )
+    return map_images(
+        images, ["image_id", "bytes", "gsd_m"],
+        "image_id string, cs long, vmin double, vmax double, vmean double",
+        per_image)
 
 
 def _pixel_func(expr: str, a: np.ndarray, k: float | None) -> np.ndarray:
@@ -469,30 +440,24 @@ def band_calc(images: DataFrame, expr: str = "norm_diff",
     per-image min/max/mean stats out, NaNs excluded like GDAL's
     stats-over-masked-pixels."""
 
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                a = decode(r.bytes).astype(np.float64)
-                if a.ndim == 2:
-                    a = a[:, :, None]
-                v = _pixel_func(expr, a, k)
-                vv = v[~np.isnan(v)]
-                if vv.size == 0:
-                    vv = np.zeros(1)
-                out.append(
-                    dict(
-                        image_id=r.image_id,
-                        vmin=float(np.round(vv.min(), 6)),
-                        vmax=float(np.round(vv.max(), 6)),
-                        vmean=float(np.round(vv.mean(), 6)),
-                    )
-                )
-            yield pd.DataFrame(out, columns=["image_id", "vmin", "vmax", "vmean"])
+    def per_image(a, r):
+        a = a.astype(np.float64)
+        if a.ndim == 2:
+            a = a[:, :, None]
+        v = _pixel_func(expr, a, k)
+        vv = v[~np.isnan(v)]
+        if vv.size == 0:
+            vv = np.zeros(1)
+        yield dict(
+            image_id=r.image_id,
+            vmin=float(np.round(vv.min(), 6)),
+            vmax=float(np.round(vv.max(), 6)),
+            vmean=float(np.round(vv.mean(), 6)),
+        )
 
-    return images.select("image_id", "bytes").mapInPandas(
-        gen, schema="image_id string, vmin double, vmax double, vmean double"
-    )
+    return map_images(
+        images, ["image_id", "bytes"],
+        "image_id string, vmin double, vmax double, vmean double", per_image)
 
 
 def footprint(images: DataFrame, threshold: int = 0, mode: str = "traced",
@@ -535,58 +500,50 @@ def footprint(images: DataFrame, threshold: int = 0, mode: str = "traced",
             return "polygon", polys[0]
         return "multipolygon", polys
 
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                a = decode(r.bytes)
-                mask = a[:, :, 0] > threshold
-                n = int(mask.sum())
-                h, w = mask.shape
-                gt = geotransform_3857(r.lon, r.lat, w, h, r.gsd_m)
-                if n == 0:
-                    out.append(dict(image_id=r.image_id, n_valid=0, wkb=None,
-                                    area_m2=0.0, n_rings=0))
-                    continue
-                if mode == "bbox":
-                    ys, xs = np.nonzero(mask)
-                    x0, x1 = xs.min(), xs.max() + 1
-                    y0, y1 = ys.min(), ys.max() + 1
-                    minx, maxx = gt[0] + x0 * gt[1], gt[0] + x1 * gt[1]
-                    maxy, miny = gt[3] + y0 * gt[5], gt[3] + y1 * gt[5]
-                    out.append(dict(
-                        image_id=r.image_id, n_valid=n,
-                        wkb=wkb_polygon([(minx, miny), (maxx, miny),
-                                         (maxx, maxy), (minx, maxy),
-                                         (minx, miny)]),
-                        area_m2=float((maxx - minx) * (maxy - miny)),
-                        n_rings=1,
-                    ))
-                    continue
-                if h > trace_max or w > trace_max:
-                    dh, dw = min(h, trace_max), min(w, trace_max)
-                    tmask = resample_nearest(mask.astype(np.uint8), dh, dw) > 0
-                    tgt = [gt[0], gt[1] * w / dw, 0.0, gt[3], 0.0, gt[5] * h / dh]
-                else:
-                    tmask, tgt = mask, gt
-                kind, data = _trace_mask(tmask, tgt)
-                g = (kind, data)
-                out.append(dict(
-                    image_id=r.image_id, n_valid=n,
-                    wkb=G.to_wkb(kind, data),
-                    area_m2=float(G.area(g)),
-                    n_rings=int(sum(len(p) for p in data)
-                                if kind == "multipolygon" else len(data)),
-                ))
-            yield pd.DataFrame(
-                out, columns=["image_id", "n_valid", "wkb", "area_m2", "n_rings"]
+    def per_image(a, r):
+        mask = a[:, :, 0] > threshold
+        n = int(mask.sum())
+        h, w = mask.shape
+        gt = geotransform_3857(r.lon, r.lat, w, h, r.gsd_m)
+        if n == 0:
+            yield dict(image_id=r.image_id, n_valid=0, wkb=None,
+                       area_m2=0.0, n_rings=0)
+            return
+        if mode == "bbox":
+            ys, xs = np.nonzero(mask)
+            x0, x1 = xs.min(), xs.max() + 1
+            y0, y1 = ys.min(), ys.max() + 1
+            minx, maxx = gt[0] + x0 * gt[1], gt[0] + x1 * gt[1]
+            maxy, miny = gt[3] + y0 * gt[5], gt[3] + y1 * gt[5]
+            yield dict(
+                image_id=r.image_id, n_valid=n,
+                wkb=wkb_polygon([(minx, miny), (maxx, miny),
+                                 (maxx, maxy), (minx, maxy),
+                                 (minx, miny)]),
+                area_m2=float((maxx - minx) * (maxy - miny)),
+                n_rings=1,
             )
+            return
+        if h > trace_max or w > trace_max:
+            dh, dw = min(h, trace_max), min(w, trace_max)
+            tmask = resample_nearest(mask.astype(np.uint8), dh, dw) > 0
+            tgt = [gt[0], gt[1] * w / dw, 0.0, gt[3], 0.0, gt[5] * h / dh]
+        else:
+            tmask, tgt = mask, gt
+        kind, data = _trace_mask(tmask, tgt)
+        g = (kind, data)
+        yield dict(
+            image_id=r.image_id, n_valid=n,
+            wkb=G.to_wkb(kind, data),
+            area_m2=float(G.area(g)),
+            n_rings=int(sum(len(p) for p in data)
+                        if kind == "multipolygon" else len(data)),
+        )
 
-    return images.select("image_id", "bytes", "lon", "lat", "gsd_m").mapInPandas(
-        gen,
-        schema="image_id string, n_valid long, wkb binary, area_m2 double, "
-               "n_rings int",
-    )
+    return map_images(
+        images, ["image_id", "bytes", "lon", "lat", "gsd_m"],
+        "image_id string, n_valid long, wkb binary, area_m2 double, "
+        "n_rings int", per_image)
 
 
 def zonal_stats(images: DataFrame, zone_zoom: int = 9) -> DataFrame:
@@ -603,53 +560,44 @@ def zonal_stats(images: DataFrame, zone_zoom: int = 9) -> DataFrame:
     median/mode/minority/variety read the merged histogram in a tiny
     factorizable UDF over one row per zone. No per-pixel rows ever shuffle."""
 
-    def partials(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                a8 = decode(r.bytes)[:, :, 0]
-                a = a8.astype(np.float64)
-                h, w = a.shape
-                gt = geotransform_3857(r.lon, r.lat, w, h, r.gsd_m)
-                # pixel-center mercator coords
-                mx = gt[0] + (np.arange(w) + 0.5) * gt[1]
-                my = gt[3] + (np.arange(h) + 0.5) * gt[5]
-                tx, _ = M.pixels_to_tile(*M.meters_to_pixels(mx, np.zeros(w), zone_zoom))
-                _, ty = M.pixels_to_tile(*M.meters_to_pixels(np.zeros(h), my, zone_zoom))
-                n = 2**zone_zoom - 1
-                tx = np.clip(tx, 0, n)
-                ty = np.clip(ty, 0, n)
-                zone = (tx[None, :] << 32) | ty[:, None]
-                flat_zone = zone.ravel()
-                flat_val = a.ravel()
-                uniq, inv = np.unique(flat_zone, return_inverse=True)
-                cnt = np.bincount(inv)
-                s = np.bincount(inv, weights=flat_val)
-                s2 = np.bincount(inv, weights=flat_val * flat_val)
-                vmin = np.full(uniq.size, np.inf)
-                np.minimum.at(vmin, inv, flat_val)
-                vmax = np.full(uniq.size, -np.inf)
-                np.maximum.at(vmax, inv, flat_val)
-                # per-zone 256-bin histogram in one bincount over a fused key
-                fused = inv.astype(np.int64) * 256 + a8.ravel()
-                hist = np.bincount(fused, minlength=uniq.size * 256).reshape(
-                    uniq.size, 256
-                )
-                for j, z in enumerate(uniq):
-                    out.append(
-                        dict(zone=int(z), cnt=int(cnt[j]), s=float(s[j]),
-                             s2=float(s2[j]), vmin=float(vmin[j]),
-                             vmax=float(vmax[j]), hist=hist[j].tolist())
-                    )
-            yield pd.DataFrame(
-                out, columns=["zone", "cnt", "s", "s2", "vmin", "vmax", "hist"]
-            )
+    def per_image(a8, r):
+        a8 = a8[:, :, 0]
+        a = a8.astype(np.float64)
+        h, w = a.shape
+        gt = geotransform_3857(r.lon, r.lat, w, h, r.gsd_m)
+        # pixel-center mercator coords
+        mx = gt[0] + (np.arange(w) + 0.5) * gt[1]
+        my = gt[3] + (np.arange(h) + 0.5) * gt[5]
+        tx, _ = M.pixels_to_tile(*M.meters_to_pixels(mx, np.zeros(w), zone_zoom))
+        _, ty = M.pixels_to_tile(*M.meters_to_pixels(np.zeros(h), my, zone_zoom))
+        n = 2**zone_zoom - 1
+        tx = np.clip(tx, 0, n)
+        ty = np.clip(ty, 0, n)
+        zone = (tx[None, :] << 32) | ty[:, None]
+        flat_zone = zone.ravel()
+        flat_val = a.ravel()
+        uniq, inv = np.unique(flat_zone, return_inverse=True)
+        cnt = np.bincount(inv)
+        s = np.bincount(inv, weights=flat_val)
+        s2 = np.bincount(inv, weights=flat_val * flat_val)
+        vmin = np.full(uniq.size, np.inf)
+        np.minimum.at(vmin, inv, flat_val)
+        vmax = np.full(uniq.size, -np.inf)
+        np.maximum.at(vmax, inv, flat_val)
+        # per-zone 256-bin histogram in one bincount over a fused key
+        fused = inv.astype(np.int64) * 256 + a8.ravel()
+        hist = np.bincount(fused, minlength=uniq.size * 256).reshape(
+            uniq.size, 256
+        )
+        for j, z in enumerate(uniq):
+            yield dict(zone=int(z), cnt=int(cnt[j]), s=float(s[j]),
+                       s2=float(s2[j]), vmin=float(vmin[j]),
+                       vmax=float(vmax[j]), hist=hist[j].tolist())
 
-    part = images.select("image_id", "bytes", "lon", "lat", "gsd_m").mapInPandas(
-        partials,
-        schema="zone long, cnt long, s double, s2 double, vmin double, "
-               "vmax double, hist array<long>",
-    )
+    part = map_images(
+        images, ["image_id", "bytes", "lon", "lat", "gsd_m"],
+        "zone long, cnt long, s double, s2 double, vmin double, vmax double, "
+        "hist array<long>", per_image)
     agg = part.groupBy("zone").agg(
         F.sum("cnt").alias("pixel_count"),
         F.sum("s").alias("_s"),
@@ -784,27 +732,19 @@ def contour(images: DataFrame, levels=(64.0, 128.0, 192.0),
 
     lv = list(levels)
 
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                a = decode(r.bytes)[:, :, 0].astype(np.float64)
-                if downsample_to and (a.shape[0] > downsample_to
-                                      or a.shape[1] > downsample_to):
-                    a = resample_nearest(a, downsample_to, downsample_to)
-                for level, (n, ln) in sorted(contour_summary(a, lv).items()):
-                    out.append(
-                        dict(image_id=r.image_id, level=float(level),
-                             n_segments=int(n), total_len=float(np.round(ln, 4)))
-                    )
-            yield pd.DataFrame(
-                out, columns=["image_id", "level", "n_segments", "total_len"]
-            )
+    def per_image(a, r):
+        a = a[:, :, 0].astype(np.float64)
+        if downsample_to and (a.shape[0] > downsample_to
+                              or a.shape[1] > downsample_to):
+            a = resample_nearest(a, downsample_to, downsample_to)
+        for level, (n, ln) in sorted(contour_summary(a, lv).items()):
+            yield dict(image_id=r.image_id, level=float(level),
+                       n_segments=int(n), total_len=float(np.round(ln, 4)))
 
-    return images.select("image_id", "bytes").mapInPandas(
-        gen,
-        schema="image_id string, level double, n_segments int, total_len double",
-    )
+    return map_images(
+        images, ["image_id", "bytes"],
+        "image_id string, level double, n_segments int, total_len double",
+        per_image)
 
 
 def viewshed_stats(images: DataFrame, observer_height: float = 2.0,
@@ -823,43 +763,34 @@ def viewshed_stats(images: DataFrame, observer_height: float = 2.0,
     four corners (alg/los.cpp semantics)."""
     from ..oracle.viewshed import line_of_sight, viewshed
 
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                a = decode(r.bytes)[:, :, 0].astype(np.float64)
-                if downsample_to and (a.shape[0] > downsample_to
-                                      or a.shape[1] > downsample_to):
-                    a = resample_nearest(a, downsample_to, downsample_to)
-                if observer_yx is not None:
-                    oy, ox = int(observer_yx[0]), int(observer_yx[1])
-                else:
-                    oy, ox = a.shape[0] // 2, a.shape[1] // 2
-                vis = viewshed(a, oy, ox, observer_height, target_height,
-                               max_distance=max_distance,
-                               curve_coeff=curve_coeff, cell_size=cell_size)
-                corners = sum(
-                    line_of_sight(a, oy, ox, cy, cx, observer_height)
-                    for cy in (0, a.shape[0] - 1) for cx in (0, a.shape[1] - 1)
-                )
-                out.append(dict(
-                    image_id=r.image_id,
-                    n_visible=int(vis.sum()),
-                    frac_visible=float(np.round(vis.mean(), 4)),
-                    cs=checksum_image(vis.astype(np.uint8) * 255)[0],
-                    corners_visible=int(corners),
-                ))
-            yield pd.DataFrame(
-                out,
-                columns=["image_id", "n_visible", "frac_visible", "cs",
-                         "corners_visible"],
-            )
+    def per_image(a, r):
+        a = a[:, :, 0].astype(np.float64)
+        if downsample_to and (a.shape[0] > downsample_to
+                              or a.shape[1] > downsample_to):
+            a = resample_nearest(a, downsample_to, downsample_to)
+        if observer_yx is not None:
+            oy, ox = int(observer_yx[0]), int(observer_yx[1])
+        else:
+            oy, ox = a.shape[0] // 2, a.shape[1] // 2
+        vis = viewshed(a, oy, ox, observer_height, target_height,
+                       max_distance=max_distance,
+                       curve_coeff=curve_coeff, cell_size=cell_size)
+        corners = sum(
+            line_of_sight(a, oy, ox, cy, cx, observer_height)
+            for cy in (0, a.shape[0] - 1) for cx in (0, a.shape[1] - 1)
+        )
+        yield dict(
+            image_id=r.image_id,
+            n_visible=int(vis.sum()),
+            frac_visible=float(np.round(vis.mean(), 4)),
+            cs=checksum_image(vis.astype(np.uint8) * 255)[0],
+            corners_visible=int(corners),
+        )
 
-    return images.select("image_id", "bytes").mapInPandas(
-        gen,
-        schema="image_id string, n_visible long, frac_visible double, "
-               "cs long, corners_visible int",
-    )
+    return map_images(
+        images, ["image_id", "bytes"],
+        "image_id string, n_visible long, frac_visible double, cs long, "
+        "corners_visible int", per_image)
 
 
 def viewshed_height_stats(images: DataFrame, mode: str = "ground",
@@ -875,38 +806,32 @@ def viewshed_height_stats(images: DataFrame, mode: str = "ground",
     height raster."""
     from ..oracle.viewshed import viewshed_heights
 
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                a = decode(r.bytes)[:, :, 0].astype(np.float64)
-                if downsample_to and (a.shape[0] > downsample_to
-                                      or a.shape[1] > downsample_to):
-                    a = resample_nearest(a, downsample_to, downsample_to)
-                oy, ox = a.shape[0] // 2, a.shape[1] // 2
-                hmap = viewshed_heights(
-                    a, oy, ox, observer_height, mode=mode,
-                    max_distance=max_distance, curve_coeff=curve_coeff,
-                    cell_size=cell_size)
-                base = a if mode == "dem" else 0.0
-                deficit = hmap - base
-                out.append(dict(
-                    image_id=r.image_id,
-                    n_zero=int((np.abs(deficit) <= 1e-9).sum()),
-                    dmax_u=int(np.floor(deficit.max() * 1e6 + 0.5)),
-                    dmean_u=int(np.floor(deficit.mean() * 1e6 + 0.5)),
-                    cs=checksum_image(
-                        np.clip(np.floor(hmap + 0.5), 0, 255
-                                ).astype(np.uint8))[0],
-                ))
-            yield pd.DataFrame(
-                out, columns=["image_id", "n_zero", "dmax_u", "dmean_u",
-                              "cs"])
+    def per_image(a, r):
+        a = a[:, :, 0].astype(np.float64)
+        if downsample_to and (a.shape[0] > downsample_to
+                              or a.shape[1] > downsample_to):
+            a = resample_nearest(a, downsample_to, downsample_to)
+        oy, ox = a.shape[0] // 2, a.shape[1] // 2
+        hmap = viewshed_heights(
+            a, oy, ox, observer_height, mode=mode,
+            max_distance=max_distance, curve_coeff=curve_coeff,
+            cell_size=cell_size)
+        base = a if mode == "dem" else 0.0
+        deficit = hmap - base
+        yield dict(
+            image_id=r.image_id,
+            n_zero=int((np.abs(deficit) <= 1e-9).sum()),
+            dmax_u=int(np.floor(deficit.max() * 1e6 + 0.5)),
+            dmean_u=int(np.floor(deficit.mean() * 1e6 + 0.5)),
+            cs=checksum_image(
+                np.clip(np.floor(hmap + 0.5), 0, 255
+                        ).astype(np.uint8))[0],
+        )
 
-    return images.select("image_id", "bytes").mapInPandas(
-        gen, schema="image_id string, n_zero long, dmax_u long, "
-                    "dmean_u long, cs long"
-    )
+    return map_images(
+        images, ["image_id", "bytes"],
+        "image_id string, n_zero long, dmax_u long, dmean_u long, cs long",
+        per_image)
 
 
 def contour_lines(images: DataFrame, levels=(64.0, 128.0, 192.0),
@@ -922,34 +847,26 @@ def contour_lines(images: DataFrame, levels=(64.0, 128.0, 192.0),
 
     lv = list(levels)
 
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                a = decode(r.bytes)[:, :, 0].astype(np.float64)
-                if downsample_to and (a.shape[0] > downsample_to
-                                      or a.shape[1] > downsample_to):
-                    a = resample_nearest(a, downsample_to, downsample_to)
-                for level, lines in sorted(contour_polylines(a, lv).items()):
-                    if not lines:
-                        continue
-                    g = ("multilinestring", lines)
-                    out.append(dict(
-                        image_id=r.image_id, level=float(level),
-                        n_lines=len(lines),
-                        total_len=float(np.round(G.length(g), 4)),
-                        wkb=G.to_wkb(*g),
-                    ))
-            yield pd.DataFrame(
-                out,
-                columns=["image_id", "level", "n_lines", "total_len", "wkb"],
+    def per_image(a, r):
+        a = a[:, :, 0].astype(np.float64)
+        if downsample_to and (a.shape[0] > downsample_to
+                              or a.shape[1] > downsample_to):
+            a = resample_nearest(a, downsample_to, downsample_to)
+        for level, lines in sorted(contour_polylines(a, lv).items()):
+            if not lines:
+                continue
+            g = ("multilinestring", lines)
+            yield dict(
+                image_id=r.image_id, level=float(level),
+                n_lines=len(lines),
+                total_len=float(np.round(G.length(g), 4)),
+                wkb=G.to_wkb(*g),
             )
 
-    return images.select("image_id", "bytes").mapInPandas(
-        gen,
-        schema="image_id string, level double, n_lines int, "
-               "total_len double, wkb binary",
-    )
+    return map_images(
+        images, ["image_id", "bytes"],
+        "image_id string, level double, n_lines int, total_len double, "
+        "wkb binary", per_image)
 
 
 def contour_polygons(images: DataFrame, levels=(64.0, 128.0, 192.0),
@@ -1003,49 +920,40 @@ def contour_polygons(images: DataFrame, levels=(64.0, 128.0, 192.0),
             polys.append(rings)
         return polys
 
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                a = decode(r.bytes)[:, :, 0].astype(np.float64)
-                h, w = a.shape
-                gt = geotransform_3857(r.lon, r.lat, w, h, r.gsd_m)
-                if downsample_to and (h > downsample_to or w > downsample_to):
-                    dh, dw = min(h, downsample_to), min(w, downsample_to)
-                    a = resample_nearest(a, dh, dw)
-                    gt = [gt[0], gt[1] * w / dw, 0.0, gt[3], 0.0,
-                          gt[5] * h / dh]
-                for bi in range(len(lv) - 1):
-                    lo, hi = lv[bi], lv[bi + 1]
-                    mask = (a >= lo) & (a < hi)
-                    n = int(mask.sum())
-                    if n == 0:
-                        continue
-                    polys = (_band_to_geom_ms(a, lo, hi, gt)
-                             if mode == "marching_squares"
-                             else _mask_to_geom(mask, gt))
-                    if not polys:
-                        continue
-                    g = ("multipolygon", polys)
-                    out.append(dict(
-                        image_id=r.image_id,
-                        level_min=float(lo) if np.isfinite(lo) else None,
-                        level_max=float(hi) if np.isfinite(hi) else None,
-                        n_pixels=n,
-                        area_m2=float(G.area(g)),
-                        wkb=G.to_wkb(*g),
-                    ))
-            yield pd.DataFrame(
-                out,
-                columns=["image_id", "level_min", "level_max", "n_pixels",
-                         "area_m2", "wkb"],
+    def per_image(a, r):
+        a = a[:, :, 0].astype(np.float64)
+        h, w = a.shape
+        gt = geotransform_3857(r.lon, r.lat, w, h, r.gsd_m)
+        if downsample_to and (h > downsample_to or w > downsample_to):
+            dh, dw = min(h, downsample_to), min(w, downsample_to)
+            a = resample_nearest(a, dh, dw)
+            gt = [gt[0], gt[1] * w / dw, 0.0, gt[3], 0.0,
+                  gt[5] * h / dh]
+        for bi in range(len(lv) - 1):
+            lo, hi = lv[bi], lv[bi + 1]
+            mask = (a >= lo) & (a < hi)
+            n = int(mask.sum())
+            if n == 0:
+                continue
+            polys = (_band_to_geom_ms(a, lo, hi, gt)
+                     if mode == "marching_squares"
+                     else _mask_to_geom(mask, gt))
+            if not polys:
+                continue
+            g = ("multipolygon", polys)
+            yield dict(
+                image_id=r.image_id,
+                level_min=float(lo) if np.isfinite(lo) else None,
+                level_max=float(hi) if np.isfinite(hi) else None,
+                n_pixels=n,
+                area_m2=float(G.area(g)),
+                wkb=G.to_wkb(*g),
             )
 
-    return images.select("image_id", "bytes", "lon", "lat", "gsd_m").mapInPandas(
-        gen,
-        schema="image_id string, level_min double, level_max double, "
-               "n_pixels long, area_m2 double, wkb binary",
-    )
+    return map_images(
+        images, ["image_id", "bytes", "lon", "lat", "gsd_m"],
+        "image_id string, level_min double, level_max double, n_pixels long, "
+        "area_m2 double, wkb binary", per_image)
 
 
 def overview_downsample(images: DataFrame, method: str = "average"
@@ -1057,39 +965,32 @@ def overview_downsample(images: DataFrame, method: str = "average"
         average_2x2, gauss_2x2, resample_mode, resample_nearest, rms_2x2,
     )
 
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                a = decode(r.bytes)
-                h, w = a.shape[0] & ~1, a.shape[1] & ~1
-                a = a[:h, :w]
-                if method == "average":
-                    v = average_2x2(a)
-                elif method == "gauss":
-                    v = gauss_2x2(a)
-                elif method == "rms":
-                    v = rms_2x2(a)
-                elif method == "mode":
-                    v = resample_mode(a, h // 2, w // 2)
-                elif method == "nearest":
-                    v = resample_nearest(a, h // 2, w // 2)
-                else:
-                    raise ValueError(method)
-                cs = checksum_image(v)
-                out.append(dict(
-                    image_id=r.image_id, w2=int(v.shape[1]), h2=int(v.shape[0]),
-                    cs1=cs[0], cs2=cs[1] if len(cs) > 1 else None,
-                    cs3=cs[2] if len(cs) > 2 else None,
-                ))
-            yield pd.DataFrame(
-                out, columns=["image_id", "w2", "h2", "cs1", "cs2", "cs3"]
-            )
+    def per_image(a, r):
+        h, w = a.shape[0] & ~1, a.shape[1] & ~1
+        a = a[:h, :w]
+        if method == "average":
+            v = average_2x2(a)
+        elif method == "gauss":
+            v = gauss_2x2(a)
+        elif method == "rms":
+            v = rms_2x2(a)
+        elif method == "mode":
+            v = resample_mode(a, h // 2, w // 2)
+        elif method == "nearest":
+            v = resample_nearest(a, h // 2, w // 2)
+        else:
+            raise ValueError(method)
+        cs = checksum_image(v)
+        yield dict(
+            image_id=r.image_id, w2=int(v.shape[1]), h2=int(v.shape[0]),
+            cs1=cs[0], cs2=cs[1] if len(cs) > 1 else None,
+            cs3=cs[2] if len(cs) > 2 else None,
+        )
 
-    return images.select("image_id", "bytes").mapInPandas(
-        gen,
-        schema="image_id string, w2 int, h2 int, cs1 long, cs2 long, cs3 long",
-    )
+    return map_images(
+        images, ["image_id", "bytes"],
+        "image_id string, w2 int, h2 int, cs1 long, cs2 long, cs3 long",
+        per_image)
 
 
 def fill_nodata_stats(images: DataFrame, nodata_below: int = 8,
@@ -1101,27 +1002,21 @@ def fill_nodata_stats(images: DataFrame, nodata_below: int = 8,
     from ..oracle.contour import fill_nodata
     from ..oracle.resample import resample_nearest
 
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                a = decode(r.bytes)[:, :, 0]
-                if downsample_to and (a.shape[0] > downsample_to
-                                      or a.shape[1] > downsample_to):
-                    a = resample_nearest(a, downsample_to, downsample_to)
-                mask = a < nodata_below
-                filled = fill_nodata(a.astype(np.float64), mask,
-                                     max_distance, smoothing_iterations)
-                filled_u8 = np.clip(np.floor(filled + 0.5), 0, 255).astype(np.uint8)
-                out.append(
-                    dict(image_id=r.image_id, n_filled=int(mask.sum()),
-                         cs=checksum_image(filled_u8)[0])
-                )
-            yield pd.DataFrame(out, columns=["image_id", "n_filled", "cs"])
+    def per_image(a, r):
+        a = a[:, :, 0]
+        if downsample_to and (a.shape[0] > downsample_to
+                              or a.shape[1] > downsample_to):
+            a = resample_nearest(a, downsample_to, downsample_to)
+        mask = a < nodata_below
+        filled = fill_nodata(a.astype(np.float64), mask,
+                             max_distance, smoothing_iterations)
+        filled_u8 = np.clip(np.floor(filled + 0.5), 0, 255).astype(np.uint8)
+        yield dict(image_id=r.image_id, n_filled=int(mask.sum()),
+                   cs=checksum_image(filled_u8)[0])
 
-    return images.select("image_id", "bytes").mapInPandas(
-        gen, schema="image_id string, n_filled long, cs long"
-    )
+    return map_images(
+        images, ["image_id", "bytes"],
+        "image_id string, n_filled long, cs long", per_image)
 
 
 def nearblack_stats(images: DataFrame, near: int = 15,
@@ -1136,32 +1031,24 @@ def nearblack_stats(images: DataFrame, near: int = 15,
     from ..oracle.nearblack import nearblack
     from ..oracle.resample import resample_nearest
 
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                a = decode(r.bytes)
-                if downsample_to and (a.shape[0] > downsample_to
-                                      or a.shape[1] > downsample_to):
-                    a = np.stack(
-                        [resample_nearest(a[:, :, i], downsample_to,
-                                          downsample_to)
-                         for i in range(a.shape[2])], axis=2)
-                res, mask = nearblack(a, near=near,
-                                      max_non_black=max_non_black,
-                                      white=white)
-                out.append(
-                    dict(image_id=r.image_id,
-                         n_collar=int((mask == 0).sum()),
-                         n_valid=int((mask != 0).sum()),
-                         cs=checksum_image(res)[0])
-                )
-            yield pd.DataFrame(
-                out, columns=["image_id", "n_collar", "n_valid", "cs"])
+    def per_image(a, r):
+        if downsample_to and (a.shape[0] > downsample_to
+                              or a.shape[1] > downsample_to):
+            a = np.stack(
+                [resample_nearest(a[:, :, i], downsample_to,
+                                  downsample_to)
+                 for i in range(a.shape[2])], axis=2)
+        res, mask = nearblack(a, near=near,
+                              max_non_black=max_non_black,
+                              white=white)
+        yield dict(image_id=r.image_id,
+                   n_collar=int((mask == 0).sum()),
+                   n_valid=int((mask != 0).sum()),
+                   cs=checksum_image(res)[0])
 
-    return images.select("image_id", "bytes").mapInPandas(
-        gen, schema="image_id string, n_collar long, n_valid long, cs long"
-    )
+    return map_images(
+        images, ["image_id", "bytes"],
+        "image_id string, n_collar long, n_valid long, cs long", per_image)
 
 
 def mosaic_merge(tile_rows: DataFrame, reducer: str = "last",
@@ -1246,41 +1133,30 @@ def raster_info(images: DataFrame) -> DataFrame:
     from ..oracle.mercator import meters_to_lonlat
     from ..oracle.tiling import native_zoom
 
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                blob = bytes(r.bytes)
-                drv = identify(blob)
-                a = decode(blob)
-                h, w, nb = a.shape[0], a.shape[1], a.shape[2]
-                gt = geotransform_3857(r.lon, r.lat, w, h, r.gsd_m)
-                ul = meters_to_lonlat(gt[0], gt[3])
-                lr = meters_to_lonlat(gt[0] + w * gt[1], gt[3] + h * gt[5])
-                af = a.reshape(-1, nb).astype(np.float64)
-                out.append(dict(
-                    image_id=r.image_id, driver=drv, w=w, h=h, bands=nb,
-                    gt=[float(v) for v in gt],
-                    ul_lon=float(ul[0]), ul_lat=float(ul[1]),
-                    lr_lon=float(lr[0]), lr_lat=float(lr[1]),
-                    zoom=int(native_zoom(r.gsd_m)),
-                    b1_min=float(af[:, 0].min()),
-                    b1_max=float(af[:, 0].max()),
-                    b1_mean=float(np.round(af[:, 0].mean(), 6)),
-                    b1_std=float(np.round(af[:, 0].std(), 6)),
-                ))
-            yield pd.DataFrame(out, columns=[
-                "image_id", "driver", "w", "h", "bands", "gt",
-                "ul_lon", "ul_lat", "lr_lon", "lr_lat", "zoom",
-                "b1_min", "b1_max", "b1_mean", "b1_std"])
+    def per_image(a, r):
+        h, w, nb = a.shape[0], a.shape[1], a.shape[2]
+        gt = geotransform_3857(r.lon, r.lat, w, h, r.gsd_m)
+        ul = meters_to_lonlat(gt[0], gt[3])
+        lr = meters_to_lonlat(gt[0] + w * gt[1], gt[3] + h * gt[5])
+        af = a.reshape(-1, nb).astype(np.float64)
+        yield dict(
+            image_id=r.image_id, driver=identify(r.bytes), w=w, h=h,
+            bands=nb, gt=[float(v) for v in gt],
+            ul_lon=float(ul[0]), ul_lat=float(ul[1]),
+            lr_lon=float(lr[0]), lr_lat=float(lr[1]),
+            zoom=int(native_zoom(r.gsd_m)),
+            b1_min=float(af[:, 0].min()),
+            b1_max=float(af[:, 0].max()),
+            b1_mean=float(np.round(af[:, 0].mean(), 6)),
+            b1_std=float(np.round(af[:, 0].std(), 6)),
+        )
 
-    return images.select("image_id", "bytes", "lon", "lat", "gsd_m"
-                         ).mapInPandas(
-        gen, schema="image_id string, driver string, w int, h int, "
-                    "bands int, gt array<double>, ul_lon double, "
-                    "ul_lat double, lr_lon double, lr_lat double, "
-                    "zoom int, b1_min double, b1_max double, "
-                    "b1_mean double, b1_std double")
+    return map_images(
+        images, ["image_id", "bytes", "lon", "lat", "gsd_m"],
+        "image_id string, driver string, w int, h int, bands int, "
+        "gt array<double>, ul_lon double, ul_lat double, lr_lon double, "
+        "lr_lat double, zoom int, b1_min double, b1_max double, "
+        "b1_mean double, b1_std double", per_image)
 
 
 def tile_index(images: DataFrame, tileindex: str = "location",
@@ -1504,25 +1380,21 @@ def neighbors(images: DataFrame, method: str | None = None,
     if kernel == "equal" and method == "mean":
         coefs = coefs / (size * size)
 
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                a = decode(r.bytes)[:, :, 0]
-                v = _neighbors_filter(a, coefs, size, method, nodata)
-                out.append(dict(
-                    image_id=r.image_id,
-                    cs=checksum_image(v)[0],
-                    vmin=float(np.round(np.min(v), 6)),
-                    vmax=float(np.round(np.max(v), 6)),
-                    vmean=float(np.round(np.mean(v), 6)),
-                ))
-            yield pd.DataFrame(
-                out, columns=["image_id", "cs", "vmin", "vmax", "vmean"])
+    def per_image(a, r):
+        a = a[:, :, 0]
+        v = _neighbors_filter(a, coefs, size, method, nodata)
+        yield dict(
+            image_id=r.image_id,
+            cs=checksum_image(v)[0],
+            vmin=float(np.round(np.min(v), 6)),
+            vmax=float(np.round(np.max(v), 6)),
+            vmean=float(np.round(np.mean(v), 6)),
+        )
 
-    return images.select("image_id", "bytes").mapInPandas(
-        gen, schema="image_id string, cs long, vmin double, vmax double, "
-                    "vmean double")
+    return map_images(
+        images, ["image_id", "bytes"],
+        "image_id string, cs long, vmin double, vmax double, vmean double",
+        per_image)
 
 
 def _parse_reclass_mapping(mapping: str, nodata: float | None):
@@ -1585,36 +1457,32 @@ def reclassify(images: DataFrame, mapping: str,
     Map-only over the corpus."""
     intervals, default, _ = _parse_reclass_mapping(mapping, nodata)
 
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                a = decode(r.bytes)[:, :, 0].astype(np.float64)
-                res = np.empty_like(a)
-                matched = np.zeros(a.shape, dtype=bool)
-                for lo, hi, dst in intervals:
-                    sel = (~matched) & (a >= lo) & (a <= hi)
-                    res[sel] = a[sel] if dst is None else dst
-                    matched |= sel
-                if default is not None:
-                    dst = default[1]
-                    res[~matched] = (a[~matched] if dst is None else dst)
-                elif not matched.all():
-                    bad = float(a[~matched].flat[0])
-                    raise ValueError(
-                        f"Encountered value {bad} with no specified mapping")
-                out.append(dict(
-                    image_id=r.image_id,
-                    cs=checksum_image(res)[0],
-                    vmin=float(np.min(res)), vmax=float(np.max(res)),
-                    vmean=float(np.round(np.mean(res), 6)),
-                ))
-            yield pd.DataFrame(
-                out, columns=["image_id", "cs", "vmin", "vmax", "vmean"])
+    def per_image(a, r):
+        a = a[:, :, 0].astype(np.float64)
+        res = np.empty_like(a)
+        matched = np.zeros(a.shape, dtype=bool)
+        for lo, hi, dst in intervals:
+            sel = (~matched) & (a >= lo) & (a <= hi)
+            res[sel] = a[sel] if dst is None else dst
+            matched |= sel
+        if default is not None:
+            dst = default[1]
+            res[~matched] = (a[~matched] if dst is None else dst)
+        elif not matched.all():
+            bad = float(a[~matched].flat[0])
+            raise ValueError(
+                f"Encountered value {bad} with no specified mapping")
+        yield dict(
+            image_id=r.image_id,
+            cs=checksum_image(res)[0],
+            vmin=float(np.min(res)), vmax=float(np.max(res)),
+            vmean=float(np.round(np.mean(res), 6)),
+        )
 
-    return images.select("image_id", "bytes").mapInPandas(
-        gen, schema="image_id string, cs long, vmin double, vmax double, "
-                    "vmean double")
+    return map_images(
+        images, ["image_id", "bytes"],
+        "image_id string, cs long, vmin double, vmax double, vmean double",
+        per_image)
 
 
 def nodata_to_alpha(images: DataFrame, nodata) -> DataFrame:
@@ -1628,30 +1496,24 @@ def nodata_to_alpha(images: DataFrame, nodata) -> DataFrame:
     nd = [float(v) for v in (nodata if hasattr(nodata, "__len__")
                              else [nodata])]
 
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                a = decode(r.bytes)
-                nb = a.shape[2]
-                vals = nd if len(nd) == nb else [nd[0]] * nb
-                mask = np.ones(a.shape[:2], dtype=bool)
-                for b in range(nb):
-                    mask &= a[:, :, b] == vals[b]
-                alpha = np.where(mask, 0, 255).astype(np.uint8)
-                rgba = np.dstack([a, alpha])
-                out.append(dict(
-                    image_id=r.image_id, bytes=encode(rgba, "png"),
-                    n_transparent=int(mask.sum()),
-                    alpha_cs=checksum_image(alpha)[0],
-                ))
-            yield pd.DataFrame(
-                out, columns=["image_id", "bytes", "n_transparent",
-                              "alpha_cs"])
+    def per_image(a, r):
+        nb = a.shape[2]
+        vals = nd if len(nd) == nb else [nd[0]] * nb
+        mask = np.ones(a.shape[:2], dtype=bool)
+        for b in range(nb):
+            mask &= a[:, :, b] == vals[b]
+        alpha = np.where(mask, 0, 255).astype(np.uint8)
+        rgba = np.dstack([a, alpha])
+        yield dict(
+            image_id=r.image_id, bytes=encode(rgba, "png"),
+            n_transparent=int(mask.sum()),
+            alpha_cs=checksum_image(alpha)[0],
+        )
 
-    return images.select("image_id", "bytes").mapInPandas(
-        gen, schema="image_id string, bytes binary, n_transparent long, "
-                    "alpha_cs long")
+    return map_images(
+        images, ["image_id", "bytes"],
+        "image_id string, bytes binary, n_transparent long, alpha_cs long",
+        per_image)
 
 
 def raster_to_xyz(images: DataFrame, band: int = 0,
@@ -1706,41 +1568,34 @@ def image_quality(images: DataFrame, band: int = 0,
     one decode per image, integer-exact partials where possible."""
     from ..oracle.resample import resample_nearest
 
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                a = decode(r.bytes)[:, :, band].astype(np.int64)
-                if downsample_to and (a.shape[0] > downsample_to
-                                      or a.shape[1] > downsample_to):
-                    a = resample_nearest(a, downsample_to, downsample_to)
-                n = a.size
-                lap = (a[1:-1, :-2] + a[1:-1, 2:] + a[:-2, 1:-1]
-                       + a[2:, 1:-1] - 4 * a[1:-1, 1:-1])
-                lv = float(lap.var()) if lap.size else 0.0
-                hist = np.bincount(a.ravel(), minlength=256)
-                pnz = hist[hist > 0] / n
-                entropy = float(-(pnz * np.log2(pnz)).sum())
-                out.append(dict(
-                    image_id=r.image_id,
-                    sharpness=float(np.round(lv, 6)),
-                    mean=float(np.round(a.mean(), 6)),
-                    std=float(np.round(a.std(), 6)),
-                    entropy_bits=float(np.round(entropy, 6)),
-                    vmin=int(a.min()), vmax=int(a.max()),
-                    saturated_frac=float(np.round(
-                        (hist[0] + hist[255]) / n, 6)),
-                ))
-            yield pd.DataFrame(
-                out, columns=["image_id", "sharpness", "mean", "std",
-                              "entropy_bits", "vmin", "vmax",
-                              "saturated_frac"])
+    def per_image(a, r):
+        a = a[:, :, band].astype(np.int64)
+        if downsample_to and (a.shape[0] > downsample_to
+                              or a.shape[1] > downsample_to):
+            a = resample_nearest(a, downsample_to, downsample_to)
+        n = a.size
+        lap = (a[1:-1, :-2] + a[1:-1, 2:] + a[:-2, 1:-1]
+               + a[2:, 1:-1] - 4 * a[1:-1, 1:-1])
+        lv = float(lap.var()) if lap.size else 0.0
+        hist = np.bincount(a.ravel(), minlength=256)
+        pnz = hist[hist > 0] / n
+        entropy = float(-(pnz * np.log2(pnz)).sum())
+        yield dict(
+            image_id=r.image_id,
+            sharpness=float(np.round(lv, 6)),
+            mean=float(np.round(a.mean(), 6)),
+            std=float(np.round(a.std(), 6)),
+            entropy_bits=float(np.round(entropy, 6)),
+            vmin=int(a.min()), vmax=int(a.max()),
+            saturated_frac=float(np.round(
+                (hist[0] + hist[255]) / n, 6)),
+        )
 
-    return images.select("image_id", "bytes").mapInPandas(
-        gen, schema="image_id string, sharpness double, mean double, "
-                    "std double, entropy_bits double, vmin int, vmax int, "
-                    "saturated_frac double"
-    )
+    return map_images(
+        images, ["image_id", "bytes"],
+        "image_id string, sharpness double, mean double, std double, "
+        "entropy_bits double, vmin int, vmax int, saturated_frac double",
+        per_image)
 
 
 def rgb_to_pct(images: DataFrame, n_colors: int = 256, dither: bool = True,
@@ -1757,41 +1612,34 @@ def rgb_to_pct(images: DataFrame, n_colors: int = 256, dither: bool = True,
                                     median_cut_pct)
     from ..oracle.resample import resample_nearest
 
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                a = decode(r.bytes)
-                if downsample_to and (a.shape[0] > downsample_to
-                                      or a.shape[1] > downsample_to):
-                    a = np.stack(
-                        [resample_nearest(a[:, :, i], downsample_to,
-                                          downsample_to)
-                         for i in range(a.shape[2])], axis=2)
-                pal = median_cut_pct(a, n_colors)
-                if dither:
-                    idx = dither_rgb_to_pct(a, pal)
-                else:
-                    cube = _color_cube(pal, 5)
-                    q = a[:, :, :3].astype(np.int64) * 32 // 256
-                    idx = cube[q[:, :, 0], q[:, :, 1],
-                               q[:, :, 2]].astype(np.uint8)
-                rec = pal[idx].astype(np.int64)
-                mae = float(np.abs(rec - a[:, :, :3].astype(np.int64)).mean())
-                out.append(dict(
-                    image_id=r.image_id, n_pal=int(len(pal)),
-                    cs_idx=checksum_image(idx)[0],
-                    mae_u=int(np.floor(mae * 1e6 + 0.5)),
-                    pct_png=encode_png_paletted(idx, pal),
-                ))
-            yield pd.DataFrame(
-                out, columns=["image_id", "n_pal", "cs_idx", "mae_u",
-                              "pct_png"])
+    def per_image(a, r):
+        if downsample_to and (a.shape[0] > downsample_to
+                              or a.shape[1] > downsample_to):
+            a = np.stack(
+                [resample_nearest(a[:, :, i], downsample_to,
+                                  downsample_to)
+                 for i in range(a.shape[2])], axis=2)
+        pal = median_cut_pct(a, n_colors)
+        if dither:
+            idx = dither_rgb_to_pct(a, pal)
+        else:
+            cube = _color_cube(pal, 5)
+            q = a[:, :, :3].astype(np.int64) * 32 // 256
+            idx = cube[q[:, :, 0], q[:, :, 1],
+                       q[:, :, 2]].astype(np.uint8)
+        rec = pal[idx].astype(np.int64)
+        mae = float(np.abs(rec - a[:, :, :3].astype(np.int64)).mean())
+        yield dict(
+            image_id=r.image_id, n_pal=int(len(pal)),
+            cs_idx=checksum_image(idx)[0],
+            mae_u=int(np.floor(mae * 1e6 + 0.5)),
+            pct_png=encode_png_paletted(idx, pal),
+        )
 
-    return images.select("image_id", "bytes").mapInPandas(
-        gen, schema="image_id string, n_pal int, cs_idx long, mae_u long, "
-                    "pct_png binary"
-    )
+    return map_images(
+        images, ["image_id", "bytes"],
+        "image_id string, n_pal int, cs_idx long, mae_u long, pct_png binary",
+        per_image)
 
 
 def mosaic_resolution_zoom(images: DataFrame, rule: str = "highest") -> int:
@@ -1855,27 +1703,22 @@ def band_histogram(images: DataFrame, dmin: float = -0.5, dmax: float = 255.5,
     if not (scale > 0 and np.isfinite(scale)):
         raise ValueError("invalid histogram range")
 
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                a = decode(r.bytes)
-                v = a[..., min(band, a.shape[2] - 1)].astype(np.float64).ravel()
-                if nodata is not None:
-                    v = v[v != nodata]
-                idx = np.floor((v - dmin) * scale)
-                if include_out_of_range:
-                    idx = np.clip(idx, 0, n_buckets - 1)
-                else:
-                    idx = idx[(idx >= 0) & (idx < n_buckets)]
-                hist = np.bincount(idx.astype(np.int64), minlength=n_buckets)
-                out.append(dict(image_id=r.image_id,
-                                hist=[int(x) for x in hist]))
-            yield pd.DataFrame(out, columns=["image_id", "hist"])
+    def per_image(a, r):
+        v = a[..., min(band, a.shape[2] - 1)].astype(np.float64).ravel()
+        if nodata is not None:
+            v = v[v != nodata]
+        idx = np.floor((v - dmin) * scale)
+        if include_out_of_range:
+            idx = np.clip(idx, 0, n_buckets - 1)
+        else:
+            idx = idx[(idx >= 0) & (idx < n_buckets)]
+        hist = np.bincount(idx.astype(np.int64), minlength=n_buckets)
+        yield dict(image_id=r.image_id,
+                   hist=[int(x) for x in hist])
 
-    partials = images.select("image_id", "bytes").mapInPandas(
-        gen, schema="image_id string, hist array<long>"
-    )
+    partials = map_images(
+        images, ["image_id", "bytes"],
+        "image_id string, hist array<long>", per_image)
     rows = partials.select(
         "image_id", F.posexplode("hist").alias("bucket", "cnt")
     )
@@ -1898,47 +1741,39 @@ def warp_gcp(images: DataFrame, method: str = "tps", order: int = 2,
     shuffle, embarrassingly parallel at corpus scale."""
     from ..oracle.tps import gcp_transformer
 
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                a = decode(r.bytes)
-                band = a[..., 0] if a.ndim == 3 else a
-                h, w = band.shape
-                src = np.stack([np.asarray(r.gcp_px, np.float64),
-                                np.asarray(r.gcp_py, np.float64)], 1)
-                dst = np.stack([np.asarray(r.gcp_x, np.float64),
-                                np.asarray(r.gcp_y, np.float64)], 1)
-                fwd = gcp_transformer(src, dst, method, order)
-                rev = gcp_transformer(dst, src, method, order)
-                corners = fwd(np.array(
-                    [[0, 0], [w - 1.0, 0], [0, h - 1.0], [w - 1.0, h - 1.0]]))
-                x0, y0 = corners.min(0)
-                x1, y1 = corners.max(0)
-                ow, oh = out_size if out_size is not None else (w, h)
-                xs = x0 + (np.arange(ow) + 0.5) * (x1 - x0) / ow
-                ys = y0 + (np.arange(oh) + 0.5) * (y1 - y0) / oh
-                gx, gy = np.meshgrid(xs, ys)
-                pts = rev(np.stack([gx.ravel(), gy.ravel()], 1)
-                          ).reshape(oh, ow, 2)
-                ix = np.floor(pts[..., 0] + 0.5).astype(np.int64)
-                iy = np.floor(pts[..., 1] + 0.5).astype(np.int64)
-                valid = (ix >= 0) & (ix < w) & (iy >= 0) & (iy < h)
-                samp = band[np.clip(iy, 0, h - 1), np.clip(ix, 0, w - 1)]
-                res = np.where(valid, samp, 0).astype(np.uint8)
-                out.append(dict(
-                    image_id=r.image_id, w2=int(ow), h2=int(oh),
-                    n_valid=int(valid.sum()),
-                    cs=checksum_image(res)[0],
-                ))
-            yield pd.DataFrame(
-                out, columns=["image_id", "w2", "h2", "n_valid", "cs"])
+    def per_image(a, r):
+        band = a[..., 0] if a.ndim == 3 else a
+        h, w = band.shape
+        src = np.stack([np.asarray(r.gcp_px, np.float64),
+                        np.asarray(r.gcp_py, np.float64)], 1)
+        dst = np.stack([np.asarray(r.gcp_x, np.float64),
+                        np.asarray(r.gcp_y, np.float64)], 1)
+        fwd = gcp_transformer(src, dst, method, order)
+        rev = gcp_transformer(dst, src, method, order)
+        corners = fwd(np.array(
+            [[0, 0], [w - 1.0, 0], [0, h - 1.0], [w - 1.0, h - 1.0]]))
+        x0, y0 = corners.min(0)
+        x1, y1 = corners.max(0)
+        ow, oh = out_size if out_size is not None else (w, h)
+        xs = x0 + (np.arange(ow) + 0.5) * (x1 - x0) / ow
+        ys = y0 + (np.arange(oh) + 0.5) * (y1 - y0) / oh
+        gx, gy = np.meshgrid(xs, ys)
+        pts = rev(np.stack([gx.ravel(), gy.ravel()], 1)
+                  ).reshape(oh, ow, 2)
+        ix = np.floor(pts[..., 0] + 0.5).astype(np.int64)
+        iy = np.floor(pts[..., 1] + 0.5).astype(np.int64)
+        valid = (ix >= 0) & (ix < w) & (iy >= 0) & (iy < h)
+        samp = band[np.clip(iy, 0, h - 1), np.clip(ix, 0, w - 1)]
+        res = np.where(valid, samp, 0).astype(np.uint8)
+        yield dict(
+            image_id=r.image_id, w2=int(ow), h2=int(oh),
+            n_valid=int(valid.sum()),
+            cs=checksum_image(res)[0],
+        )
 
-    return images.select(
-        "image_id", "bytes", "gcp_px", "gcp_py", "gcp_x", "gcp_y"
-    ).mapInPandas(
-        gen, schema="image_id string, w2 int, h2 int, n_valid long, cs long"
-    )
+    return map_images(
+        images, ["image_id", "bytes", "gcp_px", "gcp_py", "gcp_x", "gcp_y"],
+        "image_id string, w2 int, h2 int, n_valid long, cs long", per_image)
 
 
 def warp_rpc(images: DataFrame, height: float = 0.0,
@@ -1953,37 +1788,32 @@ def warp_rpc(images: DataFrame, height: float = 0.0,
     nearest-samples.  Map-only, one image per solve, no shuffle."""
     from ..oracle.rpc import rpc_forward, rpc_inverse, rpc_unpack
 
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                a = decode(r.bytes)
-                band = a[..., 0] if a.ndim == 3 else a
-                h, w = band.shape
-                rpc = rpc_unpack(getattr(r, rpc_col))
-                cl, cs = np.array([0.0, 0, h - 1.0, h - 1.0]), \
-                    np.array([0.0, w - 1.0, 0.0, w - 1.0])
-                lon_c, lat_c = rpc_inverse(rpc, cl, cs, height)
-                lo0, lo1 = lon_c.min(), lon_c.max()
-                la0, la1 = lat_c.min(), lat_c.max()
-                lons = lo0 + (np.arange(w) + 0.5) * (lo1 - lo0) / w
-                lats = la1 - (np.arange(h) + 0.5) * (la1 - la0) / h
-                glon, glat = np.meshgrid(lons, lats)
-                line, samp = rpc_forward(rpc, glon, glat, height)
-                ix = np.floor(samp + 0.5).astype(np.int64)
-                iy = np.floor(line + 0.5).astype(np.int64)
-                valid = (ix >= 0) & (ix < w) & (iy >= 0) & (iy < h)
-                res = np.where(
-                    valid, band[np.clip(iy, 0, h - 1), np.clip(ix, 0, w - 1)],
-                    0).astype(np.uint8)
-                out.append(dict(
-                    image_id=r.image_id, w2=int(w), h2=int(h),
-                    n_valid=int(valid.sum()), cs=checksum_image(res)[0]))
-            yield pd.DataFrame(
-                out, columns=["image_id", "w2", "h2", "n_valid", "cs"])
+    def per_image(a, r):
+        band = a[..., 0] if a.ndim == 3 else a
+        h, w = band.shape
+        rpc = rpc_unpack(getattr(r, rpc_col))
+        cl, cs = np.array([0.0, 0, h - 1.0, h - 1.0]), \
+            np.array([0.0, w - 1.0, 0.0, w - 1.0])
+        lon_c, lat_c = rpc_inverse(rpc, cl, cs, height)
+        lo0, lo1 = lon_c.min(), lon_c.max()
+        la0, la1 = lat_c.min(), lat_c.max()
+        lons = lo0 + (np.arange(w) + 0.5) * (lo1 - lo0) / w
+        lats = la1 - (np.arange(h) + 0.5) * (la1 - la0) / h
+        glon, glat = np.meshgrid(lons, lats)
+        line, samp = rpc_forward(rpc, glon, glat, height)
+        ix = np.floor(samp + 0.5).astype(np.int64)
+        iy = np.floor(line + 0.5).astype(np.int64)
+        valid = (ix >= 0) & (ix < w) & (iy >= 0) & (iy < h)
+        res = np.where(
+            valid, band[np.clip(iy, 0, h - 1), np.clip(ix, 0, w - 1)],
+            0).astype(np.uint8)
+        yield dict(
+            image_id=r.image_id, w2=int(w), h2=int(h),
+            n_valid=int(valid.sum()), cs=checksum_image(res)[0])
 
-    return images.select("image_id", "bytes", rpc_col).mapInPandas(
-        gen, schema="image_id string, w2 int, h2 int, n_valid long, cs long")
+    return map_images(
+        images, ["image_id", "bytes", rpc_col],
+        "image_id string, w2 int, h2 int, n_valid long, cs long", per_image)
 
 
 def retile(images: DataFrame, tile_px: int = 128, levels: int = 1,
@@ -2002,49 +1832,42 @@ def retile(images: DataFrame, tile_px: int = 128, levels: int = 1,
     """
     from ..codecs.png import encode_png
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                base = decode(bytes(r.bytes))
-                gt0 = geotransform_3857(r.lon, r.lat, base.shape[1],
-                                        base.shape[0], r.gsd_m)
-                a = base
-                for level in range(1, levels + 1):
-                    if level > 1:
-                        nh = max(1, (a.shape[0] + 1) // 2)
-                        nw = max(1, (a.shape[1] + 1) // 2)
-                        a = _resample_any(a, nh, nw, method)
-                    scale = base.shape[1] / a.shape[1]
-                    h, w = a.shape[0], a.shape[1]
-                    for ty in range((h + tile_px - 1) // tile_px):
-                        for tx in range((w + tile_px - 1) // tile_px):
-                            t = a[ty * tile_px:(ty + 1) * tile_px,
-                                  tx * tile_px:(tx + 1) * tile_px]
-                            cs = checksum_image(t)
-                            rows.append(dict(
-                                image_id=r.image_id, level=level,
-                                tx=tx, ty=ty,
-                                w=int(t.shape[1]), h=int(t.shape[0]),
-                                ulx=float(gt0[0] + tx * tile_px
-                                          * gt0[1] * scale),
-                                uly=float(gt0[3] + ty * tile_px
-                                          * gt0[5] * scale),
-                                px_size=float(gt0[1] * scale),
-                                cs=int(cs[0] if hasattr(cs, "__len__")
-                                       else cs),
-                                png=(bytearray(encode_png(t))
-                                     if emit_bytes else None),
-                            ))
-            cols = ["image_id", "level", "tx", "ty", "w", "h", "ulx",
-                    "uly", "px_size", "cs", "png"]
-            yield pd.DataFrame(rows, columns=cols)
+    def per_image(base, r):
+        gt0 = geotransform_3857(r.lon, r.lat, base.shape[1],
+                                base.shape[0], r.gsd_m)
+        a = base
+        for level in range(1, levels + 1):
+            if level > 1:
+                nh = max(1, (a.shape[0] + 1) // 2)
+                nw = max(1, (a.shape[1] + 1) // 2)
+                a = _resample_any(a, nh, nw, method)
+            scale = base.shape[1] / a.shape[1]
+            h, w = a.shape[0], a.shape[1]
+            for ty in range((h + tile_px - 1) // tile_px):
+                for tx in range((w + tile_px - 1) // tile_px):
+                    t = a[ty * tile_px:(ty + 1) * tile_px,
+                          tx * tile_px:(tx + 1) * tile_px]
+                    cs = checksum_image(t)
+                    yield dict(
+                        image_id=r.image_id, level=level,
+                        tx=tx, ty=ty,
+                        w=int(t.shape[1]), h=int(t.shape[0]),
+                        ulx=float(gt0[0] + tx * tile_px
+                                  * gt0[1] * scale),
+                        uly=float(gt0[3] + ty * tile_px
+                                  * gt0[5] * scale),
+                        px_size=float(gt0[1] * scale),
+                        cs=int(cs[0] if hasattr(cs, "__len__")
+                               else cs),
+                        png=(bytearray(encode_png(t))
+                             if emit_bytes else None),
+                    )
 
-    out = images.select("image_id", "bytes", "lon", "lat", "gsd_m"
-                        ).mapInPandas(
-        gen, schema="image_id string, level int, tx int, ty int, w int, "
-                    "h int, ulx double, uly double, px_size double, "
-                    "cs long, png binary")
+    out = map_images(
+        images, ["image_id", "bytes", "lon", "lat", "gsd_m"],
+        "image_id string, level int, tx int, ty int, w int, h int, "
+        "ulx double, uly double, px_size double, cs long, png binary",
+        per_image)
     return out if emit_bytes else out.drop("png")
 
 
@@ -2056,42 +1879,39 @@ def perceptual_hash(images: DataFrame, hash_size: int = 8,
     (orthonormal matrix form) -> top-left ``hash_size``² low-frequency
     block -> median threshold -> bits packed row-major into int64.
 
-    Map-only Arrow batches; the DCT basis is built once per batch. The
+    Map-only Arrow batches; the DCT basis is built once, on the driver. The
     output column `phash_px` is drop-in for `dedup.hamming_near_pairs`,
     giving an image near-dup pipeline from raw pixels (decode -> hash ->
     banded Hamming LSH) with no reliance on a precomputed phash column."""
+    k = np.arange(resize_to, dtype=np.float64)
+    # orthonormal DCT-II basis: C[u, n] = s(u) cos(pi (2n+1) u / 2N)
+    C = np.cos(np.pi * (2 * k[None, :] + 1) * k[:, None]
+               / (2 * resize_to))
+    C[0] *= 1 / np.sqrt(2)
+    C *= np.sqrt(2.0 / resize_to)
+    weights = np.array([0.299, 0.587, 0.114])
 
-    def gen(batches):
-        k = np.arange(resize_to, dtype=np.float64)
-        # orthonormal DCT-II basis: C[u, n] = s(u) cos(pi (2n+1) u / 2N)
-        C = np.cos(np.pi * (2 * k[None, :] + 1) * k[:, None]
-                   / (2 * resize_to))
-        C[0] *= 1 / np.sqrt(2)
-        C *= np.sqrt(2.0 / resize_to)
-        weights = np.array([0.299, 0.587, 0.114])
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                a = decode(bytes(r.bytes)).astype(np.float64)
-                if a.shape[2] == 1:
-                    luma = a[:, :, 0]
-                elif a.shape[2] == 2:  # gray + alpha
-                    luma = a[:, :, 0]
-                else:
-                    luma = a[:, :, :3] @ weights
-                small = resample_nearest(luma[:, :, None], resize_to,
-                                         resize_to)[:, :, 0]
-                d = C @ small @ C.T
-                block = d[:hash_size, :hash_size].ravel()
-                bits = block > np.median(block)
-                h = np.uint64(0)
-                for b in bits:
-                    h = (h << np.uint64(1)) | np.uint64(bool(b))
-                out.append((r.image_id, int(h.astype(np.int64))))
-            yield pd.DataFrame(out, columns=["image_id", "phash_px"])
+    def per_image(a, r):
+        a = a.astype(np.float64)
+        if a.shape[2] == 1:
+            luma = a[:, :, 0]
+        elif a.shape[2] == 2:  # gray + alpha
+            luma = a[:, :, 0]
+        else:
+            luma = a[:, :, :3] @ weights
+        small = resample_nearest(luma[:, :, None], resize_to,
+                                 resize_to)[:, :, 0]
+        d = C @ small @ C.T
+        block = d[:hash_size, :hash_size].ravel()
+        bits = block > np.median(block)
+        h = np.uint64(0)
+        for b in bits:
+            h = (h << np.uint64(1)) | np.uint64(bool(b))
+        yield (r.image_id, int(h.astype(np.int64)))
 
-    return images.select("image_id", "bytes").mapInPandas(
-        gen, schema="image_id string, phash_px long")
+    return map_images(
+        images, ["image_id", "bytes"],
+        "image_id string, phash_px long", per_image)
 
 
 def gdal_calc(images: DataFrame, calc: str,
@@ -2105,42 +1925,37 @@ def gdal_calc(images: DataFrame, calc: str,
     driver-side (strict ast whitelist, no eval) and fails fast; pixels
     evaluate map-only in Arrow batches. Emits per-image stats (+ PNG of
     the clipped result when ``emit_bytes``)."""
+    from ..codecs.png import encode_png
     from ..oracle.calcexpr import calc_eval
 
     calc_eval(calc, {chr(65 + i): np.zeros((1, 1)) for i in range(26)})
 
-    def gen(batches):
-        from ..codecs.png import encode_png
+    def per_image(a, r):
+        a = a.astype(np.float64)
+        if a.ndim == 2:
+            a = a[:, :, None]
+        nb = a.shape[2]
+        # default: A,B,C,... = bands 0,1,2,..., clamped to the last
+        # band for images with fewer bands (gray inputs alias all
+        # letters to band 0, so cross-band formulas still evaluate)
+        bm = band_map or {chr(65 + i): i for i in range(26)}
+        bindings = {k: a[:, :, min(v, nb - 1)]
+                    for k, v in bm.items()}
+        v = calc_eval(calc, bindings)
+        v = np.broadcast_to(v, a.shape[:2]).astype(np.float64)
+        u8 = np.clip(np.round(v), 0, 255).astype(np.uint8)
+        yield dict(
+            image_id=r.image_id, cs=int(checksum_image(v)[0]),
+            vmin=float(np.round(np.nanmin(v), 6)),
+            vmax=float(np.round(np.nanmax(v), 6)),
+            vmean=float(np.round(np.nanmean(v), 6)),
+            png=bytearray(encode_png(u8[:, :, None]))
+            if emit_bytes else None)
 
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                a = decode(bytes(r.bytes)).astype(np.float64)
-                if a.ndim == 2:
-                    a = a[:, :, None]
-                nb = a.shape[2]
-                # default: A,B,C,... = bands 0,1,2,..., clamped to the last
-                # band for images with fewer bands (gray inputs alias all
-                # letters to band 0, so cross-band formulas still evaluate)
-                bm = band_map or {chr(65 + i): i for i in range(26)}
-                bindings = {k: a[:, :, min(v, nb - 1)]
-                            for k, v in bm.items()}
-                v = calc_eval(calc, bindings)
-                v = np.broadcast_to(v, a.shape[:2]).astype(np.float64)
-                u8 = np.clip(np.round(v), 0, 255).astype(np.uint8)
-                out.append(dict(
-                    image_id=r.image_id, cs=int(checksum_image(v)[0]),
-                    vmin=float(np.round(np.nanmin(v), 6)),
-                    vmax=float(np.round(np.nanmax(v), 6)),
-                    vmean=float(np.round(np.nanmean(v), 6)),
-                    png=bytearray(encode_png(u8[:, :, None]))
-                    if emit_bytes else None))
-            yield pd.DataFrame(out, columns=[
-                "image_id", "cs", "vmin", "vmax", "vmean", "png"])
-
-    out = images.select("image_id", "bytes").mapInPandas(
-        gen, schema="image_id string, cs long, vmin double, vmax double, "
-                    "vmean double, png binary")
+    out = map_images(
+        images, ["image_id", "bytes"],
+        "image_id string, cs long, vmin double, vmax double, vmean double, "
+        "png binary", per_image)
     return out if emit_bytes else out.drop("png")
 
 
@@ -2157,35 +1972,29 @@ def raster_blend(base_images: DataFrame, overlay_images: DataFrame,
 
     One equi-join on image_id + one Arrow kernel pass — the join is the
     only shuffle, keyed by the id both tables already carry."""
+    from ..codecs.png import encode_png
     from ..oracle.blend import blend
 
     ov = overlay_images.select(
         F.col("image_id"), F.col("bytes").alias("overlay_bytes"))
     joined = base_images.select("image_id", "bytes").join(ov, "image_id")
 
-    def gen(batches):
-        from ..codecs.png import encode_png
+    def per_image(a, r):
+        b = decode(r.overlay_bytes)
+        if b.shape[:2] != a.shape[:2]:
+            b = resample_nearest(b, a.shape[0], a.shape[1])
+        v = blend(a, b, mode=operator, opacity=opacity)
+        cs = checksum_image(v)
+        yield dict(
+            image_id=r.image_id, bands=int(v.shape[2]),
+            cs1=int(cs[0]), cs2=int(cs[min(1, len(cs) - 1)]),
+            cs3=int(cs[min(2, len(cs) - 1)]),
+            png=bytearray(encode_png(v)) if emit_bytes else None)
 
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                a = decode(bytes(r.bytes))
-                b = decode(bytes(r.overlay_bytes))
-                if b.shape[:2] != a.shape[:2]:
-                    b = resample_nearest(b, a.shape[0], a.shape[1])
-                v = blend(a, b, mode=operator, opacity=opacity)
-                cs = checksum_image(v)
-                out.append(dict(
-                    image_id=r.image_id, bands=int(v.shape[2]),
-                    cs1=int(cs[0]), cs2=int(cs[min(1, len(cs) - 1)]),
-                    cs3=int(cs[min(2, len(cs) - 1)]),
-                    png=bytearray(encode_png(v)) if emit_bytes else None))
-            yield pd.DataFrame(out, columns=[
-                "image_id", "bands", "cs1", "cs2", "cs3", "png"])
-
-    out = joined.mapInPandas(
-        gen, schema="image_id string, bands int, cs1 long, cs2 long, "
-                    "cs3 long, png binary")
+    out = map_images(
+        joined, ["image_id", "bytes", "overlay_bytes"],
+        "image_id string, bands int, cs1 long, cs2 long, cs3 long, png binary",
+        per_image)
     return out if emit_bytes else out.drop("png")
 
 
@@ -2203,38 +2012,33 @@ def viewshed_cumulative(images: DataFrame, spacing: int = 10,
     parallel one at 10^12 scale) and the observer loop stays in numpy."""
     from ..oracle.viewshed import viewshed as _vs
 
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                a = decode(bytes(r.bytes))
-                a = (a[:, :, 0] if a.ndim == 3 else a).astype(np.float64)
-                if downsample_to and (a.shape[0] > downsample_to
-                                      or a.shape[1] > downsample_to):
-                    a = resample_nearest(a, downsample_to, downsample_to)
-                acc = np.zeros(a.shape, dtype=np.uint32)
-                n_obs = 0
-                for oy in range(0, a.shape[0], spacing):
-                    for ox in range(0, a.shape[1], spacing):
-                        acc += _vs(a, oy, ox, observer_height).astype(
-                            np.uint32)
-                        n_obs += 1
-                m = int(acc.max())
-                scaled = (np.floor(255.0 / m * acc).astype(np.uint32)
-                          if m else acc)
-                out.append(dict(
-                    image_id=r.image_id, n_observers=n_obs,
-                    max_count=m,
-                    mean_count=float(np.round(acc.mean(), 4)),
-                    cs=int(checksum_image(
-                        scaled.astype(np.uint8))[0]),
-                ))
-            yield pd.DataFrame(out, columns=[
-                "image_id", "n_observers", "max_count", "mean_count", "cs"])
+    def per_image(a, r):
+        a = (a[:, :, 0] if a.ndim == 3 else a).astype(np.float64)
+        if downsample_to and (a.shape[0] > downsample_to
+                              or a.shape[1] > downsample_to):
+            a = resample_nearest(a, downsample_to, downsample_to)
+        acc = np.zeros(a.shape, dtype=np.uint32)
+        n_obs = 0
+        for oy in range(0, a.shape[0], spacing):
+            for ox in range(0, a.shape[1], spacing):
+                acc += _vs(a, oy, ox, observer_height).astype(
+                    np.uint32)
+                n_obs += 1
+        m = int(acc.max())
+        scaled = (np.floor(255.0 / m * acc).astype(np.uint32)
+                  if m else acc)
+        yield dict(
+            image_id=r.image_id, n_observers=n_obs,
+            max_count=m,
+            mean_count=float(np.round(acc.mean(), 4)),
+            cs=int(checksum_image(
+                scaled.astype(np.uint8))[0]),
+        )
 
-    return images.select("image_id", "bytes").mapInPandas(
-        gen, schema="image_id string, n_observers int, max_count int, "
-                    "mean_count double, cs long")
+    return map_images(
+        images, ["image_id", "bytes"],
+        "image_id string, n_observers int, max_count int, mean_count double, "
+        "cs long", per_image)
 
 
 def dataset_check(images: DataFrame) -> DataFrame:
@@ -2247,16 +2051,13 @@ def dataset_check(images: DataFrame) -> DataFrame:
 
     Map-only (one Arrow pass) + one tiny groupBy(fmt); errors never
     propagate, they become rows."""
-    import pandas as pd
-
-    from ..codecs.registry import decode as _decode
 
     def scan(it):
         for pdf in it:
             fmts, oks, errs = [], [], []
             for b, fmt in zip(pdf["bytes"], pdf["fmt"]):
                 try:
-                    px = _decode(bytes(b), fmt)
+                    px = decode(bytes(b), fmt)
                     ok = px.size > 0
                     err = "" if ok else "empty raster"
                 except Exception as e:  # noqa: BLE001 — the whole point

@@ -10,11 +10,10 @@ shuffles except the per-value histogram groupBy (map-side combined)."""
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
-from ..codecs.registry import decode
 from ..oracle.checksum import checksum_image
+from .imagemap import map_images
 
 
 def default_rat(images: DataFrame, band: int = 1) -> DataFrame:
@@ -24,20 +23,16 @@ def default_rat(images: DataFrame, band: int = 1) -> DataFrame:
     (GFU_MinMax) and COUNT (GFU_PixelCount).  Per-image np.bincount in
     the decode pass, exploded to rows; no corpus-wide shuffle."""
 
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                a = decode(r.bytes)
-                b = a[..., band - 1] if a.ndim == 3 else a
-                cnt = np.bincount(b.ravel(), minlength=256)
-                for v in np.nonzero(cnt)[0]:
-                    out.append(dict(image_id=r.image_id, value=int(v),
-                                    count=int(cnt[v])))
-            yield pd.DataFrame(out, columns=["image_id", "value", "count"])
+    def per_image(a, r):
+        b = a[..., band - 1] if a.ndim == 3 else a
+        cnt = np.bincount(b.ravel(), minlength=256)
+        for v in np.nonzero(cnt)[0]:
+            yield dict(image_id=r.image_id, value=int(v),
+                       count=int(cnt[v]))
 
-    return images.select("image_id", "bytes").mapInPandas(
-        gen, schema="image_id string, value int, count long")
+    return map_images(
+        images, ["image_id", "bytes"],
+        "image_id string, value int, count long", per_image)
 
 
 def rat_row_of_value(rat_rows: list, value: float) -> int:
@@ -66,28 +61,23 @@ def classify_with_rat(images: DataFrame, rat_rows: list,
     cids = np.array([r[2] for r in rows], dtype=np.int64)
     n_rows = len(rows)
 
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                a = decode(r.bytes)
-                b = (a[..., band - 1] if a.ndim == 3 else a).astype(
-                    np.float64)
-                idx = np.searchsorted(mins, b.ravel(), side="right") - 1
-                ok = (idx >= 0) & (b.ravel() < maxs[np.clip(idx, 0, None)])
-                cls = np.where(ok, cids[np.clip(idx, 0, n_rows - 1)], -1)
-                counts = [int((cls == r2[2]).sum()) for r2 in rows]
-                cls_img = cls.reshape(b.shape).astype(np.int64)
-                out.append(dict(
-                    image_id=r.image_id,
-                    n_classes=int(len(np.unique(cls[cls >= 0]))),
-                    cs=int(checksum_image(np.clip(cls_img, 0, 255)
-                                          .astype(np.uint8))[0]),
-                    class_counts=counts,
-                ))
-            yield pd.DataFrame(
-                out, columns=["image_id", "n_classes", "cs", "class_counts"])
+    def per_image(a, r):
+        b = (a[..., band - 1] if a.ndim == 3 else a).astype(
+            np.float64)
+        idx = np.searchsorted(mins, b.ravel(), side="right") - 1
+        ok = (idx >= 0) & (b.ravel() < maxs[np.clip(idx, 0, None)])
+        cls = np.where(ok, cids[np.clip(idx, 0, n_rows - 1)], -1)
+        counts = [int((cls == r2[2]).sum()) for r2 in rows]
+        cls_img = cls.reshape(b.shape).astype(np.int64)
+        yield dict(
+            image_id=r.image_id,
+            n_classes=int(len(np.unique(cls[cls >= 0]))),
+            cs=int(checksum_image(np.clip(cls_img, 0, 255)
+                                  .astype(np.uint8))[0]),
+            class_counts=counts,
+        )
 
-    return images.select("image_id", "bytes").mapInPandas(
-        gen, schema="image_id string, n_classes int, cs long, "
-                    "class_counts array<long>")
+    return map_images(
+        images, ["image_id", "bytes"],
+        "image_id string, n_classes int, cs long, class_counts array<long>",
+        per_image)

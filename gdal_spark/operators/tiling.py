@@ -3,11 +3,12 @@
 Execution shape (chosen for 10^12-image scale):
 
 * **Map-only, one task per input partition.** Each image's tiles depend
-  only on that image's row, so rendering is ``mapInPandas`` over the image
-  table: zero shuffle, bytes deserialized once per row, Arrow-batched. The
-  reference reaches the same shape with a process pool over tile jobs
-  (gdal2tiles multi_threaded_tiling :4512, apps/gdalalg_raster_tile.cpp
-  worker processes :3628-3810); Spark gives it cluster-wide.
+  only on that image's row, so rendering is the per-image loop
+  ``imagemap.map_images`` over the image table: zero shuffle, bytes
+  decoded once per row, Arrow-batched. The reference reaches the same
+  shape with a process pool over tile jobs (gdal2tiles
+  multi_threaded_tiling :4512, apps/gdalalg_raster_tile.cpp worker
+  processes :3628-3810); Spark gives it cluster-wide.
 * **Overview levels inside the same task.** Level z-1 is the 2x2
   reduction of level z, exactly like create_overview_tile /
   group_overview_base_tiles (gdal2tiles.py:1466-1530, :1661-1689). Overview
@@ -24,18 +25,19 @@ Execution shape (chosen for 10^12-image scale):
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..codecs.registry import decode, encode
 from ..oracle.checksum import checksum_image
 from ..oracle.tiling import TILE, build_pyramid, render_image_tiles
+from .imagemap import map_images
 
 TILE_SCHEMA = (
     "image_id string, z int, x int, y int, tile binary, "
     "cs1 long, cs2 long, cs3 long"
 )
 TILE_COLUMNS = ["image_id", "z", "x", "y", "tile", "cs1", "cs2", "cs3"]
+_IMAGE_COLS = ["image_id", "bytes", "lon", "lat", "gsd_m"]
 
 
 def _tile_row(image_id, z, tx, ty, arr, codec: str | None = "png") -> dict:
@@ -66,34 +68,16 @@ def _decode_raw_tile(b: bytes) -> np.ndarray:
     return a.reshape(TILE, TILE) if bands == 1 else a.reshape(TILE, TILE, bands)
 
 
-def _render_images(images: DataFrame, tiles_of, codec: str | None
-                   ) -> DataFrame:
-    """The one render loop: decode each image row once and emit one tile
-    row per ``(z, x, y, array)`` that ``tiles_of(arr, row)`` yields."""
-
-    def gen(batches):
-        for pdf in batches:
-            rows = [
-                _tile_row(r.image_id, z, tx, ty, tile, codec)
-                for r in pdf.itertuples(index=False)
-                for z, tx, ty, tile in tiles_of(decode(r.bytes), r)
-            ]
-            yield pd.DataFrame(rows, columns=TILE_COLUMNS)
-
-    return images.select(
-        "image_id", "bytes", "lon", "lat", "gsd_m"
-    ).mapInPandas(gen, schema=TILE_SCHEMA)
-
-
 def render_base_tiles(images: DataFrame, method: str = "nearest",
                       zoom: int | None = None, codec: str | None = "png"
                       ) -> DataFrame:
     """images (input_hint schema) -> base tile rows at native (or fixed) zoom."""
-    return _render_images(
-        images,
-        lambda arr, r: render_image_tiles(
-            arr, r.lon, r.lat, r.gsd_m, method, zoom=zoom),
-        codec,
+    return map_images(
+        images, _IMAGE_COLS, TILE_SCHEMA,
+        lambda arr, r: (
+            _tile_row(r.image_id, z, tx, ty, t, codec)
+            for z, tx, ty, t in render_image_tiles(
+                arr, r.lon, r.lat, r.gsd_m, method, zoom=zoom)),
     )
 
 
@@ -112,12 +96,12 @@ def build_tile_pyramid(images: DataFrame, tminz: int = 0,
     checksums, measured on a 4-vCPU Xeon with numpy 1.26), and a consumer
     that does touch ``tile`` fails loudly instead of silently paying for
     unread bytes."""
-    return _render_images(
-        images,
+    return map_images(
+        images, _IMAGE_COLS, TILE_SCHEMA,
         lambda arr, r: (
-            (z, tx, ty, t) for (z, tx, ty), t in build_pyramid(
+            _tile_row(r.image_id, z, tx, ty, t, codec)
+            for (z, tx, ty), t in build_pyramid(
                 arr, r.lon, r.lat, r.gsd_m, tminz, method).items()),
-        codec,
     )
 
 
@@ -147,9 +131,7 @@ def write_cog_directory(images: DataFrame, root: str,
                 f.write(blob)
             acc.add(1)
 
-    images.select("image_id", "bytes", "lon", "lat", "gsd_m").foreachPartition(
-        write_part
-    )
+    images.select(*_IMAGE_COLS).foreachPartition(write_part)
     return acc.value
 
 
@@ -165,8 +147,7 @@ def write_tile_directory(tiles: DataFrame, root: str, scheme: str = "xyz",
     overwrite each other in task order, nondeterministically. Callers who
     want blended tiles should mosaic first (operators.rasterops.mosaic_tiles)
     and pass the result here. The file count comes from a LongAccumulator
-    inside the write pass, not a separate count() job (the round-1 version
-    re-executed the whole render to count).
+    inside the write pass, not a separate count() job.
 
     ``lineage=True`` (default) additionally writes one atomic JSON
     manifest per TASK PARTITION under ``{root}/_lineage/`` (partition id,
@@ -281,16 +262,3 @@ def read_tile_lineage(root: str) -> list[dict]:
             with open(os.path.join(ldir, name)) as f:
                 out.append(json.load(f))
     return out
-
-
-# Container sinks (MBTiles / GeoPackage) live in io.containers — the
-# single-file single-writer formats; re-exported here for the operator
-# surface (the round-3 review asked the io/ package to earn its keep).
-from ..io.containers import (  # noqa: E402,F401
-    read_geopackage_features,
-    read_geopackage_tiles,
-    read_mbtiles,
-    write_geopackage_features,
-    write_geopackage_tiles,
-    write_mbtiles,
-)

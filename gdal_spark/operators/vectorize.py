@@ -14,13 +14,13 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from ..codecs.registry import decode
 from ..oracle.checksum import checksum_image
 from ..oracle.rasterize import (
     polygonize as _polygonize,
     proximity as _proximity,
     sieve as _sieve,
 )
+from .imagemap import map_images
 
 
 def polygonize(images: DataFrame, quantize: int = 64,
@@ -40,40 +40,26 @@ def polygonize(images: DataFrame, quantize: int = 64,
     from ..oracle.rasterize import polygonize_rings
     from ..oracle.resample import resample_nearest
 
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                a = decode(r.bytes)[:, :, 0]
-                if downsample_to and (a.shape[0] > downsample_to
-                                      or a.shape[1] > downsample_to):
-                    a = resample_nearest(a, downsample_to, downsample_to)
-                q = (a // quantize).astype(np.uint8)
-                if emit_rings:
-                    for comp_id, (val, cnt, outer, holes) in enumerate(
-                        polygonize_rings(q, connectivity), start=1
-                    ):
-                        out.append(
-                            dict(image_id=r.image_id, comp_id=comp_id,
-                                 value=int(val), pixel_count=cnt,
-                                 wkb=wkb_polygon(outer), n_holes=holes)
-                        )
-                else:
-                    for comp_id, (val, cnt, r0, c0, r1, c1) in enumerate(
-                        _polygonize(q, connectivity), start=1
-                    ):
-                        out.append(
-                            dict(image_id=r.image_id, comp_id=comp_id,
-                                 value=int(val), pixel_count=cnt,
-                                 min_row=r0, min_col=c0, max_row=r1, max_col=c1)
-                        )
-            cols = (
-                ["image_id", "comp_id", "value", "pixel_count", "wkb", "n_holes"]
-                if emit_rings
-                else ["image_id", "comp_id", "value", "pixel_count",
-                      "min_row", "min_col", "max_row", "max_col"]
-            )
-            yield pd.DataFrame(out, columns=cols)
+    def per_image(a, r):
+        a = a[:, :, 0]
+        if downsample_to and (a.shape[0] > downsample_to
+                              or a.shape[1] > downsample_to):
+            a = resample_nearest(a, downsample_to, downsample_to)
+        q = (a // quantize).astype(np.uint8)
+        if emit_rings:
+            for comp_id, (val, cnt, outer, holes) in enumerate(
+                polygonize_rings(q, connectivity), start=1
+            ):
+                yield dict(image_id=r.image_id, comp_id=comp_id,
+                           value=int(val), pixel_count=cnt,
+                           wkb=wkb_polygon(outer), n_holes=holes)
+        else:
+            for comp_id, (val, cnt, r0, c0, r1, c1) in enumerate(
+                _polygonize(q, connectivity), start=1
+            ):
+                yield dict(image_id=r.image_id, comp_id=comp_id,
+                           value=int(val), pixel_count=cnt,
+                           min_row=r0, min_col=c0, max_row=r1, max_col=c1)
 
     schema = (
         "image_id string, comp_id int, value int, pixel_count long, "
@@ -82,7 +68,7 @@ def polygonize(images: DataFrame, quantize: int = 64,
         else "image_id string, comp_id int, value int, pixel_count long, "
              "min_row int, min_col int, max_row int, max_col int"
     )
-    return images.select("image_id", "bytes").mapInPandas(gen, schema=schema)
+    return map_images(images, ["image_id", "bytes"], schema, per_image)
 
 
 def sieve_filter(images: DataFrame, threshold: int = 4, quantize: int = 64,
@@ -94,26 +80,20 @@ def sieve_filter(images: DataFrame, threshold: int = 4, quantize: int = 64,
     from ..oracle.rasterize import label_components
     from ..oracle.resample import resample_nearest
 
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                a = decode(r.bytes)[:, :, 0]
-                if downsample_to:
-                    a = resample_nearest(a, downsample_to, downsample_to)
-                q = (a // quantize).astype(np.uint8)
-                _, n_before = label_components(q, connectivity)
-                s = _sieve(q, threshold, connectivity)
-                _, n_after = label_components(s, connectivity)
-                out.append(
-                    dict(image_id=r.image_id, n_before=n_before,
-                         n_after=n_after, cs=checksum_image(s)[0])
-                )
-            yield pd.DataFrame(out, columns=["image_id", "n_before", "n_after", "cs"])
+    def per_image(a, r):
+        a = a[:, :, 0]
+        if downsample_to:
+            a = resample_nearest(a, downsample_to, downsample_to)
+        q = (a // quantize).astype(np.uint8)
+        _, n_before = label_components(q, connectivity)
+        s = _sieve(q, threshold, connectivity)
+        _, n_after = label_components(s, connectivity)
+        yield dict(image_id=r.image_id, n_before=n_before,
+                   n_after=n_after, cs=checksum_image(s)[0])
 
-    return images.select("image_id", "bytes").mapInPandas(
-        gen, schema="image_id string, n_before int, n_after int, cs long"
-    )
+    return map_images(
+        images, ["image_id", "bytes"],
+        "image_id string, n_before int, n_after int, cs long", per_image)
 
 
 def proximity_map(images: DataFrame, target_value: int = 0,
@@ -135,38 +115,32 @@ def proximity_map(images: DataFrame, target_value: int = 0,
     (distances and maxdist in georeferenced units)."""
     from ..oracle.resample import resample_nearest
 
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                a = decode(r.bytes)[:, :, 0]
-                if downsample_to:
-                    a = resample_nearest(a, downsample_to, downsample_to)
-                mask = a == target_value
-                if not mask.any():
-                    out.append(dict(image_id=r.image_id, dmax=-1.0, dmean=-1.0))
-                    continue
-                d = _proximity(mask) * cell_size
-                if max_distance is not None:
-                    within = d <= max_distance
-                    if fixed_buf_val is not None:
-                        d = np.where(within, fixed_buf_val, nodata)
-                    else:
-                        d = np.where(within, d, nodata)
-                elif fixed_buf_val is not None:
-                    d = np.full_like(d, fixed_buf_val)
-                dmax, dmean = float(d.max()), float(d.mean())
-                if round_to is not None:
-                    dmax = float(np.round(dmax, round_to))
-                    dmean = float(np.round(dmean, round_to))
-                out.append(
-                    dict(image_id=r.image_id, dmax=dmax, dmean=dmean)
-                )
-            yield pd.DataFrame(out, columns=["image_id", "dmax", "dmean"])
+    def per_image(a, r):
+        a = a[:, :, 0]
+        if downsample_to:
+            a = resample_nearest(a, downsample_to, downsample_to)
+        mask = a == target_value
+        if not mask.any():
+            yield dict(image_id=r.image_id, dmax=-1.0, dmean=-1.0)
+            return
+        d = _proximity(mask) * cell_size
+        if max_distance is not None:
+            within = d <= max_distance
+            if fixed_buf_val is not None:
+                d = np.where(within, fixed_buf_val, nodata)
+            else:
+                d = np.where(within, d, nodata)
+        elif fixed_buf_val is not None:
+            d = np.full_like(d, fixed_buf_val)
+        dmax, dmean = float(d.max()), float(d.mean())
+        if round_to is not None:
+            dmax = float(np.round(dmax, round_to))
+            dmean = float(np.round(dmean, round_to))
+        yield dict(image_id=r.image_id, dmax=dmax, dmean=dmean)
 
-    return images.select("image_id", "bytes").mapInPandas(
-        gen, schema="image_id string, dmax double, dmean double"
-    )
+    return map_images(
+        images, ["image_id", "bytes"],
+        "image_id string, dmax double, dmean double", per_image)
 
 
 def rasterize_layer(polys: DataFrame, minx: float, maxy: float, cell: float,
@@ -369,56 +343,40 @@ def raster_as_features(images, geometry: str = "polygon",
     BAND_n values as an array column.
 
     Map-only: the per-pixel explode and the WKB build happen inside one
-    Arrow pass (vectorized struct-packing, no per-row Python objects
-    beyond the final column)."""
-    import numpy as np
-    import pandas as pd
-
-    from ..codecs.registry import decode
-    from ..oracle import geom as G
+    Arrow pass (the WKB is packed for all pixels of an image at once)."""
     from ..oracle.tiling import geotransform_3857
 
     if geometry not in ("none", "point", "polygon"):
         raise ValueError(f"bad geometry type {geometry!r}")
 
-    def gen(batches):
-        for pdf in batches:
-            frames = []
-            for r in pdf.itertuples(index=False):
-                a = decode(bytes(r.bytes))
-                if a.ndim == 2:
-                    a = a[:, :, None]
-                h, w, nb = a.shape
-                gt = geotransform_3857(r.lon, r.lat, w, h, r.gsd_m)
-                cc, rr = np.meshgrid(np.arange(w), np.arange(h))
-                cc, rr = cc.ravel(), rr.ravel()
-                vals = a.reshape(-1, nb).astype(np.float64)
-                if skip_nodata is not None:
-                    keep = vals[:, 0] != skip_nodata
-                    cc, rr, vals = cc[keep], rr[keep], vals[keep]
-                if geometry == "point":
-                    xg = gt[0] + (cc + 0.5) * gt[1]
-                    yg = gt[3] + (rr + 0.5) * gt[5]
-                    wkbs = _point_wkb_batch(xg, yg)
-                elif geometry == "polygon":
-                    x0 = gt[0] + cc * gt[1]
-                    y0 = gt[3] + rr * gt[5]
-                    wkbs = _pixel_box_wkb_batch(x0, y0, gt[1], gt[5])
-                else:
-                    wkbs = [None] * len(cc)
-                frames.append(pd.DataFrame({
-                    "image_id": r.image_id,
-                    "px": cc.astype(np.int32), "py": rr.astype(np.int32),
-                    "wkb": wkbs,
-                    "bands": list(vals),
-                }))
-            yield (pd.concat(frames) if frames else pd.DataFrame(
-                columns=["image_id", "px", "py", "wkb", "bands"]))
+    def per_image(a, r):
+        if a.ndim == 2:
+            a = a[:, :, None]
+        h, w, nb = a.shape
+        gt = geotransform_3857(r.lon, r.lat, w, h, r.gsd_m)
+        cc, rr = np.meshgrid(np.arange(w), np.arange(h))
+        cc, rr = cc.ravel(), rr.ravel()
+        vals = a.reshape(-1, nb).astype(np.float64)
+        if skip_nodata is not None:
+            keep = vals[:, 0] != skip_nodata
+            cc, rr, vals = cc[keep], rr[keep], vals[keep]
+        if geometry == "point":
+            xg = gt[0] + (cc + 0.5) * gt[1]
+            yg = gt[3] + (rr + 0.5) * gt[5]
+            wkbs = _point_wkb_batch(xg, yg)
+        elif geometry == "polygon":
+            x0 = gt[0] + cc * gt[1]
+            y0 = gt[3] + rr * gt[5]
+            wkbs = _pixel_box_wkb_batch(x0, y0, gt[1], gt[5])
+        else:
+            wkbs = [None] * len(cc)
+        yield from zip([r.image_id] * len(cc), cc.astype(np.int32),
+                       rr.astype(np.int32), wkbs, vals)
 
-    return images.select("image_id", "bytes", "lon", "lat", "gsd_m"
-                         ).mapInPandas(
-        gen, schema="image_id string, px int, py int, wkb binary, "
-                    "bands array<double>")
+    return map_images(
+        images, ["image_id", "bytes", "lon", "lat", "gsd_m"],
+        "image_id string, px int, py int, wkb binary, bands array<double>",
+        per_image)
 
 
 def _point_wkb_batch(xs, ys):

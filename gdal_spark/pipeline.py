@@ -199,7 +199,7 @@ def run_pipeline(images: DataFrame, pipeline: str | list,
     decode -> kernels -> (optional PNG encode) + checksum/stats. Accepts
     the CLI string, a GDALG JSON blob, or a parsed [(step, args)] list."""
     from .codecs.png import encode_png
-    from .codecs.registry import decode
+    from .operators.imagemap import map_images
     from .oracle.checksum import checksum_image
 
     if isinstance(pipeline, (str, bytes)) and str(pipeline).lstrip().startswith("{"):
@@ -214,34 +214,28 @@ def run_pipeline(images: DataFrame, pipeline: str | list,
         if name not in KNOWN_STEPS:
             raise ValueError(f"unknown pipeline step {name!r}")
 
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                a = decode(bytes(r.bytes)).astype(np.float64)
-                ctx = {"gsd_m": float(r.gsd_m), "lon": float(r.lon),
-                       "lat": float(r.lat)}
-                for name, args in steps:
-                    a = _apply_step(name, args, a, ctx)
-                u8 = np.clip(np.round(a), 0, 255).astype(np.uint8)
-                # checksum the float chain result (matches the standalone
-                # operators' convention); u8 is only the PNG payload
-                cs = checksum_image(a)
-                out.append(dict(
-                    image_id=r.image_id, w2=int(a.shape[1]),
-                    h2=int(a.shape[0]), bands=int(a.shape[2]),
-                    cs=int(cs[0] if hasattr(cs, "__len__") else cs),
-                    vmin=float(np.round(a.min(), 6)),
-                    vmax=float(np.round(a.max(), 6)),
-                    png=bytearray(encode_png(u8)) if emit_bytes else None))
-            yield pd.DataFrame(out, columns=[
-                "image_id", "w2", "h2", "bands", "cs", "vmin", "vmax",
-                "png"])
+    def per_image(a, r):
+        a = a.astype(np.float64)
+        ctx = {"gsd_m": float(r.gsd_m), "lon": float(r.lon),
+               "lat": float(r.lat)}
+        for name, args in steps:
+            a = _apply_step(name, args, a, ctx)
+        u8 = np.clip(np.round(a), 0, 255).astype(np.uint8)
+        # checksum the float chain result (matches the standalone
+        # operators' convention); u8 is only the PNG payload
+        cs = checksum_image(a)
+        yield dict(
+            image_id=r.image_id, w2=int(a.shape[1]),
+            h2=int(a.shape[0]), bands=int(a.shape[2]),
+            cs=int(cs[0] if hasattr(cs, "__len__") else cs),
+            vmin=float(np.round(a.min(), 6)),
+            vmax=float(np.round(a.max(), 6)),
+            png=bytearray(encode_png(u8)) if emit_bytes else None)
 
-    out = images.select("image_id", "bytes", "lon", "lat", "gsd_m"
-                        ).mapInPandas(
-        gen, schema="image_id string, w2 int, h2 int, bands int, cs long, "
-                    "vmin double, vmax double, png binary")
+    out = map_images(
+        images, ["image_id", "bytes", "lon", "lat", "gsd_m"],
+        "image_id string, w2 int, h2 int, bands int, cs long, vmin double, "
+        "vmax double, png binary", per_image)
     return out if emit_bytes else out.drop("png")
 
 

@@ -45,3 +45,57 @@ def test_entry_module_contract():
     assert sum(1 for n in qq[:50] if n in oo) == 50
     # oracle SQL strings are non-empty ANSI SQL
     assert all(isinstance(s, str) and s.strip() for s in oo.values())
+
+
+# Loops that decode outside ``map_images``, each for a reason that loop
+# cannot express: per-image groups of joined points, two blobs with an
+# equal-bytes short circuit, a second blob per row, one per-pixel frame
+# per image, the decode error as output, and the foreachPartition sinks.
+_OWN_DECODE_LOOPS = {
+    ("operators/rasterops.py", "sample_at_points"),
+    ("operators/rasterops.py", "raster_compare"),
+    ("operators/rasterops.py", "raster_blend"),
+    ("operators/rasterops.py", "raster_to_xyz"),
+    ("operators/rasterops.py", "dataset_check"),
+    ("operators/tiling.py", "write_cog_directory"),
+    ("io/raw_formats.py", "write_envi"),
+    ("io/raw_formats.py", "write_xyz"),
+    ("io/ascii_grid.py", "write_ascii_grids"),
+}
+
+
+def test_decode_only_in_the_image_loop():
+    """A per-row ``codecs.registry.decode`` call inside a nested function
+    is a hand-copied image loop; operators route through
+    ``operators.imagemap.map_images`` instead."""
+    import ast
+
+    root = os.path.dirname(os.path.abspath(Q.__file__))
+    found = []
+    for dirpath, _, files in os.walk(root):
+        for fname in sorted(files):
+            if not fname.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, fname)
+            rel = os.path.relpath(path, root).replace(os.sep, "/")
+            if rel == "operators/imagemap.py":
+                continue
+            tree = ast.parse(open(path).read())
+            names = {a.asname or a.name for n in ast.walk(tree)
+                     if isinstance(n, ast.ImportFrom)
+                     and (n.module or "").endswith("codecs.registry")
+                     for a in n.names if a.name == "decode"}
+            for top in tree.body:
+                if not isinstance(top, ast.FunctionDef):
+                    continue
+                for inner in ast.walk(top):
+                    if inner is top or not isinstance(
+                            inner, (ast.FunctionDef, ast.Lambda)):
+                        continue
+                    for c in ast.walk(inner):
+                        if (isinstance(c, ast.Call)
+                                and isinstance(c.func, ast.Name)
+                                and c.func.id in names
+                                and (rel, top.name) not in _OWN_DECODE_LOOPS):
+                            found.append(f"{rel}:{c.lineno} ({top.name})")
+    assert not found, f"per-image loops outside map_images: {sorted(set(found))}"

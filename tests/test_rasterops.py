@@ -44,6 +44,26 @@ class TestTranslate:
             np.testing.assert_array_equal(decode(row["bytes"]), exp)
 
 
+    def test_projwin_outside_drops_row(self, spark, imgs_pdf):
+        from gdal_spark.operators.rasterops import translate
+
+        src = imgs_pdf.iloc[0]
+        far = dict(src, image_id="far", lon=src.lon + 20.0)
+        pdf = pd.DataFrame([dict(src, image_id="a"), dict(src, image_id="b"),
+                            far])
+        a = decode(src.bytes)
+        gt = geotransform_3857(src.lon, src.lat, a.shape[1], a.shape[0],
+                               src.gsd_m)
+        projwin = (gt[0] + 3 * gt[1], gt[3] + 2 * gt[5],
+                   gt[0] + 13 * gt[1], gt[3] + 9 * gt[5])
+        got = translate(spark.createDataFrame(pdf), projwin=projwin
+                        ).toPandas().set_index("image_id")
+        assert sorted(got.index) == ["a", "b"]
+        for row in got.itertuples():
+            assert (row.w2, row.h2) == (10, 7)
+            np.testing.assert_array_equal(decode(row.bytes), a[2:9, 3:13])
+
+
 class TestWarp:
     @pytest.mark.parametrize("method", ["nearest", "bilinear"])
     def test_warp_matches_oracle(self, spark, imgs, imgs_pdf, method):

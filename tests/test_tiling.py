@@ -51,6 +51,30 @@ def test_base_tiles_match_oracle(spark, images_pdf, images_sdf, method):
         )
 
 
+def test_map_images_rows(spark, images_pdf, images_sdf):
+    from gdal_spark.operators.imagemap import map_images
+
+    cols, schema = ["image_id", "bytes"], "image_id string, k int, h long"
+    empty = map_images(images_sdf, cols, schema, lambda a, r: ()).toPandas()
+    assert len(empty) == 0 and list(empty.columns) == ["image_id", "k", "h"]
+
+    def as_tuples(a, r):
+        for k in range(3):
+            yield (r.image_id, k, a.shape[0])
+
+    def as_dicts(a, r):
+        for k in range(3):
+            yield dict(h=a.shape[0], k=k, image_id=r.image_id)
+
+    by_tuple = map_images(images_sdf, cols, schema, as_tuples).collect()
+    assert by_tuple == map_images(images_sdf, cols, schema, as_dicts).collect()
+    assert len(by_tuple) == 3 * len(images_pdf)
+    for r in images_pdf.itertuples(index=False):
+        mine = [row for row in by_tuple if row.image_id == r.image_id]
+        assert [row.k for row in mine] == [0, 1, 2]
+        assert {row.h for row in mine} == {r.h}
+
+
 def test_native_zoom_spread(images_pdf):
     zs = {native_zoom(g) for g in images_pdf["gsd_m"].unique()}
     assert zs == {13, 11, 10, 8}  # gsd 10/50/100/500 m/px
@@ -167,9 +191,8 @@ class TestMBTiles:
 
         from gdal_spark.codecs.registry import decode as _dec
         from gdal_spark.fixtures.images import images_df
-        from gdal_spark.operators.tiling import (read_mbtiles,
-                                                 render_base_tiles,
-                                                 write_mbtiles,
+        from gdal_spark.io.containers import read_mbtiles, write_mbtiles
+        from gdal_spark.operators.tiling import (render_base_tiles,
                                                  write_tile_directory)
 
         imgs = images_df(spark, 6)
@@ -205,9 +228,9 @@ class TestGeoPackage:
         import sqlite3
 
         from gdal_spark.fixtures.images import images_df
-        from gdal_spark.operators.tiling import (read_geopackage_tiles,
-                                                 render_base_tiles,
-                                                 write_geopackage_tiles)
+        from gdal_spark.io.containers import (read_geopackage_tiles,
+                                              write_geopackage_tiles)
+        from gdal_spark.operators.tiling import render_base_tiles
         from gdal_spark.oracle.mercator import ORIGIN_SHIFT, resolution
 
         imgs = images_df(spark, 6)
@@ -253,8 +276,8 @@ class TestGeoPackageFeatures:
         import pandas as pd
 
         from gdal_spark.fixtures.tile_grid import wkb_polygon
-        from gdal_spark.operators.tiling import (read_geopackage_features,
-                                                 write_geopackage_features)
+        from gdal_spark.io.containers import (read_geopackage_features,
+                                              write_geopackage_features)
         from gdal_spark.oracle import geom as G
 
         sq = lambda x0, y0, x1, y1: np.array(
