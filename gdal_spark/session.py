@@ -6,6 +6,15 @@ sized to the local core count (on a real cluster this is set per job size).
 ``SESSION_CONFS`` holds the confs a running session accepts: ``get_spark``
 builds with them and ``runtime.ensure_runtime`` sets them on a session
 built elsewhere.
+
+``get_spark`` also starts the Python workers through ``gdal_spark.workerd``,
+which imports the installed, byte-compiled pyspark instead of Spark's
+source archives. That conf (``spark.python.daemon.module``) is static, so
+it is not in ``SESSION_CONFS``: ``ensure_runtime`` cannot set it on a
+running session, and sessions it hardens, like the ``jobs/*.py``
+spark-submit runs, keep Spark's default daemon. Under ``--py-files`` the
+package reaches the workers only as a per-task include, after the daemon
+has started, so the daemon could not import ``gdal_spark.workerd`` there.
 """
 
 from __future__ import annotations
@@ -15,6 +24,7 @@ import os
 from pyspark.sql import SparkSession
 
 PKG_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+DAEMON_MODULE = "gdal_spark.workerd"
 
 SESSION_CONFS = {
     "spark.sql.adaptive.enabled": "true",
@@ -77,6 +87,7 @@ def get_spark(
         "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
         "spark.sql.parquet.compression.codec": "zstd",
         "spark.ui.enabled": "false",
+        "spark.python.daemon.module": DAEMON_MODULE,
         **(extra_conf or {}),
     }
     b = SparkSession.builder.master(f"local[{cores}]").appName(app_name)
