@@ -18,8 +18,10 @@ Execution shape (chosen for 10^12-image scale):
 * **Skew**: none beyond one image's own tile range — the work follows
   images, not locations.
 * **Resume** (--resume semantics, gdal2tiles.py:1492-1495) lives in
-  streaming.incremental.resume_tiles: it anti-joins the planned keys
-  against the already-written sink before any decode work.
+  streaming.incremental.resume_tiles: it anti-joins the rendered tile
+  keys against the already-written sink, so only new tiles are written.
+  The join sits above the render ``mapInPandas``, which Spark cannot push
+  it through: every image is still decoded and rendered.
 """
 
 from __future__ import annotations
@@ -146,8 +148,9 @@ def write_tile_directory(tiles: DataFrame, root: str, scheme: str = "xyz",
     (lowest image_id wins) before writing — without this, collisions
     overwrite each other in task order, nondeterministically. Callers who
     want blended tiles should mosaic first (operators.rasterops.mosaic_tiles)
-    and pass the result here. The file count comes from a LongAccumulator
-    inside the write pass, not a separate count() job.
+    and pass the result here. With ``lineage=True`` the file count is the
+    sum of this pass's manifests; with ``lineage=False`` it comes from a
+    LongAccumulator inside the write pass. Neither runs a count() job.
 
     ``lineage=True`` (default) additionally writes one atomic JSON
     manifest per TASK PARTITION under ``{root}/_lineage/`` (partition id,
@@ -175,7 +178,6 @@ def write_tile_directory(tiles: DataFrame, root: str, scheme: str = "xyz",
     else:
         one_per_key = tiles.dropDuplicates(["z", "x", "y"])
     acc = tiles.sparkSession.sparkContext.accumulator(0)
-    bytes_acc = tiles.sparkSession.sparkContext.accumulator(0)
 
     # next generation index: scan once driver-side before the write pass
     # (legacy un-prefixed manifests count as generation 0)
@@ -208,7 +210,6 @@ def write_tile_directory(tiles: DataFrame, root: str, scheme: str = "xyz",
             with open(os.path.join(d, f"{y}.{ext}"), "wb") as f:
                 f.write(blob)
             acc.add(1)
-            bytes_acc.add(len(blob))
             n += 1
             total += len(blob)
             zmin = z if zmin is None else min(zmin, z)

@@ -436,16 +436,16 @@ def run_vector_pipeline(features: DataFrame, pipeline: str | list,
                     F.expr(f"ST_IsValid({wkb_col})").cast("int"))
         elif name == "combine":
             # gdal vector combine (apps/gdalalg_vector_combine.cpp):
-            # features -> collections, optionally per group-by field(s);
-            # nested multiparts flatten unless keep-nested
+            # features -> collections, optionally per group-by field(s).
+            # Multipart inputs always flatten into their parts.
+            # keep_nested is accepted but changes nothing: the engine's
+            # 2-level WKB model cannot nest a Multi* inside a Multi*.
             keys = ([k.strip() for k in args["group_by"].split(",")]
                     if "group_by" in args else [])
-            keep_nested = args.get("keep_nested", "false") == "true"
             agg = (df.groupBy(*keys) if keys else df.groupBy()).agg(
                 F.collect_list(wkb_col).alias("_parts"))
             df = agg.withColumn(
-                wkb_col,
-                _combine_udf(keep_nested)(F.col("_parts"))).drop("_parts")
+                wkb_col, _combine_udf()(F.col("_parts"))).drop("_parts")
     return df
 
 
@@ -477,10 +477,10 @@ def _promote_multi_udf(target: str):
     return _udf
 
 
-def _combine_udf(keep_nested: bool):
+def _combine_udf():
     """Pack a group's geometries into one Multi* (homogeneous base type
     required — the documented subset of the reference's mixed
-    GeometryCollection output)."""
+    GeometryCollection output); multipart inputs contribute their parts."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import BinaryType
 
@@ -490,15 +490,8 @@ def _combine_udf(keep_nested: bool):
         singles = []  # (base_kind, coords)
         for b in parts:
             kind, d = G.parse_wkb(bytes(b))
-            if kind in ("multipoint", "multilinestring",
-                        "multipolygon") and not keep_nested:
-                base = kind[5:]
-                singles.extend((base, p) for p in d)
-            elif kind in ("multipoint", "multilinestring", "multipolygon"):
-                # keep-nested: treat each nested part as-is (the engine's
-                # 2-level WKB model cannot nest Multi inside Multi)
-                base = kind[5:]
-                singles.extend((base, p) for p in d)
+            if kind in ("multipoint", "multilinestring", "multipolygon"):
+                singles.extend((kind[5:], p) for p in d)
             else:
                 singles.append((kind, d))
         kinds = {k for k, _ in singles}

@@ -1,6 +1,6 @@
 """Driver-contract query registry.
 
-Each entry: name -> (spark_fn(spark, sf_dir) -> DataFrame, oracle_sql | None).
+Each entry: name -> (spark_fn(spark, sf_dir) -> DataFrame, oracle_sql).
 Oracle SQL runs in DuckDB over the pre-registered parquet views; output
 column NAMES and VALUES must match the Spark result (the driver hashes
 values after sorting columns by name), so:
@@ -36,7 +36,7 @@ _CS_PRIME = ("CASE ({i}) % 11 WHEN 0 THEN 7 WHEN 1 THEN 11 WHEN 2 THEN 13 "
 
 
 
-def q(name: str, oracle: str | None):
+def q(name: str, oracle: str):
     def deco(fn):
         QUERIES[name] = (fn, oracle)
         return fn
@@ -1118,33 +1118,6 @@ def lang_quality(spark, sf_dir):
     return base.join(c4, "doc_id")
 
 
-@q("minhash_lsh_pairs", None)
-def minhash_lsh_pairs_q(spark, sf_dir):
-    """MinHash+LSH near-dup candidate pairs w/ exact-Jaccard refine."""
-    from .operators.dedup import minhash_lsh_pairs
-
-    register_tpch_views(spark, sf_dir)
-    return minhash_lsh_pairs(spark.table("documents"), jaccard_threshold=0.3)
-
-
-@q("simhash_pairs", None)
-def simhash_pairs_q(spark, sf_dir):
-    from .operators.dedup import simhash_near_pairs
-
-    register_tpch_views(spark, sf_dir)
-    return simhash_near_pairs(spark.table("documents"), max_hamming=10)
-
-
-@q("embedding_near_pairs", None)
-def embedding_near_pairs_q(spark, sf_dir):
-    from .operators.dedup import embedding_near_pairs
-
-    register_tpch_views(spark, sf_dir)
-    # synthetic embeddings are near-orthogonal (max pairwise cosine ~0.4);
-    # 0.25 exercises the LSH+refine path with a non-empty result
-    return embedding_near_pairs(spark.table("embeddings"), threshold=0.25)
-
-
 # Round-5 multi-mode ANN suite: the base rows are the exact cosine top-10;
 # each ANN index (hyperplane LSH / IVF / PQ-ADC) is additionally graded two
 # ways, both DuckDB-expressible as constants on those rows:
@@ -1225,207 +1198,9 @@ def similarity_topk(spark, sf_dir):
     )
 
 
-@q("similarity_ann_lsh", None)
-def similarity_ann_lsh(spark, sf_dir):
-    """LSH-prefiltered ANN variant of similarity_topk (scale path)."""
-    from .operators.similarity import lsh_topk
-
-    register_tpch_views(spark, sf_dir)
-    qv = np.asarray(
-        spark.table("embeddings").where(F.col("vec_id") == 3).first()["embedding"],
-        dtype=np.float64,
-    )
-    emb = spark.table("embeddings").select(
-        "vec_id", F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("embedding")
-    )
-    return lsh_topk(emb, qv, k=10)
-
-
-@q("ngram_contamination", None)
-def ngram_contamination_q(spark, sf_dir):
-    """Train/eval decontamination: 13-gram overlap of the odd-id half of
-    the documents table (as the eval set) against the even-id half (as
-    the training corpus) — contaminated = any shared 13-gram."""
-    from .operators.dedup import ngram_contamination
-
-    register_tpch_views(spark, sf_dir)
-    docs = spark.table("documents")
-    corpus = docs.where(F.col("doc_id") % 2 == 0)
-    evals = docs.where(F.col("doc_id") % 2 == 1)
-    return (ngram_contamination(corpus, evals)
-            .orderBy("doc_id")
-            .select("doc_id", "n_grams", "n_hits", "contaminated"))
-
-
-@q("bm25_search", None)
-def bm25_search_q(spark, sf_dir):
-    """Okapi BM25 keyword retrieval over the documents corpus — one
-    explode, partial-agg term/doc frequencies, broadcast df join,
-    TakeOrdered top-k."""
-    from .functions.text import bm25_search
-
-    register_tpch_views(spark, sf_dir)
-    return bm25_search(spark.table("documents"),
-                       ["spark", "merge", "window"], top_k=25)
-
-
-@q("vocab_topk", None)
-def vocab_topk_q(spark, sf_dir):
-    """Corpus vocabulary: top-200 tokens by term frequency with document
-    frequency — explode + one partial-aggregated groupBy + TakeOrdered
-    top-k (no full sort)."""
-    from .functions.text import vocab_stats
-
-    register_tpch_views(spark, sf_dir)
-    return vocab_stats(spark.table("documents"), top_k=200)
-
-
-@q("gopher_dup_ngrams", None)
-def gopher_dup_ngrams_q(spark, sf_dir):
-    """Gopher duplicate word-n-gram character fractions (n = 5..10,
-    position-exact) per document — the remaining §A1.1 repetition family
-    beyond dup-lines and top-2-gram. Map-only Arrow pass."""
-    from .functions.text import gopher_dup_ngram_fracs
-
-    register_tpch_views(spark, sf_dir)
-    fr = gopher_dup_ngram_fracs("text")
-    return spark.table("documents").select(
-        "doc_id",
-        *[fr[i].alias(f"dup_{n}gram_frac_u")
-          for i, n in enumerate((5, 6, 7, 8, 9, 10))],
-    )
-
-
-@q("c4_clean", None)
-def c4_clean_q(spark, sf_dir):
-    """C4 cleaning pipeline (Raffel et al. 2020 §2.2): line keep rules
-    (terminal punctuation, >= 5 words, no 'javascript'), page discard
-    rules (>= 3 sentences, no 'lorem ipsum', no '{'), then the corpus-
-    wide three-sentence-span dedup on the surviving pages. Returns
-    per-doc counters (text itself stays executor-side)."""
-    from .functions.text import c4_line_clean, tokens
-    from .operators.dedup import c4_span_dedup
-
-    register_tpch_views(spark, sf_dir)
-    # The synthetic corpus has no sentence punctuation, so sentence-ify it
-    # deterministically (a period every 8th word) — the exact duplicates the
-    # generator plants then become duplicate 3-sentence spans, exercising
-    # the corpus-wide dedup, not just the line rules.
-    docs = spark.table("documents").select(
-        "doc_id",
-        F.concat(
-            F.array_join(
-                F.transform(
-                    tokens("text"),
-                    lambda x, i: F.when(i % 8 == 7, F.concat(x, F.lit(".")))
-                    .otherwise(x)),
-                " "),
-            F.lit("."),
-        ).alias("text"),
-    )
-    lc = c4_line_clean("text")
-    cleaned = docs.select("doc_id", *[v.alias(k) for k, v in lc.items()])
-    surviving = cleaned.where(F.col("page_ok") == 1)
-    dd = c4_span_dedup(surviving, text_col="text_clean")
-    return (
-        cleaned.select("doc_id", "n_kept_lines", "n_sentences", "page_ok")
-        .join(dd.select("doc_id", F.length("text_dedup").cast("long")
-                        .alias("n_chars_dedup"), "n_removed_sentences"),
-              "doc_id", "left")
-        .fillna({"n_chars_dedup": 0, "n_removed_sentences": 0})
-        .orderBy("doc_id")
-    )
-
-
-@q("similarity_ann_pq", None)
-def similarity_ann_pq(spark, sf_dir):
-    """Product-quantization ANN (Jegou et al. TPAMI 2011, the FAISS
-    IndexPQ shape): per-subspace codebooks on a bounded sample, one
-    map-side encode to m uint8 codes (384x compression at production
-    dims), ADC table-gather scoring, exact refine of the top candidates —
-    the memory-feasible ANN representation for a 100 TB embedding
-    corpus."""
-    from .operators.similarity import pq_encode, pq_topk, pq_train
-
-    register_tpch_views(spark, sf_dir)
-    qv = np.asarray(
-        spark.table("embeddings").where(F.col("vec_id") == 3)
-        .first()["embedding"],
-        dtype=np.float64,
-    )
-    emb = spark.table("embeddings").select(
-        "vec_id",
-        F.expr("transform(embedding, x -> CAST(x AS DOUBLE))")
-        .alias("embedding"),
-    )
-    books = pq_train(emb, m=8, ksub=64)
-    codes = pq_encode(emb, books)
-    return pq_topk(codes, books, qv, k=10, refine_df=emb)
-
-
-@q("similarity_ann_ivf", None)
-def similarity_ann_ivf(spark, sf_dir):
-    """IVF-bucketed ANN (FAISS IndexIVFFlat shape): k-means coarse
-    quantizer trained on a bounded sample, map-side list assignment,
-    nprobe-list exact rescore — the partition-prunable companion to the
-    LSH scale path."""
-    from .operators.similarity import ivf_build, ivf_topk
-
-    register_tpch_views(spark, sf_dir)
-    qv = np.asarray(
-        spark.table("embeddings").where(F.col("vec_id") == 3)
-        .first()["embedding"],
-        dtype=np.float64,
-    )
-    emb = spark.table("embeddings").select(
-        "vec_id",
-        F.expr("transform(embedding, x -> CAST(x AS DOUBLE))")
-        .alias("embedding"),
-    )
-    assigned, cent = ivf_build(emb, nlist=16)
-    return ivf_topk(assigned, cent, qv, k=10, nprobe=6)
-
-
 # ---------------------------------------------------------------------------
-# Raster pipeline (synthetic image table per input_hint; rows-only checks —
-# pixel correctness is pinned by the pytest oracles)
+# Raster pipeline (synthetic image table per input_hint)
 # ---------------------------------------------------------------------------
-
-@q("tile_pyramid", None)
-def tile_pyramid_q(spark, sf_dir):
-    """North-star job: decode + native-zoom base tiles + overview reduction;
-    output tile keys + per-band checksums (gdal2tiles semantics)."""
-    from .fixtures.images import images_df
-    from .operators.tiling import build_tile_pyramid
-
-    imgs = images_df(spark, _images_n(sf_dir))
-    zmin = 8  # gsd cycle -> native zooms 8..13; reduce coarsest level to z8
-    # codec=None: only checksum columns are consumed — no tile bytes
-    return build_tile_pyramid(imgs, tminz=zmin, codec=None).select(
-        "image_id", "z", "x", "y", "cs1", "cs2", "cs3"
-    )
-
-
-@q("image_decode_stats", None)
-def image_decode_stats(spark, sf_dir):
-    """Per-image band statistics computed inside the decode UDF
-    (GDALRasterBand::ComputeStatistics, gcore/gdalrasterband.cpp:4978)."""
-    from .fixtures.images import images_df
-    from .operators.imagemap import map_images
-
-    def stats(a, r):
-        yield dict(
-            image_id=r.image_id,
-            min1=int(a[..., 0].min()), max1=int(a[..., 0].max()),
-            mean1=float(np.round(a[..., 0].mean(), 4)),
-            std1=float(np.round(a[..., 0].std(), 4)),
-        )
-
-    return map_images(
-        images_df(spark, _images_n(sf_dir)), ["image_id", "bytes"],
-        "image_id string, min1 int, max1 int, mean1 double, std1 double",
-        stats)
-
 
 # band 1 is (x + y*w) % 256 over w*h pixels (fixtures make_pixels), so its
 # exact sum/sum-of-squares have closed forms: c full 0..255 cycles plus a
@@ -1750,76 +1525,6 @@ def mosaic_placement_q(spark, sf_dir):
     return last.unionByName(mean).unionByName(sep).select(*out_cols)
 
 
-@q("warp_tps", None)
-def warp_tps_q(spark, sf_dir):
-    """GCP warp via thin plate spline (alg/thinplatespline.cpp
-    d2*log(d2) basis) and the order-2 polynomial transformer
-    (alg/gdal_crs.cpp): per-image 4x4 GCP grids carry a smooth synthetic
-    distortion; forward/reverse splines fit per image inside the Arrow
-    batch (tiny n+3 solves, no shuffle).  Rows-only: the TPS solve is not
-    SQL-expressible; exactness is pytest-pinned (GCP interpolation +
-    round-trip bounds)."""
-    import pandas as pd
-    from pyspark.sql.types import ArrayType, DoubleType
-
-    from .fixtures.images import images_df
-    from .operators.rasterops import warp_gcp
-
-    def _grid_col(which):
-        @F.pandas_udf(ArrayType(DoubleType()))
-        def col(w: pd.Series, h: pd.Series) -> pd.Series:
-            out = []
-            for ww, hh in zip(w, h):
-                xs = np.linspace(0, float(ww) - 1, 4)
-                ys = np.linspace(0, float(hh) - 1, 4)
-                gx, gy = np.meshgrid(xs, ys)
-                x, y = gx.ravel(), gy.ravel()
-                X = 1.02 * x + 0.05 * y + 2e-4 * x * y
-                Y = 0.98 * y - 0.03 * x + 1e-4 * x * x
-                out.append({"px": x, "py": y, "x": X, "y": Y}[which].tolist())
-            return pd.Series(out)
-        return col(F.col("w"), F.col("h"))
-
-    imgs = images_df(spark, min(_images_n(sf_dir), 60)).filter(
-        F.col("fmt") == "png"
-    ).withColumn("gcp_px", _grid_col("px")) \
-     .withColumn("gcp_py", _grid_col("py")) \
-     .withColumn("gcp_x", _grid_col("x")) \
-     .withColumn("gcp_y", _grid_col("y"))
-    tps = warp_gcp(imgs, method="tps").withColumn("mode", F.lit("tps"))
-    poly = warp_gcp(imgs, method="poly", order=2).withColumn(
-        "mode", F.lit("poly2"))
-    return tps.unionByName(poly).select(
-        "mode", "image_id", "w2", "h2", "n_valid", "cs")
-
-
-@q("warp_rpc", None)
-def warp_rpc_q(spark, sf_dir):
-    """gdalwarp with the RPC00B camera model (alg/gdal_rpc.cpp): each
-    image carries its rational-polynomial block as an array<double>[90]
-    column; destination grid from the iterative inverse over the pixel
-    corners, then dst->src through the forward model (the direction the
-    reference's warper drives its transformer).  Map-only, per-image.
-    Rows-only: the Newton inverse is not SQL-expressible; exactness is
-    pytest-pinned (affine degenerate + forward/inverse round trips)."""
-    import pandas as pd
-    from pyspark.sql.types import ArrayType, DoubleType
-
-    from .fixtures.images import images_df
-    from .operators.rasterops import warp_rpc
-    from .oracle.rpc import rpc_pack, synthetic_rpc
-
-    @F.pandas_udf(ArrayType(DoubleType()))
-    def rpc_col(w: pd.Series, h: pd.Series) -> pd.Series:
-        return pd.Series([rpc_pack(synthetic_rpc(int(ww), int(hh)))
-                          for ww, hh in zip(w, h)])
-
-    imgs = images_df(spark, min(_images_n(sf_dir), 60)).filter(
-        F.col("fmt") == "png"
-    ).withColumn("rpc", rpc_col(F.col("w"), F.col("h")))
-    return warp_rpc(imgs).select("image_id", "w2", "h2", "n_valid", "cs")
-
-
 # Pyramid STRUCTURE oracle: every (image, z, x, y) key of the full tile
 # pyramid, rebuilt in DuckDB — image centers/sizes from the fixture
 # arithmetic, native zoom fixed by the gsd cycle, base tile ranges via the
@@ -2135,21 +1840,6 @@ def video_frames_q(spark, sf_dir):
     )
 
 
-@q("caption_passthrough", None)
-def caption_passthrough(spark, sf_dir):
-    """Captions survive the full pipeline byte-identical (input_hint gate):
-    tile pyramid joined back to the caption column."""
-    from .fixtures.images import images_df
-    from .operators.tiling import render_base_tiles
-
-    imgs = images_df(spark, _images_n(sf_dir)).persist()
-    tiles = render_base_tiles(imgs, codec=None)  # tile bytes never consumed
-    return (
-        tiles.join(imgs.select("image_id", "caption", "phash"), "image_id")
-        .select("image_id", "z", "x", "y", "caption", "phash")
-    )
-
-
 # ---------------------------------------------------------------------------
 # Layer algebra (ogrlayer.cpp Intersection/Erase/Identity) + raster operators
 # ---------------------------------------------------------------------------
@@ -2200,112 +1890,6 @@ def rect_intersection(spark, sf_dir):
     register_tpch_views(spark, sf_dir)
     a, b = _rect_layers(spark)
     return intersection(a, b)
-
-
-@q("rect_erase", None)
-def rect_erase(spark, sf_dir):
-    """Layer algebra Erase (ogrlayer.cpp:7846): sequential multi-coverage
-    subtraction per feature; output remainder rects + area."""
-    from .operators.layer_algebra import erase, rect_area
-
-    register_tpch_views(spark, sf_dir)
-    a, b = _rect_layers(spark)
-    return rect_area(erase(a, b)).select(
-        "aid", F.round("minx", 3).alias("minx"), F.round("miny", 3).alias("miny"),
-        F.round("maxx", 3).alias("maxx"), F.round("maxy", 3).alias("maxy"),
-        F.round("area", 1).alias("area"),
-    )
-
-
-@q("warp_wgs84", None)
-def warp_wgs84_q(spark, sf_dir):
-    """gdalwarp EPSG:3857->4326 per image, bilinear kernel; per-band
-    checksums of the warped rasters (apps/gdalwarp_lib.cpp semantics)."""
-    from .fixtures.images import images_df
-    from .operators.rasterops import warp_to_wgs84
-
-    imgs = images_df(spark, min(_images_n(sf_dir), 200))
-    return warp_to_wgs84(imgs, "bilinear").select("image_id", "cs1", "cs2", "cs3")
-
-
-@q("warp_wgs84_cubic", None)
-def warp_wgs84_cubic_q(spark, sf_dir):
-    """gdalwarp with the cubic (Catmull-Rom) kernel — the full kernel set
-    (near/bilinear/cubic/cubicspline/lanczos) flows through the same
-    separable-convolution warp (alg/gdalwarpkernel.cpp kernel table)."""
-    from .fixtures.images import images_df
-    from .operators.rasterops import warp_to_wgs84
-
-    imgs = images_df(spark, min(_images_n(sf_dir), 100))
-    return warp_to_wgs84(imgs, "cubic").select("image_id", "cs1", "cs2", "cs3")
-
-
-@q("warp_utm32631", None)
-def warp_utm_q(spark, sf_dir):
-    """gdalwarp UTM->4326 (the autotest/benchmark/test_gdalwarp.py:24
-    workload, EPSG:32631-style) via the closed-form Krüger transform."""
-    from .fixtures.images import images_df
-    from .operators.rasterops import warp_utm
-
-    imgs = images_df(spark, min(_images_n(sf_dir), 100))
-    return warp_utm(imgs, "bilinear")
-
-
-@q("warp_box_stats", None)
-def warp_box_stats_q(spark, sf_dir):
-    """gdalwarp with the box-statistic kernels (GWKAverageOrModeThread,
-    alg/gdalwarpkernel.cpp:7784): per-image checksums for average and
-    median boxes through the separable 3857 path plus a UTM q3 — the 9
-    non-point members of the 14-kernel warp set."""
-    from pyspark.sql import functions as F
-
-    from .fixtures.images import images_df
-    from .operators.rasterops import warp_to_wgs84, warp_utm
-
-    imgs = images_df(spark, min(_images_n(sf_dir), 60))
-    avg = warp_to_wgs84(imgs, "average").select(
-        "image_id", F.lit("average").alias("kernel"), "cs1")
-    med = warp_to_wgs84(imgs, "med").select(
-        "image_id", F.lit("med").alias("kernel"), "cs1")
-    q3 = warp_utm(imgs, "q3").select(
-        "image_id", F.lit("utm_q3").alias("kernel"), "cs1")
-    return avg.unionAll(med).unionAll(q3)
-
-
-@q("pansharpen", None)
-def pansharpen_q(spark, sf_dir):
-    """Weighted-Brovey pansharpen (alg/gdalpansharpen.cpp)."""
-    from .fixtures.images import images_df
-    from .operators.rasterops import pansharpen
-
-    imgs = images_df(spark, min(_images_n(sf_dir), 100))
-    return pansharpen(imgs)
-
-
-@q("dem_hillshade", None)
-def dem_hillshade_q(spark, sf_dir):
-    """gdaldem hillshade over band 1 as elevation — one tagged suite per
-    shading variant and gradient algorithm: Horn regular plus
-    -combined / -multidirectional / -igor and -alg ZevenbergenThorne
-    (apps/gdaldem_lib.cpp :947/:1151/:1255/:1390)."""
-    from .fixtures.images import images_df
-    from .operators.rasterops import dem_metrics
-
-    imgs = images_df(spark, min(_images_n(sf_dir), 100)).persist()
-    parts = []
-    for tag, kw in (
-        ("horn", {}),
-        ("zt", dict(alg="zt")),
-        ("combined", dict(variant="combined")),
-        ("multidirectional", dict(variant="multidirectional")),
-        ("igor", dict(variant="igor")),
-    ):
-        parts.append(dem_metrics(imgs, "hillshade", **kw)
-                     .withColumn("mode", F.lit(tag)))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.select("mode", *[c for c in parts[0].columns if c != "mode"])
 
 
 # gdaldem hillshade value oracle: Horn gradients are exact rationals of
@@ -2655,180 +2239,6 @@ def pansharpen_checksum_q(spark, sf_dir):
     return pansharpen(imgs).select("image_id", "cs1", "cs2", "cs3")
 
 
-@q("raster_translate", None)
-def raster_translate_q(spark, sf_dir):
-    """gdal_translate -srcwin -outsize -scale -b pipeline
-    (apps/gdal_translate_lib.cpp:90-313)."""
-    from .fixtures.images import images_df
-    from .operators.rasterops import translate
-
-    imgs = images_df(spark, min(_images_n(sf_dir), 200))
-    return translate(
-        imgs, srcwin=(2, 2, 16, 16), outsize=(64, 64), scale=(0, 255, 0, 100),
-        bands=[1, 2],
-    ).select("image_id", "w2", "h2", "cs1")
-
-
-@q("raster_container_roundtrip", None)
-def raster_container_roundtrip_q(spark, sf_dir):
-    """Raster-format interchange e2e: the same images written to
-    Arc/Info ASCII Grid, ENVI raw (all three interleaves), XYZ ASCII,
-    and PNM, then read back through each reader and compared
-    pixel-exact. Per format: files written, images read, pixel-exact
-    count — the per-image-file analogues of the reference's frmts/
-    aaigrid, frmts/raw/envidataset.cpp, frmts/xyz, frmts/pnm drivers."""
-    import os
-    import tempfile
-
-    import numpy as np
-
-    from .codecs.registry import decode as _dec
-    from .codecs.registry import encode as _enc
-    from .fixtures.images import images_df
-    from .io.ascii_grid import read_ascii_grids, write_ascii_grids
-    from .io.raw_formats import read_envi, read_xyz, write_envi, write_xyz
-
-    imgs = images_df(spark, min(_images_n(sf_dir), 20)).persist()
-    src = {r["image_id"]: _dec(bytes(r["bytes"])) for r in imgs.collect()}
-    rows = []
-    with tempfile.TemporaryDirectory() as td:
-        n = write_ascii_grids(imgs, os.path.join(td, "asc"))
-        back = read_ascii_grids(spark, os.path.join(td, "asc")).collect()
-        exact = sum(
-            int(np.array_equal(
-                np.array(r["values"]).reshape(r["h"], r["w"]),
-                src[r["image_id"]][:, :, 0]))
-            for r in back)
-        rows.append(("aaigrid", n, len(back), exact))
-        for il in ("bsq", "bil", "bip"):
-            d = os.path.join(td, f"envi_{il}")
-            n = write_envi(imgs, d, interleave=il)
-            back = read_envi(spark, d).collect()
-            exact = sum(
-                int(np.array_equal(_dec(bytes(r["png"])), src[r["image_id"]]))
-                for r in back)
-            rows.append((f"envi_{il}", n, len(back), exact))
-        n = write_xyz(imgs, os.path.join(td, "xyz"))
-        back = read_xyz(spark, os.path.join(td, "xyz")).collect()
-        exact = sum(
-            int(np.array_equal(
-                np.array(r["values"]).reshape(r["h"], r["w"]),
-                src[r["image_id"]][:, :, 0]))
-            for r in back)
-        rows.append(("xyz", n, len(back), exact))
-    # PNM codec roundtrip (in-memory format, no directory)
-    pnm_exact = sum(
-        int(np.array_equal(_dec(_enc(px, "pnm" if px.shape[2] == 1
-                                     else "ppm")), px))
-        for px in src.values())
-    rows.append(("pnm", len(src), len(src), pnm_exact))
-    imgs.unpersist()
-    return spark.createDataFrame(
-        rows, "fmt string, n_written long, n_read long, n_pixel_exact long"
-    ).orderBy("fmt")
-
-
-@q("vector_container_roundtrip", None)
-def vector_container_roundtrip_q(spark, sf_dir):
-    """Vector-format interchange e2e (the could-a-reference-user-switch
-    gate): traced image footprints written to GeoPackage features,
-    GeoJSON, GeoJSONSeq, and ESRI Shapefile, read back through each
-    reader, and compared — per format: feature count, byte-identical-WKB
-    count, and the total parsed polygon area in m^2 (shapefile WKB is
-    reassembled from parts, so its byte-equality column counts geometry
-    EQUIVALENCE via area instead)."""
-    import os
-    import tempfile
-
-    from .fixtures.images import images_df
-    from .io.geojson import read_geojson, write_geojson
-    from .io.shapefile import read_shapefile, write_shapefile
-    from .operators.rasterops import footprint
-    from .io.containers import (read_geopackage_features,
-                                write_geopackage_features)
-    from .oracle import geom as G
-
-    imgs = images_df(spark, min(_images_n(sf_dir), 40))
-    feats = footprint(imgs, threshold=0).select(
-        "image_id", "wkb", "n_valid").persist()
-    src = {r["image_id"]: bytes(r["wkb"]) for r in feats.collect()}
-
-    def area_sum(df):
-        tot = 0.0
-        for r in df.collect():
-            k, d = G.parse_wkb(bytes(r["wkb"]))
-            polys = [d] if k == "polygon" else d
-            for rings in polys:
-                tot += abs(G._ring_signed_area(rings[0])) - sum(
-                    abs(G._ring_signed_area(h)) for h in rings[1:])
-        return tot
-
-    rows = []
-    with tempfile.TemporaryDirectory() as td:
-        gp = os.path.join(td, "f.gpkg")
-        write_geopackage_features(feats, gp)
-        back, _ = read_geopackage_features(spark, gp)
-        rows.append(("gpkg", back.count(),
-                     sum(1 for r in back.collect()
-                         if src.get(r["image_id"]) == bytes(r["wkb"])),
-                     area_sum(back)))
-        for name, lines in (("geojson", False), ("geojsonseq", True)):
-            pth = os.path.join(td, f"f.{name}")
-            write_geojson(feats, pth, lines=lines)
-            back = read_geojson(spark, pth)
-            rows.append((name, back.count(),
-                         sum(1 for r in back.collect()
-                             if src.get(r["image_id"]) == bytes(r["wkb"])),
-                         area_sum(back)))
-        shp = os.path.join(td, "f")
-        write_shapefile(feats, shp)
-        back = read_shapefile(spark, shp)
-        rows.append(("shapefile", back.count(),
-                     sum(1 for r in back.collect()
-                         if src.get(r["image_id"]) == bytes(r["wkb"])),
-                     area_sum(back)))
-        from .io.geoparquet import read_geoparquet, write_geoparquet
-
-        gpq = os.path.join(td, "gpq")
-        write_geoparquet(feats, gpq)
-        back, geo = read_geoparquet(spark, gpq)
-        assert geo["columns"]["geometry"]["encoding"] == "WKB"
-        back = back.withColumnRenamed("geometry", "wkb")
-        rows.append(("geoparquet", back.count(),
-                     sum(1 for r in back.collect()
-                         if src.get(r["image_id"]) == bytes(r["wkb"])),
-                     area_sum(back)))
-        from .io.flatgeobuf import (COL_LONG as _FGB_LONG,
-                                    read_flatgeobuf, write_flatgeobuf)
-
-        fgb = os.path.join(td, "f.fgb")
-        write_flatgeobuf(feats, fgb, extra_cols={"n_valid": _FGB_LONG})
-        back, _hdr = read_flatgeobuf(spark, fgb)
-        rows.append(("flatgeobuf", back.count(),
-                     sum(1 for r in back.collect()
-                         if src.get(r["image_id"]) == bytes(r["wkb"])),
-                     area_sum(back)))
-    feats.unpersist()
-    import pandas as pd2
-
-    return spark.createDataFrame(
-        pd2.DataFrame(rows, columns=["fmt", "n", "wkb_exact", "area_m2"])
-        .assign(area_m2=lambda d: d.area_m2.round(1)))
-
-
-@q("footprint", None)
-def footprint_q(spark, sf_dir):
-    """gdal_footprint valid-data polygon + area
-    (apps/gdal_footprint_lib.cpp:1304)."""
-    from .fixtures.images import images_df
-    from .operators.rasterops import footprint
-
-    imgs = images_df(spark, min(_images_n(sf_dir), 200))
-    return footprint(imgs, threshold=0).select(
-        "image_id", "n_valid", F.round("area_m2", 1).alias("area_m2")
-    )
-
-
 # footprint value oracle: image metadata is pure integer-mod math over the
 # row index (fixtures/images.py W/H/GSD cycles), so DuckDB can derive the
 # exact expected n_valid and area from generate_series — a true value gate
@@ -2869,17 +2279,6 @@ def footprint_exact_q(spark, sf_dir):
     return footprint(imgs, threshold=-1).select(
         "image_id", "n_valid", F.round("area_m2", 1).alias("area_m2")
     )
-
-
-@q("zonal_stats", None)
-def zonal_stats_q(spark, sf_dir):
-    """Zonal statistics per mercator cell zone (alg/zonal.cpp:361):
-    per-image numpy partials + one groupBy merge."""
-    from .fixtures.images import images_df
-    from .operators.rasterops import zonal_stats
-
-    imgs = images_df(spark, min(_images_n(sf_dir), 200))
-    return zonal_stats(imgs, zone_zoom=7)
 
 
 # Zonal-stats value oracle: band-1 pixel values AND the pixel->zone
@@ -2984,41 +2383,6 @@ def zonal_stats_png_q(spark, sf_dir):
         F.col("zmax").cast("int").alias("zmax"),
         "zmedian", "zmode", "zminority", "zvariety",
     )
-
-
-@q("mosaic_mean", None)
-def mosaic_mean_q(spark, sf_dir):
-    """gdalbuildvrt-style mosaic: per-image tiles merged across images on
-    (z,x,y) (apps/gdalbuildvrt_lib.cpp)."""
-    from .fixtures.images import images_df
-    from .operators.rasterops import mosaic_tiles
-
-    imgs = images_df(spark, min(_images_n(sf_dir), 200))
-    return mosaic_tiles(imgs, zoom=7, reducer="mean").select(
-        "z", "x", "y", "cs1", "cs2", "cs3"
-    )
-
-
-@q("point_sample", None)
-def point_sample_q(spark, sf_dir):
-    """InterpolateAtPoint (gcore/gdalrasterband.cpp:11497): bilinear sample
-    of each image at its own jittered caption point."""
-    import pandas as pd
-
-    from .fixtures.images import images_df
-    from .fixtures.points import caption_points_pdf
-    from .operators.rasterops import sample_at_points
-
-    n = min(_images_n(sf_dir), 200)
-    imgs = images_df(spark, n)
-    pts_pdf = caption_points_pdf(n)
-    pts_pdf["point_id"] = np.arange(n, dtype=np.int64)
-    pts = spark.createDataFrame(
-        pts_pdf.rename(columns={"lon": "plon", "lat": "plat"})[
-            ["image_id", "point_id", "plon", "plat"]
-        ]
-    )
-    return sample_at_points(imgs, pts, "bilinear")
 
 
 # translate -outsize + -projwin value oracle (merged per round-3 VERDICT
@@ -3687,16 +3051,6 @@ def point_sample_bilinear_q(spark, sf_dir):
             .select(F.lit("cubic").alias("mode"), *cols)))
 
 
-@q("band_calc_normdiff", None)
-def band_calc_q(spark, sf_dir):
-    """VRT pixel-function band algebra (frmts/vrt/pixelfunctions.cpp)."""
-    from .fixtures.images import images_df
-    from .operators.rasterops import band_calc
-
-    imgs = images_df(spark, min(_images_n(sf_dir), 200))
-    return band_calc(imgs, "norm_diff")
-
-
 # Pixel-function value gate: fixture pixels are closed-form (b1 = flat%256,
 # b2 = (3x)%256, b3 = (7y)%256), and every op in these five functions
 # (int +/-, correctly-rounded / sqrt *) is IEEE-exact, so floor(v*1e6)
@@ -3947,25 +3301,6 @@ FROM customer_points"""
     )
 
 
-@q("grid_linear_tin", None)
-def grid_linear_tin(spark, sf_dir):
-    """gdalgrid 'linear' (Delaunay TIN + barycentric interpolation,
-    alg/gdalgrid.cpp GDALGridLinear; from-scratch Bowyer-Watson,
-    oracle/delaunay.py). Rows-only: the TIN structure is not
-    SQL-expressible; linear-precision is pytest-pinned."""
-    from .operators.gridding import grid_linear
-
-    register_tpch_views(spark, sf_dir)
-    pts = spark.sql(
-        f"""WITH {CUSTOMER_POINTS_CTE.strip()}
-SELECT {T.sql_mx('lon')} / 1000000.0 AS x,
-       {T.sql_my('lat')} / 1000000.0 AS y,
-       CAST(pid % 100 AS DOUBLE) AS v
-FROM customer_points"""
-    )
-    return grid_linear(pts, minx=-20.0, miny=-20.0, cell=2.5, nx=16, ny=16)
-
-
 _RASTERIZE_COUNT_SQL = f"""
 WITH {ORDERS_POINTS_CTE.strip()},
 px AS (
@@ -4098,29 +3433,6 @@ def rasterize_all_touched_q(spark, sf_dir):
         _rect_wkb_layer(spark), minx=_RZ_GX, maxy=-_RZ_GX, cell=_RZ_CELL,
         nx=_RZ_N, ny=_RZ_N, attribute="bv", add=False, all_touched=True,
     )
-
-
-@q("polygonize", None)
-def polygonize_q(spark, sf_dir):
-    """GDALPolygonize (alg/polygonize.cpp): connected components of the
-    quantized band per image."""
-    from .fixtures.images import images_df
-    from .operators.vectorize import polygonize
-
-    imgs = images_df(spark, min(_images_n(sf_dir), 100))
-    return polygonize(imgs, quantize=64, downsample_to=32)
-
-
-@q("sieve_proximity", None)
-def sieve_proximity_q(spark, sf_dir):
-    """GDALSieveFilter + GDALComputeProximity summary per image."""
-    from .fixtures.images import images_df
-    from .operators.vectorize import proximity_map, sieve_filter
-
-    imgs = images_df(spark, min(_images_n(sf_dir), 60)).persist()
-    s = sieve_filter(imgs, threshold=3, downsample_to=24)
-    p = proximity_map(imgs, target_value=0, downsample_to=32)
-    return s.join(p, "image_id")
 
 
 # Closed-form value oracles over the pattern fixtures
@@ -4289,7 +3601,7 @@ FROM rcs
 
 @q("exact_patterns", _EXACT_PATTERNS_SQL)
 def exact_patterns_q(spark, sf_dir):
-    """Seven rows-only raster-operator modes value-gated end to end on the
+    """Seven raster-operator modes value-gated end to end on the
     closed-form pattern corpus: GDALPolygonize (alg/polygonize.cpp) emits
     one row per checkerboard block with exact comp_id/value/count/bbox,
     and in 8CONNECTED mode (alg/polygonize.cpp:87) exactly TWO components
@@ -4402,39 +3714,6 @@ def exact_patterns_q(spark, sf_dir):
     return (p.unionByName(p8).unionByName(s).unionByName(x)
             .unionByName(v).unionByName(nb).unionByName(f)
             .unionByName(rc))
-
-
-@q("st_functions_sql", None)
-def st_functions_sql(spark, sf_dir):
-    """ST_* SQL surface (ogrsqlitesqlfunctions.cpp parity): area, centroid,
-    containment and distance over footprint polygons + caption points,
-    straight from spark.sql. Center points are built executor-side
-    (mercator column expressions + ST_MakePoint) — no driver collect."""
-    from .fixtures.images import images_df
-    from .functions import cells as C
-    from .operators.rasterops import footprint
-    from .sql.ogr_compat import register_st_functions
-
-    register_st_functions(spark)
-    n = min(_images_n(sf_dir), 100)
-    imgs = images_df(spark, n).persist()
-    fp = footprint(imgs, threshold=-1)
-    fp.createOrReplaceTempView("footprints")
-    imgs.select(
-        "image_id",
-        C.mercator_x("lon").alias("mx"),
-        C.mercator_y("lat").alias("my"),
-    ).createOrReplaceTempView("centers_xy")
-    return spark.sql(
-        """
-        SELECT f.image_id,
-               ROUND(ST_Area(f.wkb), 1) AS area,
-               ST_Within(ST_MakePoint(c.mx, c.my), f.wkb) AS center_inside,
-               ROUND(ST_Distance(ST_Centroid(f.wkb),
-                                 ST_MakePoint(c.mx, c.my)), 1) AS centroid_dist
-        FROM footprints f JOIN centers_xy c ON f.image_id = c.image_id
-        """
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -4566,23 +3845,6 @@ def execute_sql_dialect(spark, sf_dir):
     from .sql.execute_sql import execute_sql
 
     return execute_sql(spark, _EXEC_SQL_TEXT, sf_dir=sf_dir)
-
-
-@q("rect_union", None)
-def rect_union(spark, sf_dir):
-    """Layer algebra Union (ogrlayer.cpp:5803): both-schema pieces +
-    one-sided remainders."""
-    from .operators.layer_algebra import rect_area, union
-
-    register_tpch_views(spark, sf_dir)
-    a, b = _rect_layers(spark)
-    u = union(a, b)
-    return rect_area(u).select(
-        "aid", "bid",
-        F.round("minx", 3).alias("minx"), F.round("miny", 3).alias("miny"),
-        F.round("maxx", 3).alias("maxx"), F.round("maxy", 3).alias("maxy"),
-        F.round("area", 1).alias("area"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -5196,49 +4458,6 @@ def conic_forward_q(spark, sf_dir):
     )
 
 
-@q("warp_lcc_stereo", None)
-def warp_lcc_stereo_q(spark, sf_dir):
-    """gdalwarp from LCC / polar-stereographic source grids to EPSG:4326
-    through the generic non-separable projected-CRS warp
-    (oracle/warp.warp_proj_to_4326) — widens the warp surface beyond
-    UTM/mercator per the round-2 gap list."""
-    from .fixtures.images import images_df
-    from .operators.imagemap import map_images
-    from .oracle import conic as CC
-    from .oracle.checksum import checksum_image
-    from .oracle.warp import warp_proj_to_4326
-
-    lcc = CC.lcc_europe()
-    st = CC.epsg_3031()
-
-    def per_image(a, r):
-        h, w = a.shape[0], a.shape[1]
-        # georeference in-range per projection
-        if r.i % 2 == 0:
-            proj, (cx, cy) = "lcc", lcc.forward(10.0 + (r.i % 7),
-                                                48.0 + (r.i % 9))
-            fwd, inv = lcc.forward, lcc.inverse
-        else:
-            proj, (cx, cy) = "stereo", st.forward(
-                -170.0 + (r.i % 340), -75.0 - (r.i % 12))
-            fwd, inv = st.forward, st.inverse
-        gt = [float(cx) - w / 2.0 * r.gsd_m, float(r.gsd_m), 0.0,
-              float(cy) + h / 2.0 * r.gsd_m, 0.0, -float(r.gsd_m)]
-        warped, dst_gt = warp_proj_to_4326(
-            a, gt, to_lonlat=inv, from_lonlat=fwd, method="bilinear")
-        cs = checksum_image(warped)
-        yield dict(image_id=r.image_id, proj=proj,
-                   cs1=cs[0], cs2=cs[1], cs3=cs[2])
-
-    imgs = images_df(spark, min(_images_n(sf_dir), 60))
-    imgs = imgs.withColumn(
-        "i", F.expr("CAST(substring(image_id, 4) AS BIGINT)"))
-    return map_images(
-        imgs, ["image_id", "i", "bytes", "gsd_m"],
-        "image_id string, proj string, cs1 long, cs2 long, cs3 long",
-        per_image)
-
-
 # Multidim value oracle: the cube is the closed form v = t*1e4 + y*1e2 + x,
 # so the time-mean over the hyperslab [3:9, 5:25, 7:32] is
 # mean(t in 3..8)*1e4 + y*1e2 + x = 55000 + y*100 + x, enumerable in SQL.
@@ -5284,652 +4503,12 @@ def md_hyperslab_mean_q(spark, sf_dir):
     return spark.createDataFrame(pd.DataFrame(rows, columns=["y", "x", "value"]))
 
 
-@q("viewshed_cumulative", None)
-def viewshed_cumulative_q(spark, sf_dir):
-    """Cumulative viewshed (alg/viewshed/cumulative.cpp): grid of
-    observers every 10 px, per-pixel visibility counts, output scaled by
-    floor(255/max) like the reference's scaleOutput."""
-    from .fixtures.images import images_df
-    from .operators.rasterops import viewshed_cumulative
-
-    imgs = images_df(spark, min(_images_n(sf_dir), 50))
-    return viewshed_cumulative(imgs, spacing=10)
-
-
-@q("mdim_compare", None)
-def mdim_compare_q(spark, sf_dir):
-    """gdal mdim compare (apps/gdalalg_mdim_compare.cpp): reference vs
-    perturbed input store — arrays only on one side, per-chunk shape
-    mismatches, and JVM-side value diffs (zip_with/filter/aggregate, no
-    Python worker).  Deterministic fixture: 3 planted diffs in 'temp',
-    'salt' missing from the input, extra 'wind' array."""
-    from .operators.multidim import MDMeta, array_to_chunks, md_compare
-
-    m1 = MDMeta("temp", [("t", 6), ("y", 8), ("x", 8)], [2, 4, 4])
-    m2 = MDMeta("salt", [("y", 8), ("x", 8)], [4, 4])
-    a1 = np.arange(6 * 8 * 8, dtype=np.float64).reshape(6, 8, 8)
-    a2 = np.arange(8 * 8, dtype=np.float64).reshape(8, 8)
-    ref = array_to_chunks(spark, a1, m1).unionByName(
-        array_to_chunks(spark, a2, m2))
-    b1 = a1.copy()
-    b1[0, 0, 0] += 5.0
-    b1[3, 4, 4] -= 2.5
-    b1[5, 7, 7] += 0.25
-    m3 = MDMeta("wind", [("y", 4), ("x", 4)], [4, 4])
-    inp = array_to_chunks(spark, b1, m1).unionByName(
-        array_to_chunks(spark, np.ones((4, 4)), m3))
-    return (md_compare(ref, inp)
-            .select("var", "aspect", "n",
-                    F.round(F.coalesce("max_abs", F.lit(-1.0)), 6)
-                    .alias("max_abs"))
-            .orderBy("var", "aspect"))
-
-
-@q("mdim_mosaic", None)
-def mdim_mosaic_q(spark, sf_dir):
-    """gdal mdim mosaic (apps/gdalalg_mdim_mosaic.cpp): four chunk-
-    aligned tiles + one later overlapping tile assemble an 8x12 global
-    grid; re-key is JVM column math (zero shuffle), overlap resolution
-    is ONE groupBy max_by(src). Emits per-chunk checksums of the
-    mosaic."""
-    from .operators.multidim import MDMeta, array_to_chunks, md_mosaic
-
-    parts = []
-    for i, (oy, ox) in enumerate([(0, 0), (0, 6), (4, 0), (4, 6)]):
-        a = np.full((4, 6), float(i + 1))
-        m = MDMeta("z", [("y", 4), ("x", 6)], [2, 3])
-        parts.append((array_to_chunks(spark, a, m), m, (oy, ox)))
-    mw = MDMeta("zw", [("y", 4), ("x", 6)], [2, 3])
-    parts.append((array_to_chunks(spark, np.full((4, 6), 9.0), mw),
-                  mw, (2, 3)))
-    merged, _meta = md_mosaic(parts, var="z")
-    return merged.select(
-        "var", "chunk",
-        F.expr("aggregate(data, 0D, (acc, x) -> acc + x)").alias("csum"),
-        F.size("data").alias("n"),
-    ).orderBy("chunk")
-
-
-@q("mdim_reproject", None)
-def mdim_reproject_q(spark, sf_dir):
-    """gdal mdim reproject (apps/gdalalg_mdim_reproject.cpp): warp the
-    horizontal dims of a time-chunked mercator stack to EPSG:4326
-    (bilinear) — map-only, one plane-warp per chunk, zero shuffles.
-    Emits per-chunk sums of the warped planes."""
-    from .operators.multidim import MDMeta, array_to_chunks, md_reproject
-    from .oracle.warp import lonlat_to_mercator_xy, mercator_to_lonlat_xy
-
-    rng = np.random.RandomState(42)
-    a = rng.randint(0, 255, size=(4, 16, 16)).astype(np.float64)
-    m = MDMeta("b", [("t", 4), ("y", 16), ("x", 16)], [1, 16, 16])
-    gt = [-2000000.0, 250000.0, 0.0, 2000000.0, 0.0, -250000.0]
-    wdf, _ = md_reproject(array_to_chunks(spark, a, m), m, gt,
-                          mercator_to_lonlat_xy, lonlat_to_mercator_xy,
-                          method="bilinear")
-    return wdf.select(
-        "var", "chunk",
-        F.round(F.expr("aggregate(data, 0D, (acc, x) -> acc + x)"), 4)
-        .alias("csum"),
-        F.size("data").alias("n"),
-    ).orderBy("chunk")
-
-
-@q("dataset_check", None)
-def dataset_check_q(spark, sf_dir):
-    """gdal dataset check (apps/gdalalg_dataset_check.cpp): full-decode
-    integrity sweep of the image corpus + two deterministically
-    corrupted blobs (truncated PNG, garbage magic) that must surface as
-    errors, not exceptions."""
-    import pandas as pd
-
-    from .fixtures.images import images_df
-    from .operators.rasterops import dataset_check
-
-    imgs = images_df(spark, min(_images_n(sf_dir), 200)).select(
-        "image_id", "bytes", "fmt")
-    bad = spark.createDataFrame(pd.DataFrame({
-        "image_id": ["bad_trunc", "bad_magic"],
-        "bytes": [b"\x89PNG\r\n\x1a\n" + b"\x00" * 20,
-                  b"NOTAFORMAT" * 4],
-        "fmt": ["png", "png"],
-    }), "image_id string, bytes binary, fmt string")
-    return dataset_check(imgs.unionByName(bad))
-
-
-@q("mdim_info", None)
-def mdim_info_q(spark, sf_dir):
-    """gdal mdim info (apps/gdalalg_mdim_info.cpp report role): write a
-    two-group multidim store, reopen it, and emit the group-hierarchy
-    walk (GDALGroup::GetGroupNames/GetMDArrayNames) plus per-variable
-    dims/chunks — exercises the partitioned store's sidecar end to end."""
-    import tempfile
-
-    import pandas as pd
-
-    from .operators.multidim import (
-        MDMeta, array_to_chunks, md_group_tree, open_md_store,
-        write_md_store)
-
-    a = np.arange(2 * 8 * 10, dtype=np.float64).reshape(2, 8, 10)
-    b = np.arange(6 * 5, dtype=np.float64).reshape(6, 5)
-    ma = MDMeta("/climate/temp", [("time", 2), ("y", 8), ("x", 10)],
-                [1, 4, 5])
-    mb = MDMeta("/terrain/elev", [("y", 6), ("x", 5)], [3, 5])
-    with tempfile.TemporaryDirectory() as td:
-        pth = f"{td}/store"
-        chunks = array_to_chunks(spark, a, ma).unionByName(
-            array_to_chunks(spark, b, mb))
-        write_md_store(chunks, [ma, mb], pth,
-                       attrs={"title": "mdim info fixture"})
-        df, metas, side = open_md_store(spark, pth)
-        tree = md_group_tree(side)
-        rows = []
-        for gname, entry in sorted(tree["groups"].items()):
-            for var in entry["vars"]:
-                full = f"/{gname}/{var}"
-                m = side["vars"][full]
-                rows.append(dict(
-                    group=gname, var=var,
-                    dims=",".join(f"{n}={s}" for n, s in m["dims"]),
-                    chunks=",".join(str(c) for c in m["chunks"]),
-                    n_chunks=int(df.where(F.col("var") == full)
-                                 .select("chunk").distinct().count()),
-                ))
-    return spark.createDataFrame(pd.DataFrame(
-        rows, columns=["group", "var", "dims", "chunks", "n_chunks"]))
-
-
-@q("contour", None)
-def contour_q(spark, sf_dir):
-    """Marching-squares contour summary per image (alg/contour.cpp)."""
-    from .fixtures.images import images_df
-    from .operators.rasterops import contour
-
-    imgs = images_df(spark, min(_images_n(sf_dir), 100))
-    return contour(imgs)
-
-
-@q("contour_lines", None)
-def contour_lines_q(spark, sf_dir):
-    """Contour with line GEOMETRY: chained iso-polylines as MultiLineString
-    WKB per (image, level) (alg/contour.cpp segment merge)."""
-    from .fixtures.images import images_df
-    from .operators.rasterops import contour_lines
-
-    imgs = images_df(spark, min(_images_n(sf_dir), 60))
-    return contour_lines(imgs).select(
-        "image_id", "level", "n_lines", "total_len"
-    )
-
-
-@q("contour_polygons", None)
-def contour_polygons_q(spark, sf_dir):
-    """Contour polygon bands (`gdal_contour -p` mode): per (image, band)
-    MultiPolygon of the pixels between consecutive levels."""
-    from .fixtures.images import images_df
-    from .operators.rasterops import contour_polygons
-
-    imgs = images_df(spark, min(_images_n(sf_dir), 60))
-    return contour_polygons(imgs).select(
-        "image_id", "level_min", "level_max", "n_pixels",
-        F.round("area_m2", 1).alias("area_m2"),
-    )
-
-
-@q("embedding_pca", None)
-def embedding_pca_q(spark, sf_dir):
-    """Distributed PCA over the embeddings table (map-side Gram partials +
-    driver eigh + map-side projection) — training-data pipeline op."""
-    from .operators.similarity import embedding_pca
-
-    register_tpch_views(spark, sf_dir)
-    out, explained = embedding_pca(spark.table("embeddings"), k=4)
-    return out.select(
-        "vec_id",
-        *[F.round(F.element_at("components", i + 1), 4).alias(f"pc{i + 1}")
-          for i in range(4)],
-    )
-
-
-@q("overview_gauss_rms", None)
-def overview_gauss_rms_q(spark, sf_dir):
-    """Overview kernels beyond average: gauss (gcore/overview.cpp:1996) and
-    rms 2x downsample checksums side by side."""
-    from .fixtures.images import images_df
-    from .operators.rasterops import overview_downsample
-
-    imgs = images_df(spark, min(_images_n(sf_dir), 100)).persist()
-    g = overview_downsample(imgs, "gauss").withColumnsRenamed(
-        {"cs1": "g_cs1", "cs2": "g_cs2", "cs3": "g_cs3"}
-    )
-    rm = overview_downsample(imgs, "rms").select(
-        "image_id", F.col("cs1").alias("r_cs1"), F.col("cs2").alias("r_cs2"),
-        F.col("cs3").alias("r_cs3"),
-    )
-    return g.join(rm, "image_id")
-
-
-@q("ogr_feature_style", None)
-def ogr_feature_style_q(spark, sf_dir):
-    """OGR feature style surface (ogr/ogrfeaturestyle.cpp + the
-    OGR_STYLE special field): deterministic per-customer style strings —
-    PEN width/color from the key, a quoted LABEL text containing the
-    separators ';,:"' the parser must honor — parsed back through the
-    vectorized style parser; the extracted params are returned as
-    columns.  Low-frequency surface, rows-only; grammar edge cases are
-    pytest-pinned."""
-    from .functions.style import parse_style, style_param
-
-    register_tpch_views(spark, sf_dir)
-    styled = spark.table("customer").select(
-        "c_custkey",
-        F.format_string(
-            'PEN(c:#%06X,w:%dpx);BRUSH(fc:#00FF00);'
-            'LABEL(f:"Arial, Bold",t:"c;%d:\\"x\\"",s:12pt,bo)',
-            F.col("c_custkey") % 0xFFFFFF,
-            F.col("c_custkey") % 9 + 1,
-            F.col("c_custkey"),
-        ).alias("style"),
-    )
-    return styled.select(
-        "c_custkey",
-        F.size(parse_style("style")).alias("n_tools"),
-        style_param("style", "PEN", "w").alias("pen_w"),
-        style_param("style", "PEN", "c").alias("pen_c"),
-        style_param("style", "LABEL", "t").alias("label_t"),
-        style_param("style", "LABEL", "bo").alias("label_bold"),
-    ).orderBy("c_custkey").limit(200)
-
-
-@q("raster_attribute_table", None)
-def raster_attribute_table_q(spark, sf_dir):
-    """GDALRasterAttributeTable surface (gcore/gdal_rat.cpp): per-image
-    default RAT — thematic VALUE (GFU_MinMax) / COUNT (GFU_PixelCount)
-    rows, the GetDefaultRAT + GetHistogram shape — over the png fixtures.
-    Classification through an athematic min/max RAT (GetRowOfValue) is
-    VALUE-gated in the exact_patterns 'rat' mode."""
-    from .fixtures.images import images_df
-    from .operators.rat import default_rat
-
-    imgs = images_df(spark, min(_images_n(sf_dir), 30)).where(
-        F.col("fmt") == "png")
-    return default_rat(imgs).orderBy("image_id", "value")
-
-
-@q("translate_projwin_expand", None)
-def translate_projwin_q(spark, sf_dir):
-    """gdal_translate -projwin (georeferenced window, exact floor/ceil
-    snapping of gdal_translate_lib.cpp:981-1000) + -expand gray->rgb."""
-    from .fixtures.images import images_df
-    from .operators.rasterops import translate
-
-    imgs = images_df(spark, min(_images_n(sf_dir), 100))
-    # window: a box around each image's own center (quarter extent) — the
-    # projwin is global; images far away crop to empty and drop out
-    return translate(
-        imgs, projwin=(-20000000.0, 19000000.0, 20000000.0, -19000000.0),
-        bands=[1], expand="rgb", outsize=(32, 32),
-    ).select("image_id", "w2", "h2", "cs1")
-
-
-
-
-@q("point_sample_cubic", None)
-def point_sample_cubic_q(spark, sf_dir):
-    """InterpolateAtPoint with the cubic kernel
-    (alg/gdal_interpolateatpoint.cpp:415)."""
-    import pandas as pd
-
-    from .fixtures.images import images_df
-    from .fixtures.points import caption_points_pdf
-    from .operators.rasterops import sample_at_points
-
-    n = min(_images_n(sf_dir), 100)
-    imgs = images_df(spark, n)
-    pts_pdf = caption_points_pdf(n)
-    pts_pdf["point_id"] = np.arange(n, dtype=np.int64)
-    pts = spark.createDataFrame(
-        pts_pdf.rename(columns={"lon": "plon", "lat": "plat"})[
-            ["image_id", "point_id", "plon", "plat"]
-        ]
-    )
-    return sample_at_points(imgs, pts, "cubic")
-
-
-@q("viewshed", None)
-def viewshed_q(spark, sf_dir):
-    """Viewshed + LOS per image (alg/viewshed Wang reference-plane method,
-    alg/los.cpp) with band 1 as the DEM."""
-    from .fixtures.images import images_df
-    from .operators.rasterops import viewshed_stats
-
-    imgs = images_df(spark, min(_images_n(sf_dir), 100))
-    return viewshed_stats(imgs)
-
-
-@q("dem_color_relief", None)
-def dem_color_relief_q(spark, sf_dir):
-    """gdaldem color-relief over band 1 in all three color-selection modes
-    (apps/gdaldem_lib.cpp GDALColorRelief): the default piecewise-linear
-    ramp interpolation, -nearest_color_entry, and -exact_color_entry,
-    discriminated by a mode column."""
-    from .fixtures.images import images_df
-    from .operators.rasterops import dem_metrics
-
-    imgs = images_df(spark, min(_images_n(sf_dir), 100))
-    parts = [
-        dem_metrics(imgs, "color-relief", color_mode=m)
-        .withColumn("mode", F.lit(m))
-        for m in ("interpolate", "nearest", "exact")
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.select("mode", "image_id", "cs", "vmin", "vmax", "vmean")
-
-
-@q("tile_index", None)
-def tile_index_q(spark, sf_dir):
-    """gdaltindex (apps/gdaltindex_lib.cpp): extent-polygon index layer of
-    the image corpus — location field, WKT extent ring, bbox columns;
-    zero-UDF column math (plan-audited map-only)."""
-    from .fixtures.images import images_df
-    from .operators.rasterops import tile_index
-
-    return tile_index(images_df(spark, _images_n(sf_dir)),
-                      src_srs_name="src_srs")
-
-
-@q("raster_tools", None)
-def raster_tools_q(spark, sf_dir):
-    """gdal raster neighbors + reclassify in one tagged suite
-    (apps/gdalalg_raster_neighbors.cpp focal filter with
-    VRTKernelFilteredSource semantics; apps/gdalalg_raster_reclassify.cpp
-    interval mapping), per-image checksum + stats per mode."""
-    from .fixtures.images import images_df
-    from .operators.rasterops import neighbors, reclassify
-
-    imgs = images_df(spark, min(_images_n(sf_dir), 100))
-    parts = [
-        neighbors(imgs, method="median", size=3)
-        .withColumn("mode", F.lit("neighbors_median")),
-        neighbors(imgs, kernel="gaussian", size=5)
-        .withColumn("mode", F.lit("neighbors_gaussian5")),
-        reclassify(imgs, "[0,64)=0;[64,128)=1;[128,192)=2;DEFAULT=3")
-        .withColumn("mode", F.lit("reclassify")),
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.select("mode", "image_id", "cs", "vmin", "vmax", "vmean")
-
-
-@q("phash_pixel_dedup", None)
-def phash_pixel_dedup_q(spark, sf_dir):
-    """Image near-dup from RAW PIXELS: decode -> DCT perceptual hash
-    (map-only) -> banded Hamming LSH pairs -> connected components ->
-    keep list. The fixture generator reuses the pixel pattern per
-    (w, h), so pixel-identical images form phash-0 clusters; reports
-    per-Hamming-distance pair counts + cluster stats."""
-    from .fixtures.images import images_df
-    from .operators.dedup import hamming_near_pairs, pair_components
-    from .operators.rasterops import perceptual_hash
-
-    imgs = images_df(spark, min(_images_n(sf_dir), 300))
-    hashes = perceptual_hash(imgs)
-    pairs = hamming_near_pairs(hashes, "phash_px", "image_id",
-                               max_hamming=2)
-    comps = pair_components(pairs, "id_a", "id_b")
-    dist = (pairs.groupBy("hamming").agg(F.count("*").alias("n_pairs"))
-            .withColumn("mode", F.concat(F.lit("dist_"), F.col("hamming")))
-            .select("mode", F.col("n_pairs").alias("n")))
-    clus = (comps.groupBy("component").count()
-            .groupBy().agg(F.count("*").alias("n_clusters"),
-                           F.max("count").alias("max_size"))
-            .select(F.lit("clusters").alias("mode"),
-                    F.col("n_clusters").alias("n")))
-    return dist.unionByName(clus).orderBy("mode")
-
-
-@q("gdaltransform_points", None)
-def gdaltransform_points_q(spark, sf_dir):
-    """gdaltransform batch point transforms, one tagged suite per CRS
-    family: 3857 (JVM column math), UTM zone 31 (Krüger series), LCC
-    Europe 2SP, south polar stereographic, CONUS Albers equal-area
-    (EPSG:5070 shape), and the MODIS sinusoidal land grid. Fixture
-    lon/lats are scaled into each family's valid domain; rt_err_udeg pins
-    forward/inverse self-consistency (micro-degrees, ~0 for all closed
-    forms)."""
-    from .fixtures.images import images_df
-    from .functions.crs import transform_points
-
-    imgs = images_df(spark, min(_images_n(sf_dir), 200)).select(
-        "image_id", "lon", "lat")
-    modes = {
-        # (family, lon -> domain, lat -> domain)
-        "3857": (F.col("lon"), F.col("lat")),
-        "utm31": (F.col("lon") / 60.0 + 3.0, F.col("lat") * 0.4),
-        "lcc_eu": (F.col("lon") / 12.0 + 10.0, F.col("lat") / 8.0 + 48.0),
-        "stereo_s": (F.col("lon"), -70.0 + F.col("lat") / 20.0),
-        "albers_conus": (F.col("lon") / 6.0 - 96.0,
-                         F.col("lat") / 6.0 + 38.0),
-        "sinu_modis": (F.col("lon"), F.col("lat") * 0.9),
-    }
-    parts = []
-    for fam, (lo, la) in modes.items():
-        src = imgs.select("image_id", lo.alias("lon"), la.alias("lat"))
-        parts.append(
-            transform_points(src, fam).select(
-                F.lit(fam).alias("family"), "image_id",
-                F.round("x", 6).alias("x"), F.round("y", 6).alias("y"),
-                F.round("rt_err_udeg", 3).alias("rt_err_udeg")))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-@q("raster_pipeline", None)
-def raster_pipeline_q(spark, sf_dir):
-    """gdal raster pipeline (GDALG streamed-alg analogue): a 4-step chain
-    (resize -> scale -> gaussian neighbors -> hillshade) FUSED into one
-    map stage — decode once, numpy kernels in order, encode once; zero
-    shuffles, zero intermediate materialization. The chain text round-
-    trips through the GDALG JSON form before execution."""
-    from .fixtures.images import images_df
-    from .pipeline import run_pipeline, to_gdalg
-
-    imgs = images_df(spark, min(_images_n(sf_dir), 100))
-    cli = ("gdal raster pipeline read ! resize w=64 h=64 r=bilinear ! "
-           "scale dst_min=0 dst_max=255 ! neighbors kernel=gaussian "
-           "size=3 ! hillshade azimuth=315 altitude=45 ! write")
-    return run_pipeline(imgs, to_gdalg(cli)).select(
-        "image_id", "w2", "h2", "bands", "cs",
-        F.round("vmin", 4).alias("vmin"), F.round("vmax", 4).alias("vmax"))
-
-
-@q("raster_as_features", None)
-def raster_as_features_q(spark, sf_dir):
-    """gdal raster as-features: per-pixel polygon features with band
-    values, aggregated per image (count + value sum + total polygon
-    area via ST_Area) — explode stays inside the Arrow pass."""
-    from .fixtures.images import images_df
-    from .operators.vectorize import raster_as_features
-    from .sql.ogr_compat import register_st_functions
-
-    imgs = images_df(spark, min(_images_n(sf_dir), 12))
-    feats = raster_as_features(imgs, geometry="polygon")
-    register_st_functions(spark)
-    return (feats
-            .withColumn("area", F.expr("ST_Area(wkb)"))
-            .groupBy("image_id")
-            .agg(F.count("*").alias("n_pixels"),
-                 F.sum(F.col("bands")[0]).cast("long").alias("band1_sum"),
-                 F.round(F.sum("area"), 1).alias("area_m2"))
-            .orderBy("image_id"))
-
-
-@q("raster_blend_modes", None)
-def raster_blend_modes_q(spark, sf_dir):
-    """gdal raster blend: all 10 composition modes over (image, image)
-    pairs with 70% opacity — the reference's premultiplied Porter-Duff
-    integer math (apps/gdalalg_raster_blend.cpp), per-mode checksums."""
-    from .fixtures.images import images_df
-    from .operators.rasterops import raster_blend
-    from .oracle.blend import MODES
-
-    imgs = images_df(spark, min(_images_n(sf_dir), 40)).persist()
-    parts = [
-        raster_blend(imgs, imgs, operator=m, opacity=70)
-        .withColumn("mode", F.lit(m))
-        for m in MODES
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.select("mode", "image_id", "bands", "cs1", "cs2", "cs3")
-
-
-@q("gdal_calc_expr", None)
-def gdal_calc_expr_q(spark, sf_dir):
-    """gdal_calc analogue: whitelisted numpy expressions over lettered
-    bands, three modes in one tagged suite — NDVI-style normalized
-    difference, a where() threshold mask, and a clipped sqrt brighten."""
-    from .fixtures.images import images_df
-    from .operators.rasterops import gdal_calc
-
-    imgs = images_df(spark, min(_images_n(sf_dir), 100))
-    parts = []
-    for tag, expr in (
-        ("norm_diff", "(A - B) / (A + B + 1)"),
-        ("threshold", "where(A > 128, 255, 0)"),
-        ("brighten", "clip(sqrt(A) * 16, 0, 255)"),
-    ):
-        parts.append(gdal_calc(imgs, expr).withColumn("mode", F.lit(tag)))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.select("mode", "image_id", "cs", "vmin", "vmax", "vmean")
-
-
-@q("vector_pipeline", None)
-def vector_pipeline_q(spark, sf_dir):
-    """gdal vector pipeline over traced footprints: attribute steps
-    (filter/sort/limit/select) compile to native Catalyst ops, geometry
-    steps (simplify -> convex-hull) run as Arrow WKB kernels; reports
-    per-feature area of the final hulls."""
-    from .fixtures.images import images_df
-    from .operators.rasterops import footprint
-    from .pipeline import run_vector_pipeline
-    from .sql.ogr_compat import register_st_functions
-
-    imgs = images_df(spark, min(_images_n(sf_dir), 60))
-    feats = footprint(imgs, threshold=0).select("image_id", "wkb", "n_valid")
-    out = run_vector_pipeline(
-        feats,
-        "gdal vector pipeline read ! filter where='n_valid > 0' ! "
-        "simplify tol=0.5 ! convex-hull ! sort by=image_id ! write")
-    register_st_functions(spark)
-    return out.select(
-        "image_id", "n_valid",
-        F.round(F.expr("ST_Area(wkb)"), 1).alias("hull_area"))
-
-
-@q("vrt_mosaic", None)
-def vrt_mosaic_q(spark, sf_dir):
-    """VRT round trip (frmts/vrt, the gdalbuildvrt output format): build
-    a .vrt index from source metadata (no decode), parse it back, and
-    materialize the mosaic DISTRIBUTED through the engine's render +
-    last-wins merge; reports the source count, dataset grid, and the
-    materialized tile count + checksum sum."""
-    import os
-    import tempfile
-
-    from .fixtures.images import images_df
-    from .io.vrt import materialize_vrt, parse_vrt, write_vrt
-    from .oracle.mercator import zoom_for_pixel_size
-
-    imgs = images_df(spark, min(_images_n(sf_dir), 60)).persist()
-    with tempfile.TemporaryDirectory() as td:
-        pth = os.path.join(td, "mosaic.vrt")
-        info = write_vrt(imgs, pth)
-        spec = parse_vrt(pth)
-        # gate at native-3 zoom (64x fewer pixels): the VRT driver's
-        # SimpleSource composition is identical at every zoom, and the
-        # native-resolution render costs ~10x the per-query budget
-        gate_zoom = int(zoom_for_pixel_size(spec["gt"][1] * 0.999)) - 3
-        tiles = materialize_vrt(spark, imgs, pth, reducer="last",
-                                zoom=gate_zoom)
-        agg = tiles.agg(
-            F.count("*").alias("n_tiles"),
-            F.sum(F.col("cs1") + F.col("cs2") + F.col("cs3")).alias("cs_sum"),
-        ).collect()[0]
-    imgs.unpersist()
-    return spark.createDataFrame(
-        [(len(spec["sources"]), spec["xsize"], spec["ysize"], info["zoom"],
-          agg["n_tiles"], agg["cs_sum"])],
-        "n_sources long, xsize long, ysize long, zoom long, "
-        "n_tiles long, cs_sum long")
-
-
-@q("retile_pyramid", None)
-def retile_pyramid_q(spark, sf_dir):
-    """gdal_retile analogue: fixed 64-px pixel-space tiles over 2 levels
-    (level 2 at half resolution), per-level tile counts + checksum sum —
-    map-only, the whole per-image tile set from one Arrow batch."""
-    from .fixtures.images import images_df
-    from .operators.rasterops import retile
-
-    imgs = images_df(spark, min(_images_n(sf_dir), 100))
-    t = retile(imgs, tile_px=64, levels=2)
-    return (t.groupBy("level")
-            .agg(F.count("*").alias("n_tiles"),
-                 F.sum("cs").alias("cs_sum"),
-                 F.sum(F.col("w").cast("long") * F.col("h")).alias("px"))
-            .orderBy("level"))
-
-
-@q("vector_layer_info", None)
-def vector_layer_info_q(spark, sf_dir):
-    """ogrinfo -so analogue over the traced image footprints: feature
-    count, layer extent, geometry-type counts, field schema."""
-    from .fixtures.images import images_df
-    from .operators.layer_algebra import vector_info
-    from .operators.rasterops import footprint
-
-    imgs = images_df(spark, min(_images_n(sf_dir), 60))
-    feats = footprint(imgs, threshold=0).select("image_id", "wkb", "n_valid")
-    return vector_info(feats, layer_name="footprints")
-
-
-@q("fill_nodata", None)
-def fill_nodata_q(spark, sf_dir):
-    """GDALFillNodata IDW hole filling (alg/rasterfill.cpp)."""
-    from .fixtures.images import images_df
-    from .operators.rasterops import fill_nodata_stats
-
-    imgs = images_df(spark, min(_images_n(sf_dir), 100))
-    return fill_nodata_stats(imgs)
-
-
-def _ordered_names():
-    """Driver-gate ordering: the external correctness driver grades only the
-    FIRST 50 registry entries, so every DuckDB-oracled query must precede the
-    rows-only ones (round 2 lost 9 oracled grades to the cap).  Stable within
-    each group (definition order)."""
-    names = list(QUERIES)
-    oracled = [n for n in names if QUERIES[n][1] is not None]
-    rows_only = [n for n in names if QUERIES[n][1] is None]
-    return oracled + rows_only
-
-
 def all_queries():
-    return {name: QUERIES[name][0] for name in _ordered_names()}
+    return {name: fn for name, (fn, _) in QUERIES.items()}
 
 
 def all_oracles():
-    return {name: QUERIES[name][1] for name in _ordered_names()
-            if QUERIES[name][1] is not None}
+    return {name: oracle for name, (_, oracle) in QUERIES.items()}
 
 
 # ---------------------------------------------------------------------------

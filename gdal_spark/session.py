@@ -66,6 +66,17 @@ def default_cores() -> int:
     return int(env) if env else len(os.sched_getaffinity(0))
 
 
+def default_driver_memory() -> str:
+    """``$SPARK_GRAFT_DRIVER_MEM`` if set, else half of physical memory,
+    capped at 24g. A fixed 24g heap lets the driver JVM outgrow the RAM of
+    a smaller host until the kernel's OOM killer ends it."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    total_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 20
+    return f"{min(total_mb // 2, 24 * 1024)}m"
+
+
 def get_spark(
     cores: int | None = None,
     app_name: str = "gdal_spark",
@@ -83,7 +94,7 @@ def get_spark(
         "spark.default.parallelism": str(cores),
         "spark.buffer.size": str(1024 * 1024),
         "spark.sql.files.openCostInBytes": str(1024 * 1024),
-        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
+        "spark.driver.memory": default_driver_memory(),
         "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
         "spark.sql.parquet.compression.codec": "zstd",
         "spark.ui.enabled": "false",

@@ -8,8 +8,9 @@ skip-if-exists (gdal2tiles.py:1492-1495) and streamed GDALG pipelines
   (``readStream`` + ``availableNow`` trigger) rendering base tiles via
   foreachBatch — new parquet files landing in the source dir are tiled on
   the next run, with exactly-once progress tracked in the checkpoint dir.
-* ``resume_tiles``: the batch resume path — anti-join planned tile keys
-  against the already-written sink before any decode work happens.
+* ``resume_tiles``: the batch resume path — anti-join the rendered tile
+  keys against the already-written sink, so only new tiles come out
+  (every image is still decoded and rendered; see ``resume_tiles``).
 * ``windowed_event_counts``: watermarked tumbling-window streaming agg over
   the events table (the Spark-native semantics GDAL lacks, included for
   engine completeness).
@@ -49,10 +50,12 @@ def incremental_tiles(spark: SparkSession, source_dir: str, sink_dir: str,
 
 def resume_tiles(spark: SparkSession, images: DataFrame, sink_dir: str,
                  method: str = "nearest") -> DataFrame:
-    """Batch resume (--resume semantics): render only tiles whose
-    (image_id, z, x, y) key is absent from the sink. The anti-join runs on
+    """Batch resume (--resume semantics): return only tiles whose
+    (image_id, z, x, y) key is absent from the sink. The anti-join reads
     the cheap key projection of the sink (column pruning: tile bytes are
-    never read)."""
+    never read), but it applies to the output of ``render_base_tiles``, a
+    ``mapInPandas`` that Spark cannot push the join below: every image is
+    decoded and rendered, and existing tiles are dropped afterwards."""
     try:
         existing = spark.read.parquet(sink_dir).select("image_id", "z", "x", "y")
     except Exception:

@@ -12,11 +12,13 @@ table -> mercator cell encode -> broadcast spatial join against the tile
 grid -> native-zoom tile render (decode + resample, Arrow-batched) ->
 z/x/y.png directory sink with per-partition lineage manifests.
 
-``--resume`` re-plans only tiles absent from the sink: existing keys are
+``--resume`` writes only tiles absent from the sink: existing keys are
 recovered by an executor-parallel directory walk (one task per z/x
 directory — the listing itself scales out; at 10^12-tile scale the same
 anti-join runs off the lineage manifests instead of a walk), then
-anti-joined against the plan before any decode work happens.
+anti-joined against the rendered tiles.  The join sits above the render
+``mapInPandas``, which Spark cannot push it through, so every image is
+still decoded and rendered; only the sink writes are skipped.
 
 Prints ONE JSON line with rows written, wall seconds, and throughput.
 """

@@ -1,9 +1,9 @@
 """Replicate the external driver's correctness gate locally.
 
-For every queries() entry: run the Spark query; if an oracle_sql() entry
-exists, run it in DuckDB over the same parquet views and compare row count,
-column names, and an order-insensitive value hash (columns sorted by name,
-rows sorted by all columns). Prints one line per query + a summary.
+For every queries() entry: run the Spark query, run its oracle_sql() entry
+in DuckDB over the same parquet views, and compare row count, column names,
+and an order-insensitive value hash (columns sorted by name, rows sorted by
+all columns). Prints one line per query + a summary.
 
 Usage: python scripts/selfcheck.py [sf_dir] [query ...]
 """
@@ -49,7 +49,7 @@ def main():
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    n_pass = n_fail = n_rows_only = 0
+    n_pass = n_fail = 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
@@ -61,11 +61,6 @@ def main():
             n_fail += 1
             continue
         dt = time.time() - t0
-        if name not in oracles:
-            print(f"rows  {name}: {len(sdf)} rows, {len(sdf.columns)} cols "
-                  f"({dt:.1f}s) [rows-only]")
-            n_rows_only += 1
-            continue
         try:
             ddf = con.sql(oracles[name]).df()
         except Exception as e:
@@ -96,7 +91,7 @@ def main():
                   f"hash {hs} vs {hd}")
             n_fail += 1
 
-    print(f"\nsummary: {n_pass} pass, {n_rows_only} rows-only, {n_fail} fail")
+    print(f"\nsummary: {n_pass} pass, {n_fail} fail")
     sys.exit(1 if n_fail else 0)
 
 

@@ -75,6 +75,34 @@ class TestConicTransforms:
         # same-resolution nearest warp keeps the value population
         assert abs(float(out.mean()) - float(a.mean())) < 8.0
 
+    @pytest.mark.parametrize("proj", ["lcc", "stereo"])
+    def test_generic_warp_bilinear_reproduces_ramp(self, proj):
+        """Bilinear through the non-separable warp reproduces a linear ramp
+        at every destination center that inverse-maps inside the source
+        pixel-center grid (up to the uint8 rounding)."""
+        from gdal_spark.oracle.warp import warp_proj_to_4326
+
+        p, (lon, lat) = ((CC.lcc_europe(), (10.0, 50.0)) if proj == "lcc"
+                         else (CC.epsg_3031(), (-120.0, -78.0)))
+        yy, xx = np.mgrid[0:40, 0:40]
+        a = (2 * xx + 3 * yy).astype(np.uint8)
+        cx, cy = p.forward(lon, lat)
+        gt = [float(cx) - 20 * 100.0, 100.0, 0.0,
+              float(cy) + 20 * 100.0, 0.0, -100.0]
+        out, dst_gt = warp_proj_to_4326(
+            a, gt, to_lonlat=p.inverse, from_lonlat=p.forward,
+            method="bilinear")
+        lon_g, lat_g = np.meshgrid(
+            dst_gt[0] + (np.arange(out.shape[1]) + 0.5) * dst_gt[1],
+            dst_gt[3] + (np.arange(out.shape[0]) + 0.5) * dst_gt[5])
+        e, n = p.forward(lon_g, lat_g)
+        gx = (e - gt[0]) / gt[1] - 0.5
+        gy = (n - gt[3]) / gt[5] - 0.5
+        inner = (gx >= 0) & (gx <= 39) & (gy >= 0) & (gy <= 39)
+        assert inner.mean() > 0.5
+        np.testing.assert_allclose(out[inner], (2 * gx + 3 * gy)[inner],
+                                   atol=0.5 + 1e-9)
+
 
 class TestTransformPoints:
     def test_all_families_roundtrip(self, spark):

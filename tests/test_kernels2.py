@@ -462,14 +462,81 @@ class TestContourOperator:
         assert set(got["level"].unique()) <= {64.0, 128.0, 192.0}
         assert (got["n_segments"] > 0).all()
 
+    @staticmethod
+    def _band1_64(blob):
+        """Band 1 as the operators see it by default: nearest-decimated
+        to 64x64 when either side exceeds 64."""
+        from gdal_spark.codecs.registry import decode
+
+        a = decode(blob)[:, :, 0]
+        if a.shape[0] > 64 or a.shape[1] > 64:
+            a = RS.resample_nearest(a, 64, 64)
+        return a
+
     def test_fill_nodata_operator(self, spark):
         from gdal_spark.fixtures.images import generate_images_pdf
         from gdal_spark.operators.rasterops import fill_nodata_stats
+        from gdal_spark.oracle.checksum import checksum_image
 
-        imgs = spark.createDataFrame(generate_images_pdf(3))
-        got = fill_nodata_stats(imgs).toPandas()
+        pdf = generate_images_pdf(3)
+        got = fill_nodata_stats(spark.createDataFrame(pdf)).toPandas()
         assert (got["n_filled"] >= 0).all()
         assert (got["n_filled"] > 0).any()
+        got = got.set_index("image_id")
+        for r in pdf.itertuples(index=False):
+            a = self._band1_64(r.bytes)
+            mask = a < 8
+            filled = fill_nodata(a.astype(np.float64), mask, 8, 0)
+            exp = np.clip(np.floor(filled + 0.5), 0, 255).astype(np.uint8)
+            assert got.loc[r.image_id, "n_filled"] == mask.sum()
+            assert got.loc[r.image_id, "cs"] == checksum_image(exp)[0]
+
+    def test_contour_lines_operator(self, spark):
+        """One MultiLineString per (image, level) holding the chained
+        iso-polylines of the oracle, with their count and total length."""
+        from gdal_spark.fixtures.images import generate_images_pdf
+        from gdal_spark.operators.rasterops import contour_lines
+        from gdal_spark.oracle import geom as G
+        from gdal_spark.oracle.contour import contour_polylines
+
+        pdf = generate_images_pdf(3)
+        got = contour_lines(spark.createDataFrame(pdf)).toPandas()
+        exp = {}
+        for r in pdf.itertuples(index=False):
+            a = self._band1_64(r.bytes).astype(np.float64)
+            for level, lines in contour_polylines(
+                    a, [64.0, 128.0, 192.0]).items():
+                if lines:
+                    exp[(r.image_id, float(level))] = lines
+        assert len(got) == len(exp) > 0
+        for row in got.itertuples(index=False):
+            lines = exp[(row.image_id, row.level)]
+            assert row.n_lines == len(lines)
+            assert row.total_len == float(np.round(
+                G.length(("multilinestring", lines)), 4))
+            assert bytes(row.wkb) == G.to_wkb("multilinestring", lines)
+
+
+class TestOverviewOperator:
+    @pytest.mark.parametrize("method", ["gauss", "rms"])
+    def test_matches_kernel(self, spark, method):
+        """One 2x overview level per image (odd edges cropped), checksums
+        of every band equal to the oracle kernel's."""
+        from gdal_spark.codecs.registry import decode
+        from gdal_spark.fixtures.images import generate_images_pdf
+        from gdal_spark.operators.rasterops import overview_downsample
+        from gdal_spark.oracle.checksum import checksum_image
+
+        pdf = generate_images_pdf(4)
+        got = overview_downsample(spark.createDataFrame(pdf), method)
+        got = got.toPandas().set_index("image_id")
+        kernel = RS.gauss_2x2 if method == "gauss" else RS.rms_2x2
+        for r in pdf.itertuples(index=False):
+            a = decode(r.bytes)
+            v = kernel(a[:a.shape[0] & ~1, :a.shape[1] & ~1])
+            row = got.loc[r.image_id]
+            assert (row.w2, row.h2) == (v.shape[1], v.shape[0])
+            assert [row.cs1, row.cs2, row.cs3] == list(checksum_image(v))
 
 
 class TestWarpNodataMasking:

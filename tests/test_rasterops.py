@@ -63,9 +63,29 @@ class TestTranslate:
             assert (row.w2, row.h2) == (10, 7)
             np.testing.assert_array_equal(decode(row.bytes), a[2:9, 3:13])
 
+    def test_projwin_band_expand_outsize(self, spark, imgs_pdf):
+        """-projwin, -b 1, -expand rgb and -outsize in one call: the gray
+        window replicates to three bands, then resizes (nearest)."""
+        from gdal_spark.operators.rasterops import translate
+
+        src = imgs_pdf.iloc[2]
+        a = decode(src.bytes)
+        gt = geotransform_3857(src.lon, src.lat, a.shape[1], a.shape[0],
+                               src.gsd_m)
+        projwin = (gt[0] + 3 * gt[1], gt[3] + 2 * gt[5],
+                   gt[0] + 13 * gt[1], gt[3] + 9 * gt[5])
+        got = translate(spark.createDataFrame(imgs_pdf.iloc[[2]]),
+                        projwin=projwin, bands=[1], expand="rgb",
+                        outsize=(32, 32)).toPandas().iloc[0]
+        exp = resample_nearest(np.repeat(a[2:9, 3:13, :1], 3, axis=2), 32, 32)
+        assert (got.w2, got.h2) == (32, 32)
+        np.testing.assert_array_equal(decode(got.bytes), exp)
+        assert got.cs1 == checksum_image(exp)[0]
+
 
 class TestWarp:
-    @pytest.mark.parametrize("method", ["nearest", "bilinear"])
+    @pytest.mark.parametrize(
+        "method", ["nearest", "bilinear", "cubic", "average", "med"])
     def test_warp_matches_oracle(self, spark, imgs, imgs_pdf, method):
         from gdal_spark.operators.rasterops import warp_to_wgs84
 
@@ -124,6 +144,17 @@ class TestDEM:
             a = decode(r.bytes)[:, :, 0].astype(np.float64)
             exp = DEM.hillshade(a, r.gsd_m, r.gsd_m)
             assert got.loc[r.image_id, "cs"] == checksum_image(exp)[0]
+        # the -alg ZevenbergenThorne and shading-variant modes
+        for variant, alg in (("regular", "zt"), ("combined", "horn"),
+                             ("multidirectional", "horn"), ("igor", "horn")):
+            got = dem_metrics(imgs, "hillshade", variant=variant, alg=alg
+                              ).toPandas().set_index("image_id")
+            for r in imgs_pdf.head(4).itertuples(index=False):
+                a = decode(r.bytes)[:, :, 0].astype(np.float64)
+                exp = DEM.hillshade_variant(a, r.gsd_m, r.gsd_m, 1.0, 315.0,
+                                            45.0, variant, alg)
+                assert got.loc[r.image_id, "cs"] == checksum_image(exp)[0], (
+                    variant, alg)
 
 
 class TestFootprintZonal:
@@ -190,12 +221,31 @@ class TestFootprintZonal:
         M = a * (1 - ee) / (1 - ee * np.sin(phi) ** 2) ** 1.5
         assert abs((n2 - n1) / (M * np.radians(0.001)) - 0.9996) < 1e-6
 
-    def test_warp_utm_runs(self, spark, imgs):
+    def test_warp_utm_runs(self, spark, imgs, imgs_pdf):
+        """Each image is georeferenced in the UTM zone of its center
+        (gsd_m as UTM meters) and warped by the Krüger-series oracle, with
+        a point kernel and a box statistic."""
         from gdal_spark.operators.rasterops import warp_utm
+        from gdal_spark.oracle import utm as U
+        from gdal_spark.oracle.warp import warp_utm_to_4326
 
-        got = warp_utm(imgs, "bilinear").toPandas()
-        assert len(got) == imgs.count()
-        assert (got["cs1"] >= 0).all() and got["zone"].between(1, 60).all()
+        for method in ("bilinear", "q3"):
+            got = warp_utm(imgs, method).toPandas().set_index("image_id")
+            assert len(got) == len(imgs_pdf)
+            for r in imgs_pdf.itertuples(index=False):
+                a = decode(r.bytes)
+                h, w = a.shape[:2]
+                zone = U.utm_zone_for_lon(float(r.lon))
+                south = float(r.lat) < 0
+                e0, n0 = U.lonlat_to_utm(float(r.lon), float(r.lat), zone,
+                                         south)
+                gt = [float(e0) - w / 2.0 * r.gsd_m, float(r.gsd_m), 0.0,
+                      float(n0) + h / 2.0 * r.gsd_m, 0.0, -float(r.gsd_m)]
+                exp, _ = warp_utm_to_4326(a, gt, zone, method, south)
+                row = got.loc[r.image_id]
+                assert row["zone"] == zone
+                assert [row["cs1"], row["cs2"], row["cs3"]] == list(
+                    checksum_image(exp)), method
 
     def test_pansharpen_brovey(self, spark, imgs, imgs_pdf):
         """Fusing the downsampled spectral with the full-res pan must beat
@@ -319,6 +369,32 @@ class TestFootprintZonal:
             exp = float(a[r.h // 2, r.w // 2, 0])
             assert got.loc[r.image_id, "value"] == pytest.approx(exp)
 
+    @pytest.mark.parametrize("method", ["bilinear", "cubic"])
+    def test_sample_at_points_interpolated(self, spark, method):
+        """Bilinear and Catmull-Rom cubic both reproduce a linear ramp
+        exactly between pixel centers, so value = ramp(fx - 0.5, fy - 0.5)."""
+        from gdal_spark.codecs.registry import encode
+        from gdal_spark.operators.rasterops import sample_at_points
+
+        w = h = 40
+        yy, xx = np.mgrid[0:h, 0:w]
+        a = np.repeat((3 * xx + 2 * yy)[:, :, None], 3, axis=2)
+        lon, lat, gsd = 5.0, 45.0, 10.0
+        img = pd.DataFrame([dict(image_id="ramp",
+                                 bytes=encode(a.astype(np.uint8), "png"),
+                                 lon=lon, lat=lat, gsd_m=gsd, w=w, h=h)])
+        gt = geotransform_3857(lon, lat, w, h, gsd)
+        fx = np.array([5.5, 10.25, 20.75, 30.1])
+        fy = np.array([6.5, 12.6, 25.3, 8.9])
+        plon, plat = M.meters_to_lonlat(gt[0] + fx * gt[1], gt[3] + fy * gt[5])
+        pts = pd.DataFrame(dict(image_id="ramp", point_id=np.arange(4),
+                                plon=plon, plat=plat))
+        got = (sample_at_points(spark.createDataFrame(img),
+                                spark.createDataFrame(pts), method)
+               .toPandas().sort_values("point_id"))
+        exp = 3 * (fx - 0.5) + 2 * (fy - 0.5)
+        np.testing.assert_allclose(got["value"], exp, atol=1e-4)
+
 
 class TestMosaicBandCalc:
     def test_band_calc_norm_diff(self, spark, imgs, imgs_pdf):
@@ -367,8 +443,10 @@ class TestMosaicBandCalc:
 
     def test_mosaic_merges_overlaps(self, spark):
         from gdal_spark.operators.rasterops import mosaic_tiles
+        from gdal_spark.oracle.tiling import render_image_tiles
 
-        # two co-located images -> mosaic tile = mean of their tiles
+        # two co-located images -> mosaic tile = round-half-up mean of
+        # the sources' own base tiles at that key
         pdf = generate_images_pdf(2).copy()
         pdf["lon"] = 10.0
         pdf["lat"] = 10.0
@@ -377,6 +455,19 @@ class TestMosaicBandCalc:
         got = mosaic_tiles(df, zoom=9, reducer="mean").toPandas()
         assert (got["image_id"] == "__mosaic__").all()
         assert got.groupby(["z", "x", "y"]).size().max() == 1
+        per_key = {}
+        for r in pdf.itertuples(index=False):
+            for z, tx, ty, t in render_image_tiles(
+                    decode(r.bytes), r.lon, r.lat, r.gsd_m, "nearest",
+                    zoom=9):
+                per_key.setdefault((z, tx, ty), []).append(
+                    t.astype(np.float64))
+        assert {(r.z, r.x, r.y) for r in got.itertuples()} == set(per_key)
+        assert max(len(v) for v in per_key.values()) == 2
+        for r in got.itertuples(index=False):
+            exp = np.clip(np.floor(np.mean(per_key[(r.z, r.x, r.y)], axis=0)
+                                   + 0.5), 0, 255).astype(np.uint8)
+            np.testing.assert_array_equal(decode(r.tile), exp)
 
 
 class TestLayerAlgebra:
@@ -672,6 +763,45 @@ class TestGcpTransformers:
         assert (res["n_valid"] > 0).all()
         assert (res["cs"] >= 0).all()
 
+    @pytest.mark.parametrize("method", ["tps", "poly"])
+    def test_warp_gcp_affine_gcps_closed_form(self, spark, imgs_pdf, method):
+        """Affine GCPs make the spline weights (TPS) and the quadratic
+        terms (order-2 fit) zero, so both warps equal the closed-form
+        affine nearest warp: X = 1.03x + 0.07y + 3.5, Y = -0.04x + 0.97y
+        + 2.25, dst grid over the forward corner bbox."""
+        from gdal_spark.operators.rasterops import warp_gcp
+
+        pdf = imgs_pdf.head(3).copy()
+        cols = {"gcp_px": [], "gcp_py": [], "gcp_x": [], "gcp_y": []}
+        for r in pdf.itertuples(index=False):
+            x, y = self._grid(int(r.w), int(r.h), 4).T
+            cols["gcp_px"].append(x.tolist())
+            cols["gcp_py"].append(y.tolist())
+            cols["gcp_x"].append((1.03 * x + 0.07 * y + 3.5).tolist())
+            cols["gcp_y"].append((-0.04 * x + 0.97 * y + 2.25).tolist())
+        for k, v in cols.items():
+            pdf[k] = v
+        res = warp_gcp(spark.createDataFrame(pdf), method=method, order=2
+                       ).toPandas().set_index("image_id")
+        det = 1.03 * 0.97 + 0.07 * 0.04
+        for r in pdf.itertuples(index=False):
+            band = decode(r.bytes)[:, :, 0]
+            h, w = band.shape
+            x0, x1 = 3.5, 1.03 * (w - 1) + 0.07 * (h - 1) + 3.5
+            y0, y1 = -0.04 * (w - 1) + 2.25, 0.97 * (h - 1) + 2.25
+            gx, gy = np.meshgrid(x0 + (np.arange(w) + 0.5) * (x1 - x0) / w,
+                                 y0 + (np.arange(h) + 0.5) * (y1 - y0) / h)
+            ix = np.floor((0.97 * (gx - 3.5) - 0.07 * (gy - 2.25)) / det
+                          + 0.5).astype(np.int64)
+            iy = np.floor((0.04 * (gx - 3.5) + 1.03 * (gy - 2.25)) / det
+                          + 0.5).astype(np.int64)
+            valid = (ix >= 0) & (ix < w) & (iy >= 0) & (iy < h)
+            exp = np.where(valid, band[np.clip(iy, 0, h - 1),
+                                       np.clip(ix, 0, w - 1)], 0)
+            row = res.loc[r.image_id]
+            assert row["n_valid"] == valid.sum()
+            assert row["cs"] == checksum_image(exp.astype(np.uint8))[0]
+
 
 class TestRpcTransformer:
     """RPC00B rational camera model: term order of
@@ -736,6 +866,27 @@ class TestRpcTransformer:
             # most destination centers land inside the source
             assert r.n_valid > 0.8 * w * h
             assert r.cs >= 0
+
+    def test_warp_rpc_bend_free_closed_form(self, spark, imgs_pdf):
+        """A bend-free RPC block is the linear pushbroom model: every
+        destination center lands inside and samples
+        ix = floor((w-1)(c+0.5)/w + 0.5), iy likewise."""
+        from gdal_spark.operators.rasterops import warp_rpc
+        from gdal_spark.oracle.rpc import rpc_pack, synthetic_rpc
+
+        pdf = imgs_pdf.head(3).copy()
+        pdf["rpc"] = [rpc_pack(synthetic_rpc(int(r.w), int(r.h), bend=0.0))
+                      for r in pdf.itertuples(index=False)]
+        res = warp_rpc(spark.createDataFrame(pdf)).toPandas().set_index(
+            "image_id")
+        for r in pdf.itertuples(index=False):
+            band = decode(r.bytes)[:, :, 0]
+            h, w = band.shape
+            ix = np.floor((w - 1) * (np.arange(w) + 0.5) / w + 0.5).astype(int)
+            iy = np.floor((h - 1) * (np.arange(h) + 0.5) / h + 0.5).astype(int)
+            row = res.loc[r.image_id]
+            assert row["n_valid"] == w * h
+            assert row["cs"] == checksum_image(band[iy[:, None], ix[None, :]])[0]
 
 
 class TestPatternOracles:
@@ -1252,6 +1403,19 @@ class TestColorReliefModes:
                for m in ("interpolate", "nearest", "exact")}
         assert len(css) == 1
 
+    @pytest.mark.parametrize("mode", ["interpolate", "nearest", "exact"])
+    def test_modes_match_oracle(self, spark, imgs, imgs_pdf, mode):
+        from gdal_spark.operators.rasterops import dem_metrics
+
+        got = dem_metrics(imgs, "color-relief", color_mode=mode
+                          ).toPandas().set_index("image_id")
+        for r in imgs_pdf.head(4).itertuples(index=False):
+            v = DEM.color_relief_rgb(
+                decode(r.bytes)[:, :, 0].astype(np.float64), mode)
+            row = got.loc[r.image_id]
+            assert row["cs"] == checksum_image(v)[0]
+            assert row["vmean"] == float(np.round(np.mean(v), 4))
+
 
 class TestTileIndex:
     def test_extents_match_oracle_and_wkt_closes(self, spark):
@@ -1416,7 +1580,7 @@ class TestNeighbors:
         np.testing.assert_allclose(
             _neighbors_filter(flat, eq, 3, "mean", None), 50.0)
 
-    def test_spark_operator(self, spark, imgs):
+    def test_spark_operator(self, spark, imgs, imgs_pdf):
         from gdal_spark.operators.rasterops import neighbors
 
         got = neighbors(imgs, method="median", size=3).toPandas()
@@ -1426,6 +1590,22 @@ class TestNeighbors:
         # zero-sum named kernel picks method=sum by default
         got2 = neighbors(imgs, kernel="u").toPandas()
         assert len(got2) == imgs.count()
+        # per image, the operator equals the focal filter kernel
+        from gdal_spark.operators.rasterops import (
+            _NEIGHBOR_KERNELS, _neighbors_filter)
+
+        for kernel, method, size in (("equal", "median", 3),
+                                     ("gaussian", "mean", 5)):
+            got = neighbors(imgs, method=method, size=size, kernel=kernel
+                            ).toPandas().set_index("image_id")
+            coefs = (np.ones(size * size) if kernel == "equal"
+                     else np.array(_NEIGHBOR_KERNELS[(kernel, size)], float))
+            for r in imgs_pdf.head(4).itertuples(index=False):
+                v = _neighbors_filter(decode(r.bytes)[:, :, 0], coefs, size,
+                                      method, None)
+                row = got.loc[r.image_id]
+                assert row["cs"] == checksum_image(v)[0], kernel
+                assert row["vmean"] == float(np.round(np.mean(v), 6)), kernel
 
 
 class TestReclassify:
@@ -1657,6 +1837,33 @@ class TestPipeline:
             ("scale", {"dst_min": "10", "dst_max": "200"}),
             ("expand", {"bands": "rgb"})]
 
+    def test_dem_chain_matches_oracle_kernels(self, spark):
+        """resize -> scale -> gaussian neighbors -> hillshade, fused, equals
+        the oracle kernels run in order (hillshade at the resized gsd)."""
+        from gdal_spark.fixtures.images import images_df
+        from gdal_spark.operators.rasterops import (
+            _NEIGHBOR_KERNELS, _neighbors_filter)
+        from gdal_spark.oracle.resample import resample_bilinear
+        from gdal_spark.pipeline import run_pipeline, to_gdalg
+
+        imgs = images_df(spark, 4)
+        cli = ("gdal raster pipeline read ! resize w=64 h=64 r=bilinear ! "
+               "scale dst_min=0 dst_max=255 ! neighbors kernel=gaussian "
+               "size=3 ! hillshade azimuth=315 altitude=45 ! write")
+        got = run_pipeline(imgs, to_gdalg(cli)).toPandas().set_index(
+            "image_id")
+        coefs = np.array(_NEIGHBOR_KERNELS[("gaussian", 3)], float)
+        for r in imgs.collect():
+            a = resample_bilinear(decode(bytes(r["bytes"])).astype(np.float64),
+                                  64, 64)
+            a = (a - a.min()) * 255.0 / ((a.max() - a.min()) or 1.0)
+            v = _neighbors_filter(a[:, :, 0], coefs, 3, "mean", None)
+            res = r["gsd_m"] * r["w"] / 64
+            v = DEM.hillshade(v, res, res, 1.0, 315.0, 45.0)
+            row = got.loc[r["image_id"]]
+            assert (row["w2"], row["h2"], row["bands"]) == (64, 64, 1)
+            assert row["cs"] == checksum_image(np.asarray(v)[:, :, None])[0]
+
     def test_errors(self, spark):
         import pytest as _pt
 
@@ -1763,6 +1970,21 @@ class TestGdalCalc:
             b0 = _dec(bytes(r["bytes"]))[:, :, 0].astype(np.float64)
             exp = np.where(b0 > 128, 255.0, 0.0)
             assert got.loc[r["image_id"], "vmean"] == round(float(exp.mean()), 6)
+
+    def test_clip_sqrt_brighten(self, spark):
+        from gdal_spark.fixtures.images import images_df
+        from gdal_spark.operators.rasterops import gdal_calc
+
+        imgs = images_df(spark, 3)
+        got = (gdal_calc(imgs, "clip(sqrt(A) * 16, 0, 255)")
+               .toPandas().set_index("image_id"))
+        for r in imgs.collect():
+            a = decode(bytes(r["bytes"]))[:, :, 0].astype(np.float64)
+            exp = np.clip(np.sqrt(a) * 16, 0, 255)
+            row = got.loc[r["image_id"]]
+            assert row["cs"] == checksum_image(exp)[0]
+            assert (row["vmin"], row["vmax"]) == (
+                float(np.round(exp.min(), 6)), float(np.round(exp.max(), 6)))
 
     def test_bad_expression_fails_fast(self, spark):
         import pytest as _pt
@@ -1910,22 +2132,30 @@ class TestRasterBlend:
         np.testing.assert_array_equal(got, np.full((2, 2, 3), 128))
 
     def test_blend_operator_hsv_merge_usecase(self, spark):
+        """Every composition mode through the operator equals the oracle
+        kernel pixel for pixel."""
+        from functools import reduce
+
         import numpy as np
+        from pyspark.sql import functions as F
 
         from gdal_spark.codecs.registry import decode as _dec
         from gdal_spark.fixtures.images import images_df
         from gdal_spark.operators.rasterops import raster_blend
-        from gdal_spark.oracle.blend import blend
+        from gdal_spark.oracle.blend import MODES, blend
 
         imgs = images_df(spark, 4)
-        got = (raster_blend(imgs, imgs, operator="multiply", opacity=70,
-                            emit_bytes=True)
-               .toPandas().set_index("image_id"))
-        for r in imgs.collect():
-            a = _dec(bytes(r["bytes"]))
-            exp = blend(a, a, "multiply", 70)
-            px = _dec(bytes(got.loc[r["image_id"], "png"]))
-            np.testing.assert_array_equal(px, exp)
+        src = {r["image_id"]: _dec(bytes(r["bytes"])) for r in imgs.collect()}
+        got = reduce(lambda x, y: x.unionByName(y), [
+            raster_blend(imgs, imgs, operator=m, opacity=70, emit_bytes=True)
+            .withColumn("mode", F.lit(m)) for m in MODES]).collect()
+        assert sorted((r["mode"], r["image_id"]) for r in got) == sorted(
+            (m, i) for m in MODES for i in src)
+        for r in got:
+            a = src[r["image_id"]]
+            exp = blend(a, a, r["mode"], 70)
+            px = _dec(bytes(r["png"]))
+            np.testing.assert_array_equal(px, exp, err_msg=r["mode"])
 
 
 class TestSegmentizeConcaveHull:
@@ -2243,6 +2473,11 @@ class TestRound5Steps:
         assert got["b"][0] == "multipoint"
         assert [tuple(np.asarray(p).ravel()) for p in got["b"][1]] == [
             (9.0, 9.0)]
+        # keep_nested is accepted; 2-level WKB cannot nest, so same output
+        nested = run_vector_pipeline(
+            df, "combine group_by=grp keep_nested=true").toPandas()
+        assert ({r["grp"]: bytes(r["wkb"]) for _, r in nested.iterrows()}
+                == {r["grp"]: bytes(r["wkb"]) for _, r in out.iterrows()})
 
     def test_color_map_step_matches_dem_metrics_kernel(self, spark):
         import numpy as np

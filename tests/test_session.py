@@ -1,5 +1,6 @@
 """Python workers of a ``get_spark`` session import the installed pyspark,
-not Spark's source archives (``gdal_spark.workerd``)."""
+not Spark's source archives (``gdal_spark.workerd``); its driver heap
+default fits the host."""
 
 import os
 import subprocess
@@ -54,6 +55,18 @@ def test_package_import_leaves_pyspark_unimported():
          "print(sorted(m for m in sys.modules if m.split('.')[0] in ('pyspark', 'py4j')))"],
         cwd=ROOT, capture_output=True, text=True, check=True)
     assert out.stdout.strip() == "[]"
+
+
+def test_driver_memory_default_fits_host(monkeypatch):
+    from gdal_spark.session import default_driver_memory
+
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    total_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 20
+    got = default_driver_memory()
+    assert got.endswith("m")
+    assert int(got[:-1]) == min(total_mb // 2, 24 * 1024)
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+    assert default_driver_memory() == "3g"
 
 
 VERSION = b'__version__ = "9.9.9"\n'

@@ -77,3 +77,23 @@ class TestSparkSurface:
         rows = sf.orderBy("id").collect()
         assert rows[0]["OGR_STYLE"] == 'PEN(c:#FF0000,w:5px);LABEL(t:"a;b")'
         assert "FID" in sf.columns
+
+    def test_parse_style_udf_matches_parser(self, spark):
+        """The vectorized UDF returns parse_style_string's (tool, params)
+        parts per row, quoted separators and bare booleans included; a
+        null style parses to no parts."""
+        from gdal_spark.functions.style import parse_style
+
+        styles = [
+            'PEN(c:#00002A,w:7px);BRUSH(fc:#00FF00);'
+            'LABEL(f:"Arial, Bold",t:"c;42:\\"x\\"",s:12pt,bo)',
+            "SYMBOL(id:ogr-sym-3,c:#0000FF)",
+            "", None]
+        df = spark.createDataFrame(list(enumerate(styles)),
+                                   "id int, style string")
+        got = df.select("id", parse_style("style").alias("p")).orderBy(
+            "id").collect()
+        for r, text in zip(got, styles):
+            exp = parse_style_string(text) if text is not None else []
+            assert [(x["tool"], x["params"]) for x in r["p"]] == exp
+        assert len(got[0]["p"]) == 3

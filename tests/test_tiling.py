@@ -75,6 +75,23 @@ def test_map_images_rows(spark, images_pdf, images_sdf):
         assert {row.h for row in mine} == {r.h}
 
 
+def test_captions_survive_tile_render(spark, images_pdf, images_sdf):
+    """Base tiles joined back to the image table carry each image's
+    caption and phash unchanged, one row per tile."""
+    from gdal_spark.operators.tiling import render_base_tiles
+
+    tiles = render_base_tiles(images_sdf, codec=None)
+    got = (tiles.join(images_sdf.select("image_id", "caption", "phash"),
+                      "image_id")
+           .select("image_id", "z", "x", "y", "caption", "phash").toPandas())
+    assert len(got) == tiles.count() > len(images_pdf)
+    src = images_pdf.set_index("image_id")
+    assert (got["caption"].to_numpy()
+            == src.loc[got["image_id"], "caption"].to_numpy()).all()
+    assert (got["phash"].to_numpy()
+            == src.loc[got["image_id"], "phash"].to_numpy()).all()
+
+
 def test_native_zoom_spread(images_pdf):
     zs = {native_zoom(g) for g in images_pdf["gsd_m"].unique()}
     assert zs == {13, 11, 10, 8}  # gsd 10/50/100/500 m/px
@@ -583,6 +600,57 @@ class TestGeoParquet:
         images_df(spark, 3).select("image_id", "w", "h").write.parquet(out)
         with _pt.raises(ValueError, match="geo"):
             read_geoparquet(spark, out)
+
+
+class TestFootprintCorpusRoundTrip:
+    """Traced image footprints (polygons, some with holes) through each
+    vector container. Formats that store the engine's WKB give it
+    back byte-exact; the shapefile rebuilds rings from parts, so it is
+    checked by area."""
+
+    @pytest.fixture(scope="class")
+    def feats(self, spark):
+        from gdal_spark.fixtures.images import images_df
+        from gdal_spark.operators.rasterops import footprint
+
+        return footprint(images_df(spark, 40), threshold=0).select(
+            "image_id", "wkb", "n_valid").toPandas()
+
+    @pytest.mark.parametrize(
+        "fmt", ["gpkg", "geojson", "geojsonseq", "flatgeobuf", "shapefile"])
+    def test_roundtrip(self, spark, tmp_path, feats, fmt):
+        from gdal_spark.io.containers import (read_geopackage_features,
+                                              write_geopackage_features)
+        from gdal_spark.io.flatgeobuf import (COL_LONG, read_flatgeobuf,
+                                              write_flatgeobuf)
+        from gdal_spark.io.geojson import read_geojson, write_geojson
+        from gdal_spark.io.shapefile import read_shapefile, write_shapefile
+        from gdal_spark.oracle import geom as G
+
+        df = spark.createDataFrame(feats)
+        path = str(tmp_path / f"f.{fmt}")
+        if fmt == "gpkg":
+            write_geopackage_features(df, path)
+            back, _ = read_geopackage_features(spark, path)
+        elif fmt == "flatgeobuf":
+            write_flatgeobuf(df, path, extra_cols={"n_valid": COL_LONG})
+            back, _ = read_flatgeobuf(spark, path)
+        elif fmt == "shapefile":
+            write_shapefile(df, path)
+            back = read_shapefile(spark, path)
+        else:
+            write_geojson(df, path, lines=fmt == "geojsonseq")
+            back = read_geojson(spark, path)
+        got = {r["image_id"]: bytes(r["wkb"]) for r in back.collect()}
+        src = {i: bytes(w) for i, w in zip(feats["image_id"], feats["wkb"])}
+        assert set(got) == set(src)
+        assert any(len(G.parse_wkb(w)[1]) > 1 for w in src.values())  # holes
+        if fmt == "shapefile":
+            for i, w in src.items():
+                assert G.area(G.parse_wkb(got[i])) == pytest.approx(
+                    G.area(G.parse_wkb(w)), rel=1e-12)
+        else:
+            assert got == src
 
 
 class TestVrt:

@@ -554,14 +554,44 @@ class TestVectorizeOperators:
         assert (got["value"] < 4).all()
 
     def test_proximity_operator(self, spark):
+        from gdal_spark.codecs.registry import decode
         from gdal_spark.fixtures.images import generate_images_pdf
         from gdal_spark.operators.vectorize import proximity_map
+        from gdal_spark.oracle.resample import resample_nearest
 
-        imgs = spark.createDataFrame(generate_images_pdf(3))
-        got = proximity_map(imgs, target_value=0, downsample_to=32).toPandas()
+        pdf = generate_images_pdf(3)
+        got = proximity_map(spark.createDataFrame(pdf), target_value=0,
+                            downsample_to=32).toPandas()
         # -1 = documented sentinel for "no target pixel in this image"
         assert (got["dmax"] >= -1).all()
         assert (got["dmax"] >= 0).any()
+        got = got.set_index("image_id")
+        for r in pdf.itertuples(index=False):
+            mask = resample_nearest(decode(r.bytes)[:, :, 0], 32, 32) == 0
+            d = RZ.proximity(mask) if mask.any() else np.full(1, -1.0)
+            assert got.loc[r.image_id, "dmax"] == float(np.round(d.max(), 4))
+            assert got.loc[r.image_id, "dmean"] == float(np.round(d.mean(), 4))
+
+    def test_sieve_operator(self, spark):
+        """Per image: component counts before and after, and the checksum
+        of the sieved band, equal the oracle kernels on the decimated,
+        quantized band 1."""
+        from gdal_spark.codecs.registry import decode
+        from gdal_spark.fixtures.images import generate_images_pdf
+        from gdal_spark.operators.vectorize import sieve_filter
+        from gdal_spark.oracle.checksum import checksum_image
+        from gdal_spark.oracle.resample import resample_nearest
+
+        pdf = generate_images_pdf(3)
+        got = sieve_filter(spark.createDataFrame(pdf), threshold=3,
+                           downsample_to=24).toPandas().set_index("image_id")
+        for r in pdf.itertuples(index=False):
+            band = decode(r.bytes)[:, :, 0]
+            q = (resample_nearest(band, 24, 24) // 64).astype(np.uint8)
+            s = RZ.sieve(q, 3)
+            assert got.loc[r.image_id, "n_before"] == RZ.label_components(q)[1]
+            assert got.loc[r.image_id, "n_after"] == RZ.label_components(s)[1]
+            assert got.loc[r.image_id, "cs"] == checksum_image(s)[0]
 
     def test_rasterize_layer_out_of_extent_feature(self, spark):
         """Features whose bbox misses the raster extent are dropped before
