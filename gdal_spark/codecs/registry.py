@@ -24,8 +24,6 @@ try:  # pragma: no cover - not available in this container
 except ImportError:
     _HAVE_PIL = False
 
-FORMATS = ("png", "jpeg", "webp", "cog", "pnm")
-
 
 def encode(arr: np.ndarray, fmt: str) -> bytes:
     if fmt == "png":

@@ -38,9 +38,6 @@ _WORDS = (
     "ridge delta plateau lagoon glacier dune canyon reef marsh"
 ).split()
 
-SCALES = {"sf-smoke": 200, "sf-test": 5000, "sf-bench": 200_000}
-
-
 def _frac(x):
     return x - np.floor(x)
 

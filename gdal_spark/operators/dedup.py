@@ -127,25 +127,15 @@ def _cap_buckets(banded: DataFrame, keys: list[str], cap: int | None) -> DataFra
     )
 
 
-def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
-                      id_col: str = "doc_id", num_hashes: int = 64,
-                      bands: int = 16, shingle_n: int = 5,
-                      jaccard_threshold: float = 0.5,
-                      bucket_cap: int | None = 100_000) -> DataFrame:
-    """Near-duplicate pairs (id_a < id_b, jaccard >= threshold).
-
-    Candidates from LSH band-bucket self-join; exact Jaccard on shingle sets
-    (JVM array_intersect/array_union) refines. Only bucket-mates shuffle.
-    Zero-shingle (empty/whitespace) docs are excluded before banding — they
-    all share the sentinel signature and would form one quadratic bucket;
-    exact_dedup already pairs them. ``bucket_cap`` drops pathologically hot
-    buckets entirely (recall loss only for keys duplicated > cap times)."""
+def lsh_band_keys(df: DataFrame, text_col: str, id_col: str,
+                  num_hashes: int, bands: int, shingle_n: int) -> DataFrame:
+    """(id_col, band, bh) rows: one per LSH band of each doc's MinHash
+    signature, ``bh`` hashing the band's ``num_hashes // bands`` values.
+    Zero-shingle (empty/whitespace) docs get no rows — they all share the
+    sentinel signature and would form one quadratic bucket."""
     rows = num_hashes // bands
     sigs = minhash_signatures(df, text_col, id_col, num_hashes, shingle_n)
-    # band join carries ids only — the (large) shingle arrays are recomputed
-    # later for just the candidate docs, so the banded explode and the
-    # self-join never ship shingle sets and nothing needs persist()
-    banded = sigs.where(F.size("sh") > 0).select(
+    return sigs.where(F.size("sh") > 0).select(
         F.col(id_col),
         F.explode(
             F.transform(
@@ -159,6 +149,59 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
             )
         ).alias("bk"),
     ).select(F.col(id_col), F.col("bk.band").alias("band"), F.col("bk.bh").alias("bh"))
+
+
+def candidate_docs(pair_ids: DataFrame, texts: DataFrame,
+                   id_col: str) -> DataFrame:
+    """The rows of ``texts`` whose id is in a candidate pair (id_a, id_b).
+    Shingles are then recomputed on these docs only (candidates <<
+    corpus): a semi-join prune beats persisting every shingle set of the
+    corpus across the whole job."""
+    cand_ids = (
+        pair_ids.select(F.col("id_a").alias(id_col))
+        .union(pair_ids.select(F.col("id_b").alias(id_col)))
+        .distinct()
+    )
+    return texts.join(cand_ids, id_col, "left_semi")
+
+
+def jaccard_refine(pair_ids: DataFrame, docs: DataFrame, id_col: str,
+                   text_col: str, shingle_n: int,
+                   jaccard_threshold: float) -> DataFrame:
+    """Candidate pairs (id_a, id_b) -> (id_a, id_b, jaccard) with exact
+    Jaccard >= threshold on shingle sets (JVM array_intersect/array_union).
+    ``docs`` holds each candidate doc once (see ``candidate_docs``)."""
+    sh = docs.select(F.col(id_col), shingle_hashes(text_col, shingle_n).alias("sh"))
+    cand = (
+        pair_ids.join(sh.withColumnsRenamed({id_col: "id_a", "sh": "sh_a"}), "id_a")
+        .join(sh.withColumnsRenamed({id_col: "id_b", "sh": "sh_b"}), "id_b")
+    )
+    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    union = F.size(F.array_union("sh_a", "sh_b"))
+    return (
+        cand.withColumn("jaccard", inter / F.greatest(union, F.lit(1)))
+        .where(F.col("jaccard") >= jaccard_threshold)
+        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
+    )
+
+
+def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
+                      id_col: str = "doc_id", num_hashes: int = 64,
+                      bands: int = 16, shingle_n: int = 5,
+                      jaccard_threshold: float = 0.5,
+                      bucket_cap: int | None = 100_000) -> DataFrame:
+    """Near-duplicate pairs (id_a < id_b, jaccard >= threshold).
+
+    Candidates from LSH band-bucket self-join; exact Jaccard on shingle sets
+    (JVM array_intersect/array_union) refines. Only bucket-mates shuffle.
+    Zero-shingle (empty/whitespace) docs are excluded before banding — they
+    all share the sentinel signature and would form one quadratic bucket;
+    exact_dedup already pairs them. ``bucket_cap`` drops pathologically hot
+    buckets entirely (recall loss only for keys duplicated > cap times)."""
+    # band join carries ids only — the (large) shingle arrays are recomputed
+    # later for just the candidate docs, so the banded explode and the
+    # self-join never ship shingle sets
+    banded = lsh_band_keys(df, text_col, id_col, num_hashes, bands, shingle_n)
     banded = _cap_buckets(banded, ["band", "bh"], bucket_cap)
     # ids-only banded rows are O(n * bands) longs — persisting them keeps
     # the shingle+signature subtree from re-running for BOTH sides of the
@@ -185,29 +228,8 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     )
     # pair_ids feeds three consumers (two cand_ids legs + the refine join)
     pair_ids = pair_ids.persist(StorageLevel.MEMORY_AND_DISK)
-    # shingles for the refine are recomputed on the candidate docs only
-    # (candidates << corpus): a semi-join prune beats persisting every
-    # shingle set of the corpus across the whole job
-    cand_ids = (
-        pair_ids.select(F.col("id_a").alias(id_col))
-        .union(pair_ids.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
-    sh = (
-        df.join(cand_ids, id_col, "left_semi")
-        .select(F.col(id_col), shingle_hashes(text_col, shingle_n).alias("sh"))
-    )
-    cand = (
-        pair_ids.join(sh.withColumnsRenamed({id_col: "id_a", "sh": "sh_a"}), "id_a")
-        .join(sh.withColumnsRenamed({id_col: "id_b", "sh": "sh_b"}), "id_b")
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    return (
-        cand.withColumn("jaccard", inter / F.greatest(union, F.lit(1)))
-        .where(F.col("jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-    )
+    return jaccard_refine(pair_ids, candidate_docs(pair_ids, df, id_col),
+                          id_col, text_col, shingle_n, jaccard_threshold)
 
 
 def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",

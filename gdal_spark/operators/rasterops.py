@@ -1358,6 +1358,24 @@ def _neighbors_filter(a: np.ndarray, coefs: np.ndarray, size: int,
     return out
 
 
+def neighbor_coefs(kernel: str, size: int, method: str | None):
+    """(coefs, method) for a named kernel: the flattened size x size
+    coefficients and the combine method, which defaults to 'sum' for
+    zero-sum kernels else 'mean' (apps/gdalalg_raster_neighbors.cpp
+    :453-462); the 'equal' kernel is all-ones, 1/n^2 for mean (:489-499)."""
+    if (kernel, size) in _NEIGHBOR_KERNELS:
+        coefs = np.array(_NEIGHBOR_KERNELS[(kernel, size)], dtype=np.float64)
+    elif kernel == "equal":
+        coefs = np.ones(size * size, dtype=np.float64)
+    else:
+        raise ValueError(f"unknown kernel {kernel!r} at size {size}")
+    if method is None:
+        method = "sum" if coefs.sum() == 0.0 else "mean"
+    if kernel == "equal" and method == "mean":
+        coefs = coefs / (size * size)
+    return coefs, method
+
+
 def neighbors(images: DataFrame, method: str | None = None,
               size: int = 3, kernel: str = "equal",
               nodata: float | None = None) -> DataFrame:
@@ -1369,16 +1387,7 @@ def neighbors(images: DataFrame, method: str | None = None,
     'mean' (:453-462); the 'equal' kernel is all-ones (1/n^2 for mean,
     :489-499).  Map-only mapInPandas — at scale this is one pass over the
     corpus with no shuffle."""
-    if (kernel, size) in _NEIGHBOR_KERNELS:
-        coefs = np.array(_NEIGHBOR_KERNELS[(kernel, size)], dtype=np.float64)
-    elif kernel == "equal":
-        coefs = np.ones(size * size, dtype=np.float64)
-    else:
-        raise ValueError(f"unknown kernel {kernel!r} at size {size}")
-    if method is None:
-        method = "sum" if coefs.sum() == 0.0 else "mean"
-    if kernel == "equal" and method == "mean":
-        coefs = coefs / (size * size)
+    coefs, method = neighbor_coefs(kernel, size, method)
 
     def per_image(a, r):
         a = a[:, :, 0]
@@ -1446,6 +1455,28 @@ def _parse_reclass_mapping(mapping: str, nodata: float | None):
     return intervals, default, nan_value
 
 
+def reclassify_array(a: np.ndarray, intervals, default) -> np.ndarray:
+    """float64 band ``a`` through parsed ``_parse_reclass_mapping`` rules:
+    the first matching interval emits its destination (the source value
+    for PASS_THROUGH), unmatched values take DEFAULT, and with no DEFAULT
+    an unmatched value is an error (Reclassify's bFoundInterval=false
+    path)."""
+    res = np.empty_like(a)
+    matched = np.zeros(a.shape, dtype=bool)
+    for lo, hi, dst in intervals:
+        sel = (~matched) & (a >= lo) & (a <= hi)
+        res[sel] = a[sel] if dst is None else dst
+        matched |= sel
+    if default is not None:
+        dst = default[1]
+        res[~matched] = (a[~matched] if dst is None else dst)
+    elif not matched.all():
+        bad = float(a[~matched].flat[0])
+        raise ValueError(
+            f"Encountered value {bad} with no specified mapping")
+    return res
+
+
 def reclassify(images: DataFrame, mapping: str,
                nodata: float | None = None) -> DataFrame:
     """gdal raster reclassify (apps/gdalalg_raster_reclassify.cpp +
@@ -1458,20 +1489,8 @@ def reclassify(images: DataFrame, mapping: str,
     intervals, default, _ = _parse_reclass_mapping(mapping, nodata)
 
     def per_image(a, r):
-        a = a[:, :, 0].astype(np.float64)
-        res = np.empty_like(a)
-        matched = np.zeros(a.shape, dtype=bool)
-        for lo, hi, dst in intervals:
-            sel = (~matched) & (a >= lo) & (a <= hi)
-            res[sel] = a[sel] if dst is None else dst
-            matched |= sel
-        if default is not None:
-            dst = default[1]
-            res[~matched] = (a[~matched] if dst is None else dst)
-        elif not matched.all():
-            bad = float(a[~matched].flat[0])
-            raise ValueError(
-                f"Encountered value {bad} with no specified mapping")
+        res = reclassify_array(a[:, :, 0].astype(np.float64), intervals,
+                               default)
         yield dict(
             image_id=r.image_id,
             cs=checksum_image(res)[0],

@@ -1,10 +1,10 @@
 """Brute-force nearest-neighbor oracle.
 
 Mirrors the exhaustive min-distance branch of the reference's
-``GDALGridNearestNeighbor`` (/root/reference/alg/gdalgrid.cpp:905-1014):
+``GDALGridNearestNeighbor`` (alg/gdalgrid.cpp:905-1014 in the reference):
 the quadtree + radius-doubling search there is an accelerator whose result
 must equal the plain argmin over all candidates — that equality is exactly
-what our tests assert about the Spark ring-expansion kNN operator.
+what our tests assert about the Spark cell-map kNN operator.
 """
 
 from __future__ import annotations

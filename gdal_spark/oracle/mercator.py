@@ -213,9 +213,8 @@ def cell_zxy(cell):
 
 def k_ring_offsets(k):
     """Offsets (dx, dy) of the square ring at Chebyshev distance exactly k
-    (k=0 -> just (0,0)). The expanding-ring kNN gather doubles k until a
-    candidate is found, mirroring the reference's quadtree radius-doubling
-    search (/root/reference/alg/gdalgrid.cpp:905-982)."""
+    (k=0 -> just (0,0)): the cells one radius step of the reference's
+    quadtree nearest search adds (alg/gdalgrid.cpp:905-982)."""
     if k == 0:
         return [(0, 0)]
     offs = []

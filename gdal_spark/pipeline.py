@@ -89,7 +89,8 @@ def _apply_step(name: str, args: dict, a: np.ndarray, ctx: dict
     updated when a step changes the grid."""
     from .oracle import dem as DEM
     from .operators.rasterops import (_neighbors_filter, _parse_reclass_mapping,
-                                      _resample_any)
+                                      _resample_any, neighbor_coefs,
+                                      reclassify_array)
 
     if name == "resize":
         w, h = int(args["w"]), int(args["h"])
@@ -104,40 +105,14 @@ def _apply_step(name: str, args: dict, a: np.ndarray, ctx: dict
         return (a - smin) * (dmax - dmin) / den + dmin
     if name == "reclassify":
         intervals, default, _ = _parse_reclass_mapping(
-            args["mapping"], _f(args, "nodata", None) if "nodata" in args
-            else None)
-        v = a[:, :, 0]
-        res = np.empty_like(v)
-        matched = np.zeros(v.shape, dtype=bool)
-        for lo, hi, dst in intervals:
-            sel = (~matched) & (v >= lo) & (v <= hi)
-            res[sel] = v[sel] if dst is None else dst
-            matched |= sel
-        if default is not None:
-            dst = default[1]
-            res[~matched] = v[~matched] if dst is None else dst
-        elif not matched.all():
-            raise ValueError("value with no specified mapping")
-        return res[:, :, None]
+            args["mapping"], _f(args, "nodata", None))
+        return reclassify_array(a[:, :, 0], intervals, default)[:, :, None]
     if name == "neighbors":
-        from .operators.rasterops import _NEIGHBOR_KERNELS
-
         size = int(args.get("size", 3))
-        kernel = args.get("kernel", "equal")
-        if (kernel, size) in _NEIGHBOR_KERNELS:
-            coefs = np.array(_NEIGHBOR_KERNELS[(kernel, size)],
-                             dtype=np.float64)
-        elif kernel == "equal":
-            coefs = np.ones(size * size, dtype=np.float64)
-        else:
-            raise ValueError(f"unknown kernel {kernel!r}")
-        method = args.get("method",
-                          "sum" if coefs.sum() == 0.0 else "mean")
-        if kernel == "equal" and method == "mean":
-            coefs = coefs / (size * size)
+        coefs, method = neighbor_coefs(args.get("kernel", "equal"), size,
+                                       args.get("method"))
         return _neighbors_filter(a[:, :, 0], coefs, size, method,
-                                 _f(args, "nodata", None)
-                                 if "nodata" in args else None)[:, :, None]
+                                 _f(args, "nodata", None))[:, :, None]
     if name in _DEM_OPS:
         v = a[:, :, 0]
         res = ctx["gsd_m"]

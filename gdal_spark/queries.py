@@ -192,8 +192,8 @@ FROM pairs WHERE rank <= 2
 
 @q("knn_nearest_supplier", _KNN_SQL)
 def knn_nearest_supplier(spark, sf_dir):
-    """2 nearest suppliers per customer point via the expanding-ring cell
-    search (alg/gdalgrid.cpp:905-982 radius doubling); oracle = brute force.
+    """2 nearest suppliers per customer point via ``knn_join``
+    (alg/gdalgrid.cpp:905-982 nearest search); oracle = brute force.
     Distance reported in hectometers (floor) to absorb libm ulp skew."""
     from .operators.knn import knn_join
 

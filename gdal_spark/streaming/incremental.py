@@ -290,38 +290,21 @@ def incremental_near_dup_pairs(spark: SparkSession, source_dir: str,
     """Incremental MinHash-LSH pair mining (foreachBatch): each
     micro-batch's band keys join against the ACCUMULATED band store (ids
     only — the corpus's shingle sets are recomputed just for the
-    candidate ids, exactly like the batch operator's semi-join refine),
+    candidate ids by the batch operator's own `candidate_docs` and
+    `jaccard_refine`),
     so per-batch cost scales with the batch and its colliding buckets,
     never with corpus size.  Emits (id_a, id_b, jaccard) pairs touching
     the batch to ``pairs_dir`` and appends the batch to ``corpus_dir`` +
     its bands to ``bands_dir``.  Exactly-once note: foreachBatch is
     at-least-once on retry; the id-ordered pair key makes downstream
     dedup trivial (dropDuplicates on (id_a, id_b))."""
-    from ..functions.text import shingle_hashes
-    from ..operators.dedup import minhash_signatures
-
-    rows = num_hashes // bands
-
-    def banded_of(df):
-        sigs = minhash_signatures(df, "text", "doc_id", num_hashes,
-                                  shingle_n)
-        return sigs.where(F.size("sh") > 0).select(
-            F.col("doc_id"),
-            F.explode(F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda i: F.struct(
-                    i.alias("band"),
-                    F.xxhash64(F.concat_ws(
-                        ",", F.slice(F.col("sig"), i * rows + 1, rows))
-                    ).alias("bh"),
-                ),
-            )).alias("bk"),
-        ).select("doc_id", F.col("bk.band").alias("band"),
-                 F.col("bk.bh").alias("bh"))
+    from ..operators.dedup import (candidate_docs, jaccard_refine,
+                                   lsh_band_keys)
 
     def process(batch_df, batch_id):
         batch_df = batch_df.persist()
-        bands_b = banded_of(batch_df).persist()
+        bands_b = lsh_band_keys(batch_df, "text", "doc_id", num_hashes,
+                                bands, shingle_n).persist()
         try:
             prior = spark.read.parquet(bands_dir)
         except Exception:
@@ -338,32 +321,16 @@ def incremental_near_dup_pairs(spark: SparkSession, source_dir: str,
             .dropDuplicates(["id_a", "id_b"])
             .persist()
         )
-        cand_ids = (pair_ids.select(F.col("id_a").alias("doc_id"))
-                    .union(pair_ids.select(F.col("id_b").alias("doc_id")))
-                    .distinct())
         try:
             corpus = spark.read.parquet(corpus_dir)
             texts = batch_df.select("doc_id", "text").unionByName(
                 corpus.select("doc_id", "text"))
         except Exception:
             texts = batch_df.select("doc_id", "text")
-        sh = (texts.join(cand_ids, "doc_id", "left_semi")
-              .dropDuplicates(["doc_id"])
-              .select("doc_id", shingle_hashes("text", shingle_n).alias("sh")))
-        cand = (
-            pair_ids
-            .join(sh.withColumnsRenamed({"doc_id": "id_a", "sh": "sh_a"}),
-                  "id_a")
-            .join(sh.withColumnsRenamed({"doc_id": "id_b", "sh": "sh_b"}),
-                  "id_b")
-        )
-        inter = F.size(F.array_intersect("sh_a", "sh_b"))
-        union = F.size(F.array_union("sh_a", "sh_b"))
-        pairs = (cand.withColumn("jaccard",
-                                 inter / F.greatest(union, F.lit(1)))
-                 .where(F.col("jaccard") >= jaccard_threshold)
-                 .select("id_a", "id_b",
-                         F.round("jaccard", 6).alias("jaccard")))
+        # a re-read micro-batch can hold an id the corpus already has
+        docs = candidate_docs(pair_ids, texts, "doc_id").dropDuplicates(["doc_id"])
+        pairs = jaccard_refine(pair_ids, docs, "doc_id", "text", shingle_n,
+                               jaccard_threshold)
         pairs.write.mode("append").parquet(pairs_dir)
         bands_b.write.mode("append").parquet(bands_dir)
         batch_df.write.mode("append").parquet(corpus_dir)
