@@ -47,7 +47,6 @@ _T_TILEWIDTH = 322
 _T_TILELENGTH = 323
 _T_TILEOFFSETS = 324
 _T_TILEBYTECOUNTS = 325
-_T_SAMPLEFORMAT = 339
 _T_MODELPIXELSCALE = 33550
 _T_MODELTIEPOINT = 33922
 _T_GEOKEYDIR = 34735

@@ -5,14 +5,19 @@ precision — aaigriddataset.cpp:1346-1352) plus optional
 ``NODATA_value``, then space-separated rows top-down.
 
 Unlike the SQLite containers, each image is its OWN file, so the sink
-writes executor-side in parallel (foreachPartition, like the tile
-directory) — one .asc per image under the output directory.
+writes executor-side in parallel (``io.files.write_images``) — one .asc
+per image under the output directory.
 """
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 from pyspark.sql import DataFrame
+
+from ..oracle.tiling import geotransform_3857
+from .files import read_files, write_images
 
 
 def ascii_grid_bytes(band: np.ndarray, gt, nodata: float | None = None
@@ -60,55 +65,33 @@ def parse_ascii_grid(data: bytes):
 
 def write_ascii_grids(images: DataFrame, out_dir: str, band: int = 0,
                       nodata: float | None = None) -> int:
-    """One ``{image_id}.asc`` per image, written executor-side (parallel
-    across the corpus — the per-image-file analogue of the tile
-    directory sink). Returns files written."""
-    import os
+    """One ``{image_id}.asc`` per image, written executor-side by
+    ``io.files.write_images`` (parallel across the corpus). Returns images
+    written."""
+    def per_image(px, r):
+        a = px[:, :, band]
+        gt = geotransform_3857(r.lon, r.lat, a.shape[1], a.shape[0], r.gsd_m)
+        return [(f"{r.image_id}.asc", ascii_grid_bytes(a, gt, nodata))]
 
-    from ..codecs.registry import decode
-    from ..oracle.tiling import geotransform_3857
-
-    os.makedirs(out_dir, exist_ok=True)
-    acc = images.sparkSession.sparkContext.accumulator(0)
-
-    def write_part(rows):
-        for r in rows:
-            a = decode(bytes(r["bytes"]))[:, :, band]
-            gt = geotransform_3857(r["lon"], r["lat"], a.shape[1],
-                                   a.shape[0], r["gsd_m"])
-            blob = ascii_grid_bytes(a, gt, nodata)
-            tmp = os.path.join(out_dir, f".{r['image_id']}.asc.tmp")
-            with open(tmp, "wb") as fh:
-                fh.write(blob)
-            os.replace(tmp, os.path.join(out_dir, f"{r['image_id']}.asc"))
-            acc.add(1)
-
-    images.select("image_id", "bytes", "lon", "lat", "gsd_m"
-                  ).foreachPartition(write_part)
-    return acc.value
+    return write_images(images, out_dir, per_image)
 
 
 def read_ascii_grids(spark, in_dir: str):
     """Read a directory of .asc files back to (image_id, band float rows,
     gt) — executor-parallel, one task per file batch."""
-    import os
-
     files = sorted(
         os.path.join(in_dir, f) for f in os.listdir(in_dir)
         if f.endswith(".asc"))
 
     def load(paths):
-        import pandas as pd
-
         for pth in paths:
             with open(pth, "rb") as fh:
-                a, gt, nd = parse_ascii_grid(fh.read())
+                a, gt, _ = parse_ascii_grid(fh.read())
             yield (os.path.basename(pth)[:-4], a.ravel().tolist(),
                    int(a.shape[1]), int(a.shape[0]),
                    [float(x) for x in gt])
 
-    rdd = spark.sparkContext.parallelize(files, max(1, min(len(files), 64)))
-    return spark.createDataFrame(
-        rdd.mapPartitions(lambda it: load(list(it))),
+    return read_files(
+        spark, files, load,
         "image_id string, values array<double>, w int, h int, "
         "gt array<double>")

@@ -6,10 +6,10 @@ per-column encoding/geometry_types/bbox) that makes the file
 self-describing to any GeoParquet reader.
 
 Writes are executor-parallel: each partition writes its own
-``part-NNNNN.parquet`` via pyarrow with a footer whose bbox covers that
-file's rows (the spec's bbox is per-file, which is exactly what row-group
-pruning wants — GDAL's reader uses it the same way,
-ogrparquetlayer.cpp:333-343).
+``part-NNNNN.parquet`` via pyarrow (atomically, ``io.files.write_file``)
+with a footer whose bbox covers that file's rows (the spec's bbox is
+per-file, which is exactly what row-group pruning wants — GDAL's reader
+uses it the same way, ogrparquetlayer.cpp:333-343).
 """
 
 from __future__ import annotations
@@ -44,47 +44,10 @@ def _geo_meta(primary: str, geometry_types: list[str], bbox) -> bytes:
 
 def write_geoparquet(features: DataFrame, out_dir: str,
                      geometry_col: str = "wkb") -> int:
-    """Write a GeoParquet dataset: one part file per partition, each with
-    the spec's ``geo`` footer metadata (per-file bbox + geometry types
-    derived from that file's rows). Returns files written."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from ..oracle import geom as G
-
-    os.makedirs(out_dir, exist_ok=True)
-    cols = [c for c, _ in features.dtypes]
-    acc = features.sparkSession.sparkContext.accumulator(0)
-
-    def write_part(pid, rows):
-        buf = list(rows)
-        if not buf:
-            return iter(())
-        types, bbox = set(), [float("inf"), float("inf"),
-                              float("-inf"), float("-inf")]
-        for r in buf:
-            g = G.parse_wkb(bytes(r[geometry_col]))
-            types.add(_TYPE_NAMES[g[0]])
-            b = G.bbox(g)
-            bbox = [min(bbox[0], b[0]), min(bbox[1], b[1]),
-                    max(bbox[2], b[2]), max(bbox[3], b[3])]
-        arrays, names = [], []
-        for c in cols:
-            name = "geometry" if c == geometry_col else c
-            vals = [bytes(r[c]) if c == geometry_col else r[c] for r in buf]
-            arrays.append(pa.array(vals))
-            names.append(name)
-        table = pa.table(dict(zip(names, arrays)))
-        table = table.replace_schema_metadata(
-            {b"geo": _geo_meta("geometry", sorted(types), bbox)})
-        tmp = os.path.join(out_dir, f".part-{pid:05d}.parquet.tmp")
-        pq.write_table(table, tmp)
-        os.replace(tmp, os.path.join(out_dir, f"part-{pid:05d}.parquet"))
-        acc.add(1)
-        return iter(())
-
-    features.rdd.mapPartitionsWithIndex(write_part).count()
-    return acc.value
+    """Write a GeoParquet dataset: one part file per non-empty partition,
+    each with the spec's ``geo`` footer metadata (per-file bbox + geometry
+    types derived from that file's rows). Returns files written."""
+    return write_geoparquet_partitioned(features, out_dir, [], geometry_col)
 
 
 def read_geoparquet(spark, in_dir: str):
@@ -114,38 +77,36 @@ def write_geoparquet_partitioned(features: DataFrame, out_dir: str,
     """gdal vector partition (apps/gdalalg_vector_partition.cpp): split a
     feature layer into one dataset per distinct value of ``by`` (a field
     name or list of them), written as hive-style ``field=value/``
-    subdirectories each holding a valid GeoParquet dataset.
+    subdirectories each holding a valid GeoParquet dataset. With no key
+    (``by=[]``) this is ``write_geoparquet``: the part files go straight
+    into ``out_dir``, one per input partition, with no repartition.
 
     Shape at scale: ONE repartition on the partition key(s) routes every
     feature to the executor that owns its directory; each task then
-    writes its group files with the same footer machinery as
-    write_geoparquet — no driver collect, no per-group job. Returns
-    total part files written."""
-    keys = [by] if isinstance(by, str) else list(by)
-    for k in keys:
-        if k == geometry_col:
-            raise ValueError("cannot partition by the geometry column")
-
-    def _dirname(row):
-        return "/".join(f"{k}={row[k]}" for k in keys)
-
-    # group rows by key inside each task after a key-hash repartition:
-    # every (k1, k2, ...) combination lands in exactly one task
-    grouped = features.repartition(*[features[k] for k in keys])
-
+    writes its group files (``io.files.write_file``) — no driver collect,
+    no per-group job. Returns total part files written, counted by the
+    write job itself."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from ..oracle import geom as G
+    from .files import write_file
 
-    cols = [c for c, _ in features.dtypes]
-    data_cols = [c for c in cols if c not in keys]
-    acc = features.sparkSession.sparkContext.accumulator(0)
+    keys = [by] if isinstance(by, str) else list(by)
+    for k in keys:
+        if k == geometry_col:
+            raise ValueError("cannot partition by the geometry column")
+    data_cols = [c for c in features.columns if c not in keys]
+    # group rows by key inside each task after a key-hash repartition:
+    # every (k1, k2, ...) combination lands in exactly one task
+    grouped = features.repartition(*keys) if keys else features
+    os.makedirs(out_dir, exist_ok=True)
 
     def write_part(pid, rows):
         by_dir: dict = {}
         for r in rows:
-            by_dir.setdefault(_dirname(r), []).append(r)
+            d = "/".join(f"{k}={r[k]}" for k in keys)
+            by_dir.setdefault(d, []).append(r)
         for d, buf in by_dir.items():
             types, bbox = set(), [float("inf"), float("inf"),
                                   float("-inf"), float("-inf")]
@@ -165,13 +126,10 @@ def write_geoparquet_partitioned(features: DataFrame, out_dir: str,
             table = pa.table(dict(zip(names, arrays)))
             table = table.replace_schema_metadata(
                 {b"geo": _geo_meta("geometry", sorted(types), bbox)})
-            subdir = os.path.join(out_dir, d)
-            os.makedirs(subdir, exist_ok=True)
-            tmp = os.path.join(subdir, f".part-{pid:05d}.parquet.tmp")
-            pq.write_table(table, tmp)
-            os.replace(tmp, os.path.join(subdir, f"part-{pid:05d}.parquet"))
-            acc.add(1)
-        return iter(())
+            sink = pa.BufferOutputStream()
+            pq.write_table(table, sink)
+            write_file(os.path.join(out_dir, d, f"part-{pid:05d}.parquet"),
+                       sink.getvalue())
+            yield d
 
-    grouped.rdd.mapPartitionsWithIndex(write_part).count()
-    return acc.value
+    return grouped.rdd.mapPartitionsWithIndex(write_part).count()

@@ -4,13 +4,19 @@ interleave) and ``frmts/xyz/xyzdataset.cpp`` (one ``x y z`` line per cell
 at georeferenced centers, x fastest, constant spacing).
 
 Per-image files like the AAIGrid sink: written executor-side in parallel
-(foreachPartition), read back executor-parallel.
+(``io.files.write_images``), read back executor-parallel
+(``io.files.read_files``).
 """
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 from pyspark.sql import DataFrame
+
+from ..oracle.tiling import geotransform_3857
+from .files import read_files, write_images
 
 # ---------------------------------------------------------------------------
 # ENVI
@@ -86,43 +92,22 @@ def parse_envi(hdr_text: str, raw: bytes):
 def write_envi(images: DataFrame, out_dir: str, interleave: str = "bsq"
                ) -> int:
     """One ``{image_id}.img`` + ``{image_id}.hdr`` per image, written
-    executor-side. Returns files written (from an at-least-once
-    accumulator; the directory listing is the exact count)."""
-    import os
+    executor-side by ``io.files.write_images``. Returns images written
+    (two files each)."""
+    def per_image(px, r):
+        gt = geotransform_3857(r.lon, r.lat, px.shape[1], px.shape[0],
+                               r.gsd_m)
+        hdr = envi_header(px.shape[1], px.shape[0],
+                          1 if px.ndim == 2 else px.shape[2], gt, interleave)
+        return [(f"{r.image_id}.img", encode_envi(px, interleave)),
+                (f"{r.image_id}.hdr", hdr.encode("ascii"))]
 
-    from ..codecs.registry import decode
-    from ..oracle.tiling import geotransform_3857
-
-    os.makedirs(out_dir, exist_ok=True)
-    acc = images.sparkSession.sparkContext.accumulator(0)
-
-    def write_part(rows):
-        for r in rows:
-            px = decode(bytes(r["bytes"]))
-            gt = geotransform_3857(r["lon"], r["lat"], px.shape[1],
-                                   px.shape[0], r["gsd_m"])
-            hdr = envi_header(px.shape[1], px.shape[0],
-                              1 if px.ndim == 2 else px.shape[2], gt,
-                              interleave)
-            base = os.path.join(out_dir, str(r["image_id"]))
-            for suffix, blob in ((".img", encode_envi(px, interleave)),
-                                 (".hdr", hdr.encode("ascii"))):
-                tmp = base + suffix + ".tmp"
-                with open(tmp, "wb") as fh:
-                    fh.write(blob)
-                os.replace(tmp, base + suffix)
-            acc.add(1)
-
-    images.select("image_id", "bytes", "lon", "lat", "gsd_m"
-                  ).foreachPartition(write_part)
-    return acc.value
+    return write_images(images, out_dir, per_image)
 
 
 def read_envi(spark, in_dir: str):
     """Directory of .img/.hdr pairs -> (image_id, PNG-re-encoded bytes,
     w, h, gt) rows, executor-parallel."""
-    import os
-
     stems = sorted(f[:-4] for f in os.listdir(in_dir) if f.endswith(".img"))
 
     def load(batch):
@@ -138,9 +123,8 @@ def read_envi(spark, in_dir: str):
             yield (stem, bytearray(encode_png(px)), int(px.shape[1]),
                    int(px.shape[0]), [float(x) for x in gt])
 
-    rdd = spark.sparkContext.parallelize(stems, max(1, min(len(stems), 64)))
-    return spark.createDataFrame(
-        rdd.mapPartitions(lambda it: load(list(it))),
+    return read_files(
+        spark, stems, load,
         "image_id string, png binary, w int, h int, gt array<double>")
 
 
@@ -184,35 +168,18 @@ def parse_xyz(data: bytes):
 
 
 def write_xyz(images: DataFrame, out_dir: str, band: int = 0) -> int:
-    """One ``{image_id}.xyz`` per image, executor-side."""
-    import os
+    """One ``{image_id}.xyz`` per image, executor-side. Returns images
+    written."""
+    def per_image(px, r):
+        a = px[:, :, band]
+        gt = geotransform_3857(r.lon, r.lat, a.shape[1], a.shape[0], r.gsd_m)
+        return [(f"{r.image_id}.xyz", xyz_bytes(a, gt))]
 
-    from ..codecs.registry import decode
-    from ..oracle.tiling import geotransform_3857
-
-    os.makedirs(out_dir, exist_ok=True)
-    acc = images.sparkSession.sparkContext.accumulator(0)
-
-    def write_part(rows):
-        for r in rows:
-            a = decode(bytes(r["bytes"]))[:, :, band]
-            gt = geotransform_3857(r["lon"], r["lat"], a.shape[1],
-                                   a.shape[0], r["gsd_m"])
-            tmp = os.path.join(out_dir, f".{r['image_id']}.xyz.tmp")
-            with open(tmp, "wb") as fh:
-                fh.write(xyz_bytes(a, gt))
-            os.replace(tmp, os.path.join(out_dir, f"{r['image_id']}.xyz"))
-            acc.add(1)
-
-    images.select("image_id", "bytes", "lon", "lat", "gsd_m"
-                  ).foreachPartition(write_part)
-    return acc.value
+    return write_images(images, out_dir, per_image)
 
 
 def read_xyz(spark, in_dir: str):
     """Directory of .xyz files -> (image_id, values, w, h, gt) rows."""
-    import os
-
     files = sorted(
         os.path.join(in_dir, f) for f in os.listdir(in_dir)
         if f.endswith(".xyz"))
@@ -225,8 +192,7 @@ def read_xyz(spark, in_dir: str):
                    int(a.shape[1]), int(a.shape[0]),
                    [float(x) for x in gt])
 
-    rdd = spark.sparkContext.parallelize(files, max(1, min(len(files), 64)))
-    return spark.createDataFrame(
-        rdd.mapPartitions(lambda it: load(list(it))),
+    return read_files(
+        spark, files, load,
         "image_id string, values array<double>, w int, h int, "
         "gt array<double>")

@@ -675,7 +675,6 @@ def check_coverage_gaps(features: DataFrame, minx: float, maxy: float,
     from ..oracle import geom as G
     from ..oracle.rasterize import (label_components, proximity,
                                     rasterize_rings)
-    from pyspark.sql.types import ArrayType, DoubleType
 
     W = float(max_gap_width)
     halo = int(math.ceil((W / 2.0) / cell)) + 2
@@ -684,23 +683,18 @@ def check_coverage_gaps(features: DataFrame, minx: float, maxy: float,
     nty = (ny + tile_px - 1) // tile_px
     hw = halo * float(cell)
 
-    @F.pandas_udf(ArrayType(DoubleType()))
-    def wkb_bbox(wkbs: pd.Series) -> pd.Series:
-        return wkbs.map(lambda b: list(G.bbox(G.parse_wkb(bytes(b)))))
-
-    feats = features.select(
+    feats = wkb_bounds(features.select(
         F.col(fid_col).alias("fid"), F.col(wkb_col).alias("wkb"),
-        wkb_bbox(F.col(wkb_col)).alias("bb"),
-    ).select(
+    )).select(
         "fid", "wkb",
         F.explode(F.sequence(
-            F.greatest(F.floor((F.element_at("bb", 1) - F.lit(hw)
+            F.greatest(F.floor((F.col("minx") - F.lit(hw)
                                 - F.lit(minx)) / F.lit(span)), F.lit(0)),
-            F.least(F.floor((F.element_at("bb", 3) + F.lit(hw)
+            F.least(F.floor((F.col("maxx") + F.lit(hw)
                              - F.lit(minx)) / F.lit(span)),
                     F.lit(ntx - 1)),
         )).alias("tx"),
-        F.element_at("bb", 2).alias("by0"), F.element_at("bb", 4).alias("by1"),
+        F.col("miny").alias("by0"), F.col("maxy").alias("by1"),
     ).select(
         "fid", "wkb", "tx",
         F.explode(F.sequence(

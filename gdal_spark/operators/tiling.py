@@ -29,7 +29,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
-from ..codecs.registry import decode, encode
+from ..codecs.registry import encode
 from ..oracle.checksum import checksum_image
 from ..oracle.tiling import TILE, build_pyramid, render_image_tiles
 from .imagemap import map_images
@@ -113,44 +113,32 @@ def write_cog_directory(images: DataFrame, root: str,
     ``{root}/{image_id}.tif`` — actual COG containers (tiled TIFF, internal
     2x overviews, IFDs at the head, overview-first tile layout; see
     codecs/cog.py, re-deriving frmts/gtiff/cogdriver.cpp rules), written
-    executor-side with the file count from an accumulator."""
-    import os
-
+    executor-side by ``io.files.write_images``. Returns images written."""
     from ..codecs.cog import encode_cog
+    from ..io.files import write_images
     from ..oracle.tiling import geotransform_3857
 
-    acc = images.sparkSession.sparkContext.accumulator(0)
-
-    def write_part(rows):
-        os.makedirs(root, exist_ok=True)
-        for r in rows:
-            a = decode(bytes(r["bytes"]))
-            gt = geotransform_3857(
-                r["lon"], r["lat"], a.shape[1], a.shape[0], r["gsd_m"]
-            )
-            blob = encode_cog(a, gt, compression)
-            with open(os.path.join(root, f"{r['image_id']}.tif"), "wb") as f:
-                f.write(blob)
-            acc.add(1)
-
-    images.select(*_IMAGE_COLS).foreachPartition(write_part)
-    return acc.value
+    return write_images(images, root, lambda a, r: [(
+        f"{r.image_id}.tif",
+        encode_cog(a, geotransform_3857(r.lon, r.lat, a.shape[1], a.shape[0],
+                                        r.gsd_m), compression))])
 
 
 def write_tile_directory(tiles: DataFrame, root: str, scheme: str = "xyz",
                          ext: str = "png", lineage: bool = True) -> int:
     """gdal2tiles-compatible ``{root}/{z}/{x}/{y}.png`` directory sink
     (gdal2tiles.py:1278-1434 base-tile writer; XYZ vs TMS y per
-    getYTile/gdal2tiles.py:512-515). Executor-side foreachPartition writes —
-    the driver never sees tile bytes. Returns the number of FILES written.
+    getYTile/gdal2tiles.py:512-515). Executor-side writes, each tile
+    atomic (``io.files.write_file``) — the driver never sees tile bytes.
+    Returns the number of FILES this pass wrote, summed from the write
+    job's per-task counts (successful attempts only, so a retried task is
+    counted once).
 
     Distinct images sharing a (z, x, y) key are reduced deterministically
     (lowest image_id wins) before writing — without this, collisions
     overwrite each other in task order, nondeterministically. Callers who
     want blended tiles should mosaic first (operators.rasterops.mosaic_tiles)
-    and pass the result here. With ``lineage=True`` the file count is the
-    sum of this pass's manifests; with ``lineage=False`` it comes from a
-    LongAccumulator inside the write pass. Neither runs a count() job.
+    and pass the result here.
 
     ``lineage=True`` (default) additionally writes one atomic JSON
     manifest per TASK PARTITION under ``{root}/_lineage/`` (partition id,
@@ -163,12 +151,15 @@ def write_tile_directory(tiles: DataFrame, root: str, scheme: str = "xyz",
     Manifests are GENERATION-scoped (``part-g000-00001.json``): each
     write pass into the same root gets the next generation index, so a
     resume run's manifests never clash with (or silently overwrite) an
-    earlier run's — the return value counts THIS pass only, while
-    ``_summary.json`` accumulates all generations (equal to the files on
-    disk whenever later passes are incremental, which is what --resume
-    guarantees by anti-joining existing keys)."""
+    earlier run's — the return value counts THIS pass only (equal to this
+    generation's manifest sum), while ``_summary.json`` accumulates all
+    generations (equal to the files on disk whenever later passes are
+    incremental, which is what --resume guarantees by anti-joining
+    existing keys)."""
     import json
     import os
+
+    from ..io.files import write_file
 
     if "image_id" in tiles.columns:
         one_per_key = (
@@ -177,22 +168,20 @@ def write_tile_directory(tiles: DataFrame, root: str, scheme: str = "xyz",
         )
     else:
         one_per_key = tiles.dropDuplicates(["z", "x", "y"])
-    acc = tiles.sparkSession.sparkContext.accumulator(0)
 
     # next generation index: scan once driver-side before the write pass
     # (legacy un-prefixed manifests count as generation 0)
     gen = 0
-    if lineage:
-        ldir0 = os.path.join(root, "_lineage")
-        if os.path.isdir(ldir0):
-            for name in os.listdir(ldir0):
-                if name.startswith("part-g") and name.endswith(".json"):
-                    try:
-                        gen = max(gen, int(name[6:9]) + 1)
-                    except ValueError:
-                        pass
-                elif name.startswith("part-") and name.endswith(".json"):
-                    gen = max(gen, 1)
+    ldir = os.path.join(root, "_lineage")
+    if lineage and os.path.isdir(ldir):
+        for name in os.listdir(ldir):
+            if name.startswith("part-g") and name.endswith(".json"):
+                try:
+                    gen = max(gen, int(name[6:9]) + 1)
+                except ValueError:
+                    pass
+            elif name.startswith("part-") and name.endswith(".json"):
+                gen = max(gen, 1)
 
     def write_part(rows):
         from pyspark import TaskContext
@@ -204,48 +193,31 @@ def write_tile_directory(tiles: DataFrame, root: str, scheme: str = "xyz",
             z, x, y = int(r["z"]), int(r["x"]), int(r["y"])
             if scheme == "xyz":
                 y = (1 << z) - 1 - y  # TMS -> XYZ
-            d = os.path.join(root, str(z), str(x))
-            os.makedirs(d, exist_ok=True)
             blob = bytes(r["tile"])
-            with open(os.path.join(d, f"{y}.{ext}"), "wb") as f:
-                f.write(blob)
-            acc.add(1)
+            write_file(os.path.join(root, str(z), str(x), f"{y}.{ext}"), blob)
             n += 1
             total += len(blob)
             zmin = z if zmin is None else min(zmin, z)
             zmax = z if zmax is None else max(zmax, z)
         if lineage and n:
-            tc = TaskContext.get()
-            pid = tc.partitionId() if tc is not None else -1
-            ldir = os.path.join(root, "_lineage")
-            os.makedirs(ldir, exist_ok=True)
-            base = f"part-g{gen:03d}-{pid:05d}.json"
-            tmp = os.path.join(ldir, "." + base + ".tmp")
-            with open(tmp, "w") as f:
-                json.dump({"partition": pid, "generation": gen, "n_tiles": n,
-                           "bytes": total, "zmin": zmin, "zmax": zmax}, f)
-            os.replace(tmp, os.path.join(ldir, base))
+            pid = TaskContext.get().partitionId()
+            write_file(
+                os.path.join(ldir, f"part-g{gen:03d}-{pid:05d}.json"),
+                json.dumps({"partition": pid, "generation": gen,
+                            "n_tiles": n, "bytes": total, "zmin": zmin,
+                            "zmax": zmax}).encode())
+        yield n
 
-    one_per_key.select("z", "x", "y", "tile").foreachPartition(write_part)
+    this_run = one_per_key.select("z", "x", "y", "tile").rdd.mapPartitions(
+        write_part).sum()
     if lineage:
-        # Totals come from the per-partition manifests (last-attempt-wins
-        # via os.replace), NOT the accumulators: accumulators double-count
-        # on task retries / speculative execution, so they could disagree
-        # with the manifests the resume path trusts.
         parts = read_tile_lineage(root)
-        n_tiles = sum(p["n_tiles"] for p in parts)
-        n_bytes = sum(p["bytes"] for p in parts)
-        this_run = sum(p["n_tiles"] for p in parts
-                       if p.get("generation", 0) == gen)
-        os.makedirs(os.path.join(root, "_lineage"), exist_ok=True)
-        tmp = os.path.join(root, "_lineage", "._summary.json.tmp")
-        with open(tmp, "w") as f:
-            json.dump({"n_tiles": n_tiles, "bytes": n_bytes,
-                       "n_partitions": len(parts), "generations": gen + 1,
-                       "scheme": scheme, "ext": ext}, f)
-        os.replace(tmp, os.path.join(root, "_lineage", "_summary.json"))
-        return this_run
-    return acc.value
+        write_file(os.path.join(ldir, "_summary.json"), json.dumps({
+            "n_tiles": sum(p["n_tiles"] for p in parts),
+            "bytes": sum(p["bytes"] for p in parts),
+            "n_partitions": len(parts), "generations": gen + 1,
+            "scheme": scheme, "ext": ext}).encode())
+    return this_run
 
 
 def read_tile_lineage(root: str) -> list[dict]:

@@ -171,14 +171,10 @@ def rasterize_layer(polys: DataFrame, minx: float, maxy: float, cell: float,
     ever materialized — at 10^12 scale the output is the sparse non-zero
     pixel set, partitioned by tile."""
     from pyspark.sql import functions as F
-    from pyspark.sql.types import ArrayType, DoubleType
 
     from ..oracle import geom as G
     from ..oracle.rasterize import rasterize_lines, rasterize_rings
-
-    @F.pandas_udf(ArrayType(DoubleType()))
-    def wkb_bbox(wkbs: pd.Series) -> pd.Series:
-        return wkbs.map(lambda b: list(G.bbox(G.parse_wkb(bytes(b)))))
+    from .layer_algebra import wkb_bounds
 
     bv = (F.col(attribute).cast("double") if attribute is not None
           else F.lit(float(burn)))
@@ -187,26 +183,26 @@ def rasterize_layer(polys: DataFrame, minx: float, maxy: float, cell: float,
     ntx = (nx + tile_px - 1) // tile_px
     nty = (ny + tile_px - 1) // tile_px
     span = float(cell) * tile_px
-    feats = polys.select(
+    feats = wkb_bounds(polys.select(
         F.col(fid_col).alias("fid"), F.col(wkb_col).alias("wkb"),
-        bv.alias("bv"), zs.alias("zs"), wkb_bbox(F.col(wkb_col)).alias("bb"),
-    ).where(
+        bv.alias("bv"), zs.alias("zs"),
+    )).where(
         # Drop features whose bbox misses the raster extent entirely;
         # without this, Spark's sequence(start, stop) with start > stop
         # yields a DESCENDING run of out-of-range tile indices.
-        (F.element_at("bb", 3) >= F.lit(minx))
-        & (F.element_at("bb", 1) <= F.lit(minx + nx * float(cell)))
-        & (F.element_at("bb", 4) >= F.lit(maxy - ny * float(cell)))
-        & (F.element_at("bb", 2) <= F.lit(maxy))
+        (F.col("maxx") >= F.lit(minx))
+        & (F.col("minx") <= F.lit(minx + nx * float(cell)))
+        & (F.col("maxy") >= F.lit(maxy - ny * float(cell)))
+        & (F.col("miny") <= F.lit(maxy))
     ).select(
         "fid", "wkb", "bv", "zs",
         F.explode(F.sequence(
-            F.greatest(F.floor((F.element_at("bb", 1) - F.lit(minx))
+            F.greatest(F.floor((F.col("minx") - F.lit(minx))
                                / F.lit(span)), F.lit(0)),
-            F.least(F.floor((F.element_at("bb", 3) - F.lit(minx))
+            F.least(F.floor((F.col("maxx") - F.lit(minx))
                             / F.lit(span)), F.lit(ntx - 1)),
         )).alias("tx"),
-        F.element_at("bb", 2).alias("by0"), F.element_at("bb", 4).alias("by1"),
+        F.col("miny").alias("by0"), F.col("maxy").alias("by1"),
     ).select(
         "fid", "wkb", "bv", "zs", "tx",
         F.explode(F.sequence(

@@ -209,22 +209,3 @@ def cell_zxy(cell):
     x = _compact(morton)
     y = _compact(morton >> 1)
     return zoom, x, y
-
-
-def k_ring_offsets(k):
-    """Offsets (dx, dy) of the square ring at Chebyshev distance exactly k
-    (k=0 -> just (0,0)): the cells one radius step of the reference's
-    quadtree nearest search adds (alg/gdalgrid.cpp:905-982)."""
-    if k == 0:
-        return [(0, 0)]
-    offs = []
-    for dx in range(-k, k + 1):
-        for dy in range(-k, k + 1):
-            if max(abs(dx), abs(dy)) == k:
-                offs.append((dx, dy))
-    return offs
-
-
-def k_disk_offsets(k):
-    """All offsets within Chebyshev distance <= k (the (2k+1)^2 disk)."""
-    return [(dx, dy) for dx in range(-k, k + 1) for dy in range(-k, k + 1)]

@@ -68,6 +68,8 @@ def existing_tile_keys(spark, root: str, ext: str = "png"):
     if not zx:
         return None
 
+    from gdal_spark.io.files import read_files
+
     suffix = "." + ext
 
     def list_leaf(rows):
@@ -76,8 +78,7 @@ def existing_tile_keys(spark, root: str, ext: str = "png"):
                 if fn.endswith(suffix) and fn[: -len(suffix)].isdigit():
                     yield (z, x, int(fn[: -len(suffix)]))
 
-    rdd = spark.sparkContext.parallelize(zx, max(1, min(len(zx), 64)))
-    return spark.createDataFrame(rdd.mapPartitions(list_leaf), "z int, x int, y int")
+    return read_files(spark, zx, list_leaf, "z int, x int, y int")
 
 
 def main(argv=None):
@@ -119,6 +120,7 @@ def main(argv=None):
     tiles = render_base_tiles(joined, args.method)
 
     skipped = 0
+    existing = None
     if args.resume:
         existing = existing_tile_keys(spark, args.out)
         if existing is not None and args.scheme == "xyz":
@@ -132,6 +134,8 @@ def main(argv=None):
             tiles = tiles.join(existing, ["z", "x", "y"], "left_anti")
 
     n_files = write_tile_directory(tiles, args.out, scheme=args.scheme)
+    if existing is not None:
+        existing.unpersist()
     wall = time.time() - t0
 
     n_images = imgs.select(F.count("*")).collect()[0][0]

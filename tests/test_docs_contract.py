@@ -58,17 +58,14 @@ def test_entry_module_contract():
 # Loops that decode outside ``map_images``, each for a reason that loop
 # cannot express: per-image groups of joined points, two blobs with an
 # equal-bytes short circuit, a second blob per row, one per-pixel frame
-# per image, the decode error as output, and the foreachPartition sinks.
+# per image, and the decode error as output.  The per-image file sinks
+# run through ``map_images`` (``io.files.write_images``).
 _OWN_DECODE_LOOPS = {
     ("operators/rasterops.py", "sample_at_points"),
     ("operators/rasterops.py", "raster_compare"),
     ("operators/rasterops.py", "raster_blend"),
     ("operators/rasterops.py", "raster_to_xyz"),
     ("operators/rasterops.py", "dataset_check"),
-    ("operators/tiling.py", "write_cog_directory"),
-    ("io/raw_formats.py", "write_envi"),
-    ("io/raw_formats.py", "write_xyz"),
-    ("io/ascii_grid.py", "write_ascii_grids"),
 }
 
 

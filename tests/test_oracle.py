@@ -95,12 +95,6 @@ class TestMercator:
         b = M.morton_encode(np.array([5]), np.array([7]))
         assert int(a[0]) >> 4 == int(b[0]) >> 4
 
-    def test_k_ring(self):
-        assert M.k_ring_offsets(0) == [(0, 0)]
-        assert len(M.k_ring_offsets(1)) == 8
-        assert len(M.k_ring_offsets(2)) == 16
-        assert len(M.k_disk_offsets(2)) == 25
-
 
 class TestPIP:
     def test_square(self):

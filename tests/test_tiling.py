@@ -200,6 +200,98 @@ def test_write_tile_directory(spark, images_sdf, tmp_path):
     assert summary["bytes"] == sum(m["bytes"] for m in manifests)
 
 
+def _stem(rel):
+    return rel.split(".")[0]
+
+
+# per sink: the unit its returned count counts, for a file path under the
+# root (None for files the count leaves out)
+_SINK_UNITS = {
+    "cog": _stem,
+    "envi": _stem,
+    "xyz": _stem,
+    "ascii_grid": _stem,
+    "geoparquet": lambda rel: rel,
+    "geoparquet_partitioned": lambda rel: rel,
+    "tile_directory": lambda rel: None if rel.startswith("_lineage") else rel,
+}
+
+
+def _run_sink(spark, sink, root):
+    from gdal_spark.fixtures.images import images_df
+    from gdal_spark.io import ascii_grid, geoparquet, raw_formats
+    from gdal_spark.operators import tiling
+    from gdal_spark.oracle import geom as G
+
+    imgs = images_df(spark, 3)
+    feats = spark.createDataFrame(pd.DataFrame(
+        [(i, "ab"[i % 2], G.to_wkb("point", (float(i), float(-i))))
+         for i in range(8)], columns=["fid", "grp", "wkb"]))
+    return {
+        "cog": lambda: tiling.write_cog_directory(imgs, root),
+        "envi": lambda: raw_formats.write_envi(imgs, root),
+        "xyz": lambda: raw_formats.write_xyz(imgs, root),
+        "ascii_grid": lambda: ascii_grid.write_ascii_grids(imgs, root),
+        "geoparquet": lambda: geoparquet.write_geoparquet(feats, root),
+        "geoparquet_partitioned": lambda: (
+            geoparquet.write_geoparquet_partitioned(feats, root, "grp")),
+        "tile_directory": lambda: tiling.write_tile_directory(
+            tiling.render_base_tiles(imgs), root),
+    }[sink]()
+
+
+@pytest.mark.parametrize("sink", list(_SINK_UNITS))
+def test_sink_contract(spark, tmp_path, sink):
+    """Every executor-side file sink returns the count of what it put on
+    disk (images, part files, or this pass's tiles), leaves no temp or dot
+    file behind, and a rerun into the same root rewrites the same bytes
+    with the same count."""
+    import hashlib
+    import os
+
+    from gdal_spark.operators.tiling import read_tile_lineage
+
+    root = str(tmp_path / sink)
+    unit = _SINK_UNITS[sink]
+
+    def snapshot():
+        out = {}
+        for d, _, names in os.walk(root):
+            for name in names:
+                rel = os.path.relpath(os.path.join(d, name), root)
+                assert not any(p.startswith(".") for p in rel.split(os.sep)), rel
+                assert not name.endswith(".tmp"), rel
+                if unit(rel) is not None:
+                    with open(os.path.join(d, name), "rb") as f:
+                        out[rel] = hashlib.sha256(f.read()).hexdigest()
+        return out
+
+    counts, files = [], []
+    for _ in range(2):
+        counts.append(_run_sink(spark, sink, root))
+        files.append(snapshot())
+        assert counts[-1] == len({unit(rel) for rel in files[-1]}) > 0
+    assert counts[0] == counts[1] and files[0] == files[1]
+    if sink in ("cog", "envi", "xyz", "ascii_grid"):
+        assert counts[0] == 3
+    if sink == "tile_directory":
+        by_gen = [sum(m["n_tiles"] for m in read_tile_lineage(root)
+                      if m["generation"] == g) for g in (0, 1)]
+        assert by_gen == counts
+
+
+def test_write_file_is_atomic(tmp_path):
+    """A failed write keeps the old file whole and removes its temp."""
+    from gdal_spark.io.files import write_file
+
+    path = str(tmp_path / "d" / "t.bin")
+    write_file(path, b"old")
+    with pytest.raises(TypeError):
+        write_file(path, object())
+    assert open(path, "rb").read() == b"old"
+    assert sorted(p.name for p in (tmp_path / "d").iterdir()) == ["t.bin"]
+
+
 class TestMBTiles:
     def test_roundtrip_and_schema(self, spark, tmp_path):
         import sqlite3
